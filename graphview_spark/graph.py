@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import os
 import re
+import weakref
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -216,6 +218,8 @@ class GraphDatabase:
         # a stale cache entry can never be returned — no invalidation
         # hooks needed.
         self._degree_cache: dict[tuple, tuple[tuple, tuple, DataFrame]] = {}
+        # checkpoint outputs (checkpoint_tables, delete_edges), held weakly
+        self._checkpointed: weakref.WeakSet[DataFrame] = weakref.WeakSet()
         # SELECT INTO targets (reference: plain SQL tables created by
         # SELECT INTO passthrough) — queryable in later statements
         self.derived_tables: dict[str, DataFrame] = {}
@@ -1000,33 +1004,8 @@ class GraphDatabase:
             srcs.extend(
                 self.edges[t.edges[n.lower()].qualified] for n in names
             )
-        if not srcs:
-            return self.spark.createDataFrame(
-                [], "src long, out_degree long"
-            ).withColumnRenamed("src", "GlobalNodeId")
         key = ("out", table_name.lower(), (edge_name or "").lower())
-        ids = tuple(id(df) for df in srcs)
-        hit = self._degree_cache.get(key)
-        if hit is not None and hit[0] == ids:
-            return hit[2]
-        out = srcs[0].select("src")
-        for p in srcs[1:]:
-            out = out.unionByName(p.select("src"))
-        # union BEFORE aggregating: one map-side-combined shuffle total,
-        # instead of one per edge type plus a re-aggregation; the
-        # materialized result is what every later query's degree join
-        # scans (bench: the view-degree union was recomputing this per
-        # query)
-        agg = (
-            out.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("out_degree"))
-            .withColumnRenamed("src", "GlobalNodeId")
-            .localCheckpoint(eager=True)
-        )
-        # the contributing DFs are pinned in the entry so their id()s
-        # can't be recycled by GC into a false cache hit
-        self._degree_cache[key] = (ids, tuple(srcs), agg)
-        return agg
+        return self._degree(key, srcs, "src", "out_degree")
 
     def in_degree(self, table_name: str) -> DataFrame:
         """(GlobalNodeId, in_degree) across ALL edge types that reference
@@ -1039,20 +1018,30 @@ class GraphDatabase:
             for e in nt.edges.values():
                 if e.sink_table.lower() in sinks:
                     srcs.append(self.edges[e.qualified])
+        return self._degree(("in", table_name.lower(), ""), srcs, "sink",
+                            "in_degree")
+
+    def _degree(self, key: tuple, srcs: list[DataFrame], end: str,
+                name: str) -> DataFrame:
+        """(GlobalNodeId, ``name``): the number of rows per ``end`` id
+        across the edge DataFrames ``srcs``, materialized and cached
+        under ``key`` for as long as ``srcs`` are the same objects."""
         if not srcs:
-            return self.spark.createDataFrame([], "GlobalNodeId long, in_degree long")
-        key = ("in", table_name.lower(), "")
+            return self.spark.createDataFrame([], f"GlobalNodeId long, {name} long")
         ids = tuple(id(df) for df in srcs)
         hit = self._degree_cache.get(key)
         if hit is not None and hit[0] == ids:
             return hit[2]
-        out = srcs[0].select("sink")
-        for p in srcs[1:]:
-            out = out.unionByName(p.select("sink"))
+        # union BEFORE aggregating: one map-side-combined shuffle total,
+        # instead of one per edge type plus a re-aggregation; the
+        # materialized result is what every later query's degree join
+        # scans (bench: the view-degree union was recomputing this per
+        # query)
         agg = (
-            out.groupBy("sink")
-            .agg(F.count(F.lit(1)).alias("in_degree"))
-            .withColumnRenamed("sink", "GlobalNodeId")
+            reduce(DataFrame.unionByName, [p.select(end) for p in srcs])
+            .groupBy(end)
+            .agg(F.count(F.lit(1)).alias(name))
+            .withColumnRenamed(end, "GlobalNodeId")
             .localCheckpoint(eager=True)
         )
         # the contributing DFs are pinned in the entry so their id()s
@@ -1081,7 +1070,7 @@ class GraphDatabase:
         # remaining edges renumber on the next derive (the reference's
         # Recycle compaction, GraphViewConnection.cs:2995-3075)
         self._edge_counts.pop(e.qualified, None)
-        self.edges[e.qualified] = survivors.localCheckpoint(eager=True)
+        self.edges[e.qualified] = self._checkpoint(survivors)
 
     def delete_nodes(self, table_name: str, cond) -> None:
         """DELETE NODE ... WHERE cond. The reference conjoins
@@ -1092,49 +1081,44 @@ class GraphDatabase:
         InsAndDelTutorial.cs:105-108). Nothing is deleted on failure —
         statement-level atomicity, same as the reference's transaction."""
         t = self.catalog.table(table_name)
-        nodes = self.nodes[t.name]
-        matched = nodes.filter(cond).select("GlobalNodeId")
-        outd = self.out_degree(t.name).filter(F.col("out_degree") > 0).select(
-            "GlobalNodeId"
-        )
-        ind = self.in_degree(t.name).filter(F.col("in_degree") > 0).select(
-            "GlobalNodeId"
-        )
-        n_bad = matched.join(
-            outd.unionByName(ind), "GlobalNodeId", "left_semi"
-        ).count()
-        if n_bad:
-            raise GraphViewError(
-                f"DELETE NODE on '{t.name}': {n_bad} matched node(s) still "
-                "has/have ingoing or outdoing edge(s)"
-            )
-        self._node_counts.pop(t.name, None)
-        self.nodes[t.name] = nodes.join(matched, "GlobalNodeId", "left_anti")
+        self._delete_unconnected(
+            t, self.nodes[t.name].filter(cond).select("GlobalNodeId"))
 
     def delete_nodes_df(self, table_name: str, matched: DataFrame) -> None:
         """DELETE NODE by a DataFrame of GlobalNodeIds (the join-delete
-        form, ``DELETE x FROM T x JOIN ...``) — same referential guard
-        and statement-level atomicity as ``delete_nodes``: raises if any
-        matched node still has in/out edges, deletes nothing on failure."""
+        form, ``DELETE x FROM T x JOIN ...``), guarded as ``delete_nodes``."""
         t = self.catalog.table(table_name)
-        nodes = self.nodes[t.name]
-        matched = matched.select("GlobalNodeId").distinct()
-        outd = self.out_degree(t.name).filter(F.col("out_degree") > 0).select(
-            "GlobalNodeId"
+        self._delete_unconnected(
+            t, matched.select("GlobalNodeId").distinct())
+
+    def _delete_unconnected(self, t: NodeTable, matched: DataFrame) -> None:
+        """The DELETE NODE guard, then the delete. SURVEY §2.6 maps the
+        reference's degree check to a semi-join: the matched ids against
+        ``src`` of the table's own edge types and ``sink`` of every edge
+        type referencing it, so the check reads only matched nodes'
+        edges, never a whole-table degree aggregate."""
+        low = t.name.lower()
+        ends = [
+            self.edges[e.qualified].select(F.col(end).alias("GlobalNodeId"))
+            for nt in self.catalog.tables.values()
+            for e in nt.edges.values()
+            for end, tbl in (("src", e.source_table), ("sink", e.sink_table))
+            if tbl.lower() == low
+        ]
+        n_bad = ends and (
+            reduce(DataFrame.unionByName, ends)
+            .join(matched, "GlobalNodeId", "left_semi")
+            .distinct()
+            .count()
         )
-        ind = self.in_degree(t.name).filter(F.col("in_degree") > 0).select(
-            "GlobalNodeId"
-        )
-        n_bad = matched.join(
-            outd.unionByName(ind), "GlobalNodeId", "left_semi"
-        ).count()
         if n_bad:
             raise GraphViewError(
                 f"DELETE NODE on '{t.name}': {n_bad} matched node(s) still "
                 "has/have ingoing or outdoing edge(s)"
             )
         self._node_counts.pop(t.name, None)
-        self.nodes[t.name] = nodes.join(matched, "GlobalNodeId", "left_anti")
+        self.nodes[t.name] = self.nodes[t.name].join(
+            matched, "GlobalNodeId", "left_anti")
 
     def update_nodes(self, table_name: str, assignments: dict, cond) -> None:
         """UPDATE of node properties (reference: plain T-SQL UPDATE passed
@@ -1355,11 +1339,19 @@ class GraphDatabase:
     # ------------------------------------------------------------------
     def checkpoint_tables(self) -> None:
         """Truncate DML lineage by materializing current node/edge DFs
-        (localCheckpoint: cluster-memory persisted, lineage cut)."""
-        for k, df in self.nodes.items():
-            self.nodes[k] = df.localCheckpoint(eager=True)
-        for k, df in self.edges.items():
-            self.edges[k] = df.localCheckpoint(eager=True)
+        (localCheckpoint: cluster-memory persisted, lineage cut) that are
+        not already a checkpoint's output (this method's or
+        ``delete_edges``'). DML, rollback and load bind new objects, so
+        object identity finds exactly the tables changed since."""
+        for tables in (self.nodes, self.edges):
+            for k, df in tables.items():
+                tables[k] = self._checkpoint(df)
+
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        if df not in self._checkpointed:
+            df = df.localCheckpoint(eager=True)
+            self._checkpointed.add(df)
+        return df
 
     def save(self, path: str) -> None:
         import json

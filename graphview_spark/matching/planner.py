@@ -299,8 +299,8 @@ def _edge_fanout(
     reference's Statistics.cs histogram merge). forward = surviving
     edges per source node (how much the frontier multiplies when the
     src alias is bound), reverse = surviving edges per sink node.
-    Everything is cached on the GraphDatabase and invalidated by DML,
-    so this costs nothing per query in steady state."""
+    Everything is cached on the GraphDatabase and invalidated by DML;
+    ``plan_match`` calls this only for an ordering decision (_Fanout)."""
     try:
         ets = _resolve_edge_types(
             g, e, bindings[e.src_alias], bindings[e.sink_alias]
@@ -322,6 +322,22 @@ def _edge_fanout(
         n_edges / max(src_n, 1) * fwd_sel,
         n_edges / max(sink_n, 1) * rev_sel,
     )
+
+
+class _Fanout(dict):
+    """id(pattern edge) -> its ``_edge_fanout``, computed on first
+    read and kept for the rest of the plan."""
+
+    def __init__(self, g, edges, bindings, alias_filters):
+        super().__init__()
+        self._edges = {id(e): e for e in edges}
+        self._args = (g, bindings, alias_filters)
+
+    def __missing__(self, key):
+        g, bindings, alias_filters = self._args
+        val = self[key] = _edge_fanout(g, self._edges[key], bindings,
+                                       alias_filters)
+        return val
 
 
 def _one_edge_df(g, et: EdgeType, e: PatternEdge, raw: bool = False) -> DataFrame:
@@ -400,15 +416,19 @@ def plan_match(
     the end (the reference appends unlinked FROM entries the same way,
     TranslateMatchClauseVisitor.cs:1736-1765). ``alias_filters`` are
     pushed-down single-alias predicates (see _pushable_filters).
+
+    Statistics (edge and node counts, predicate stats, sampling-table
+    histograms, pair overlap) are computed only when an ordering
+    decision reads them: a greedy step or beam search choosing among
+    two or more candidate edges. A pattern with no such choice — one
+    edge, as in a read-after-write or any DELETE EDGE — plans without
+    launching a Spark job.
     """
     for a in pattern.node_aliases:
         if a not in bindings:
             raise MatchPlanError(f"MATCH alias '{a}' is not bound in FROM")
 
-    fanout = {
-        id(e): _edge_fanout(g, e, bindings, alias_filters)
-        for e in pattern.edges
-    }
+    fanout = _Fanout(g, pattern.edges, bindings, alias_filters)
 
     comp_dfs: list[DataFrame] = []
     for comp in pattern.components():
@@ -542,7 +562,7 @@ def _order_component_beam(
     the root scan — so it can start at a selective alias greedy's
     fixed root can never reach. Driver-side arithmetic over cached
     statistics only: ≤ MaxStates × |edges| expansions, no Spark jobs
-    beyond the stats the greedy order already computes. Returns None
+    beyond the (cached) statistics its estimates read. Returns None
     (→ fall back to greedy) when any statistic is unavailable."""
     from graphview_spark.plans import lazy as _lazy
 
@@ -629,7 +649,7 @@ def _order_component_beam(
             fixed = [e for e in touching if not e.is_path]
             pool = fixed or touching or rem[:1]
             for e in pool:
-                fwd, rev = (fanout or {}).get(id(e), (0.0, 0.0))
+                fwd, rev = fanout[id(e)]
                 if e.src_alias in bound:
                     shared, base = e.src_alias, fwd
                 elif e.sink_alias in bound:
@@ -688,7 +708,7 @@ def _pick_edge(
     def est(e: PatternEdge) -> float:
         if fanout is None:
             return 0.0
-        fwd, rev = fanout.get(id(e), (0.0, 0.0))
+        fwd, rev = fanout[id(e)]
         shared = e.src_alias if e.src_alias in bound else e.sink_alias
         base = fwd if e.src_alias in bound else rev
         if overlap is not None and base != float("inf"):
@@ -699,6 +719,8 @@ def _pick_edge(
 
     fixed = [e for e in touching if not e.is_path]
     pool = fixed if fixed else touching
+    if len(pool) == 1:  # no choice to make: read no statistics
+        return pool[0]
     return min(pool, key=est)
 
 

@@ -140,14 +140,20 @@ def _replay_through_engine(
         # sorted pass into the same one-file-per-slice layout (the
         # partition column is dropped from the data files, so the
         # streamed schema is unchanged), and the dirs are renamed to
-        # the b1..bN names the reader globs.
+        # the b1..bN names the reader globs. An input with fewer rows
+        # than slices leaves some ntile values unused; partitionBy
+        # writes no directory for those, so they become empty slices.
         raw = base + "_raw"
         os.makedirs(base, exist_ok=True)
         (sliced.coalesce(1).write.partitionBy("_b")
          .parquet(raw, mode="overwrite"))
         for b in range(1, REPLAY_SLICES + 1):
             d = os.path.join(base, f"b{b}")
-            os.rename(os.path.join(raw, f"_b={b}"), d)
+            part = os.path.join(raw, f"_b={b}")
+            if os.path.isdir(part):
+                os.rename(part, d)
+            else:
+                os.makedirs(d)
             # pin arrival order: the file source orders by modification
             # time, and sub-second sequential writes can tie
             for root, _, files in os.walk(d):

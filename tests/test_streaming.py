@@ -544,3 +544,27 @@ def test_replay_statestore_provider_hook_identical(spark, monkeypatch):
     assert rocks.exceptAll(default).count() == 0
     assert spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass") == before
+
+
+def test_replay_input_smaller_than_slice_count(spark, sf_dir):
+    """An input with fewer rows than REPLAY_SLICES leaves some slices
+    without a partitionBy directory; the harness must stream them as
+    empty micro-batches, not crash renaming a directory that was never
+    written."""
+    from graphview_spark.streaming.events import build_dedup
+    from graphview_spark.streaming.replay import (
+        REPLAY_SLICES,
+        REPLAY_WATERMARK,
+        _replay_through_engine,
+    )
+
+    cols = ["event_id", "user_id", "event_type", "ts", "value"]
+    three = read_table(spark, sf_dir, "events").select(*cols).orderBy(
+        "ts", "event_id").limit(3).localCheckpoint(eager=True)
+    assert three.count() == 3 < REPLAY_SLICES
+    got = _replay_through_engine(
+        spark, three, lambda s: build_dedup(s, within=REPLAY_WATERMARK),
+        "tiny",
+    ).select(*cols)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, three.collect()))
