@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -1362,133 +1364,19 @@ ORACLES.update({
     "graph_hits": _oracle_hits(),
 })
 # --------------------------------------------------------------------------
-# Strongly connected components: GraphX-style trim + pivot coloring
-# (the same structure as org.apache.spark.graphx.lib.StronglyConnected
-# Components — trim DAG fringes, then peel SCCs by forward/backward
-# min-label agreement; that public implementation is RDD/JVM-only, this
-# is the DataFrame re-expression). Designed for low-cycle-density
-# graphs — referral trees, dedup pair graphs, web-link near-DAGs — the
-# shape real 100 TB corpora have; dense-cycle worst cases take more
-# peel rounds (bounded by ``max_rounds`` with a hard failure, never a
-# silent wrong answer).
+# Strongly connected components. An induced edge frame within
+# _MASS_DRIVER_EDGES rows is collected once and labelled exactly on the
+# driver (iterative Tarjan). Larger frames run GraphX-style trim + pivot
+# coloring (the same structure as org.apache.spark.graphx.lib.Strongly
+# ConnectedComponents — trim DAG fringes, then peel SCCs by forward/
+# backward min-label agreement; that public implementation is
+# RDD/JVM-only, this is the DataFrame re-expression) until the residual
+# fits the driver bound. Dense-cycle worst cases take more peel rounds
+# (bounded by ``max_rounds`` with a hard failure, never a silent wrong
+# answer).
 # --------------------------------------------------------------------------
 
 _SCC_PROBE_EVERY = 4   # propagation rounds between convergence probes
-
-
-def _shortcut_closure(e: DataFrame, budget_factor: int = 32,
-                      max_squarings: int = 12,
-                      skip_mass_check: bool = False
-                      ) -> tuple[DataFrame, bool]:
-    """Path-doubling reachability closure: G ← G ∪ G∘G doubles the hop
-    radius per squaring, so k squarings cover paths of 2^k edges and
-    the fixpoint IS the transitive closure. Each squaring is one
-    self-join + distinct — O(log diameter) driver-synchronized jobs
-    total, versus one job per hop for message-round propagation (the
-    dominant cost on deep graphs: per-job overhead, not data volume).
-    The budget guard stops when the edge set exceeds
-    ``budget_factor``×|E|: on near-DAG graphs (referral trees, dedup
-    pair graphs, web link graphs after dedup) the closure is
-    O(V·depth) and fits easily; on dense graphs it is quadratic and
-    the caller must use the bounded-memory iterative path instead.
-    Returns (reach_pairs, complete) — ``complete`` is True iff the
-    fixpoint was reached within budget.
-
-    Two per-round cost cuts (measured ~2× on the sf0.1 bench loop):
-
-    - **Seminaive delta composition.** A full squaring g∘g re-derives
-      every already-known pair every round. Instead only pairs FIRST
-      DERIVED last round (the delta) compose: g ∪ delta∘g ∪ g∘delta.
-      Correct by the path-splitting argument — a shortest path of
-      length ≤ 2^(k+1) splits into two halves of length ≤ 2^k; at the
-      round after the LATER half first appears, the earlier half is
-      present and the later is fresh, so the composition derives the
-      pair — round count stays O(log diameter). The fixpoint-confirming
-      round composes an empty delta, so it is nearly free.
-    - **Probe rides the squaring job.** The checkpoint is non-eager
-      and the count/fresh-sum probe is the action that materializes
-      it: one Spark job per squaring, not two.
-
-    Runs under _loop_regime (loop-sized shuffles, AQE deferred until
-    frames are big enough to be data-dominated)."""
-    with _loop_regime(e.sparkSession) as size_shuffle:
-        # seed dedup runs under the SESSION regime (AQE sizes it — the
-        # input may be arbitrarily large); its measured count sizes the
-        # loop regime. No seed-squaring fold here: unlike the distance
-        # closure, reach-diameters land just past powers of two on the
-        # mutual-chain graphs this serves, so the fold saves no round
-        # and only adds a job (measured).
-        g = (
-            e.distinct().withColumn("fresh", F.lit(1))
-            .transform(_ckpt_lazy)
-        )
-        n = g.agg(F.count(F.lit(1))).first()[0]
-        budget = budget_factor * max(n, 1)
-        if (not skip_mass_check and n >= _MASS_ESTIMATE_MIN_EDGES
-                and _closure_mass_doomed(g, budget, n_edges=n)):
-            # the sampled-BFS mass estimate says the finished closure
-            # cannot fit the budget — skip the attempt entirely instead
-            # of discovering it rounds (and minutes) later
-            return g.select("src", "sink"), False
-        pred = _pred_if_big(g, n, delta_is_all=True)
-        n_delta = n
-        for i in range(max_squarings):
-            if pred > _PREDICT_SLACK * budget:
-                # the NEXT compose would enumerate pred rows BEFORE the
-                # materialized-size budget could ever see them (the sf1
-                # failure mode: one squaring jumped from under-budget to
-                # tens of GB of join output). Bail to the bounded-memory
-                # fallback without running it.
-                return g.select("src", "sink"), False
-            size_shuffle(n)
-            delta = g.filter(F.col("fresh") == 1)
-            # small deltas ride the join as a broadcast build side, so
-            # the accumulated closure never shuffles for the compose
-            if n_delta < _LOOP_BCAST_ROWS:
-                delta = F.broadcast(delta)
-            compose = [
-                delta.alias("a")
-                .join(g.alias("b"), F.col("a.sink") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"),
-                        F.col("b.sink").alias("sink")),
-            ]
-            if i > 0:  # round 1: delta == g, one composition covers both
-                compose.append(
-                    g.alias("a")
-                    .join(delta.alias("b"), F.col("a.sink") == F.col("b.src"))
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.sink").alias("sink"))
-                )
-            two = compose[0]
-            for c in compose[1:]:
-                two = two.unionByName(c)
-            g2 = (
-                g.select("src", "sink", F.lit(1).alias("_old"))
-                .unionByName(two.select("src", "sink", F.lit(0).alias("_old")))
-                .groupBy("src", "sink")
-                .agg((1 - F.max("_old")).alias("fresh"))
-                .transform(_ckpt_lazy)
-            )
-            row = g2.agg(F.count(F.lit(1)), F.sum("fresh")).first()
-            n2, n_fresh = row[0], row[1]
-            # n_fresh is NULL (None) on an empty frame — possible when
-            # the seed edge set is empty (edge-free graph, or the SCC
-            # peel's class-restricted residual) — and an empty closure
-            # IS converged; comparing None below would crash (ADVICE r8)
-            if n2 == 0 or not n_fresh:
-                return g.select("src", "sink"), True
-            pred = _pred_if_big(g2, n2)
-            grow = n2 / max(n, 1)
-            g, n, n_delta = g2, n2, n_fresh
-            if n > budget:
-                return g.select("src", "sink"), False
-            if (n >= _PREDICT_MIN_ROWS and grow >= _DOOMED_GROWTH
-                    and n * grow > budget
-                    and _probe_next_mass(g) > budget):
-                # the sampled dry run of the next squaring says its
-                # output crosses the budget — bail before paying it
-                return g.select("src", "sink"), False
-        return g.select("src", "sink"), False
 
 
 # compose-size guard slack: the predicted enumeration count is an
@@ -1534,7 +1422,7 @@ _PROBE_MOD = 16
 # Closure-mass pre-estimate (round 9): even with the next-mass probe,
 # a doomed attempt pays every under-budget squaring before the bail —
 # at sf1 rounds 0-3 alone cost ~4 minutes on this host. Above this
-# edge count, both closure loops first spend a sampled multi-seed BFS
+# edge count, the distance closure first spends a sampled multi-seed BFS
 # (~depth jobs over ≤2×budget×(seeds/srcs) sampled settled rows — tens
 # of seconds) to estimate the FINISHED closure's mass and skip the
 # attempt outright when it cannot fit. Below it the attempt itself is
@@ -1544,28 +1432,43 @@ _PROBE_MOD = 16
 # once before its attempt — linear cost to dodge a quadratic trap.
 _MASS_ESTIMATE_MIN_EDGES = 100_000
 _MASS_SEEDS = 256
-# edge frames at or below this row count run the mass-estimate BFS on
-# the driver over one collected copy (see _closure_mass_estimate);
-# kept equal to _LOOP_BCAST_ROWS — if a frame is small enough to ship
-# to every executor as a broadcast, one driver copy is strictly less
-# memory — but a separate knob so tests can force either path
+# the one bound on edge frames collected to the driver (_collect_edges):
+# at or below it, SCCs are labelled on the driver (top level and the
+# peel's residual finish), and the mass-estimate BFS runs there when its
+# abort_at pair bound also fits (see _closure_mass_estimate). Kept equal
+# to _LOOP_BCAST_ROWS — a frame small enough to ship to every executor
+# as a broadcast is small enough for one driver copy (measured on a
+# 4-CPU host: 1M random edges label in 1.5–2.3 s at a ≤ 350 MiB process
+# peak) — but a separate knob so tests can force either path
 _MASS_DRIVER_EDGES = 1_000_000
 
 
-def _mass_bfs_driver(pairs, seed_ids, n_src: int, budget: int,
+def _collect_edges(e: DataFrame, bound: int):
+    """(src, sink) of ``e`` as two numpy arrays with null endpoints
+    dropped, or None when more than ``bound`` such rows exist. The size
+    check and the collect are ONE ``limit(bound + 1)`` action, so the
+    driver never holds more than bound + 1 rows."""
+    t = e.select("src", "sink").dropna().limit(bound + 1).toArrow()
+    if t.num_rows > bound:
+        return None
+    return t.column("src").to_numpy(), t.column("sink").to_numpy()
+
+
+def _mass_bfs_driver(src, sink, seed_ids, n_src: int, abort_at: float,
                      max_depth: int) -> float:
     """Exact driver-side transcription of _closure_mass_estimate's
-    distributed two-hop loop, for edge frames under _MASS_DRIVER_EDGES:
-    same seeds (selected in Spark by the same xxhash64 filter), same
-    pair-granularity exits, same cycle-pair correction, same returned
-    float — only the substrate differs (Python sets instead of
-    per-hop Spark jobs). Keep the two in lockstep: the gate must never
+    distributed two-hop loop over the collected (src, sink) arrays
+    (null endpoints already dropped): same seeds (selected in Spark by
+    the same xxhash64 filter), same pair-granularity exits, same
+    cycle-pair correction, same returned float — only the substrate
+    differs (Python sets instead of per-hop Spark jobs). The pair sets
+    stay under ``abort_at`` + seeds, which the caller bounds by
+    _MASS_DRIVER_EDGES. Keep the two in lockstep: the gate must never
     change the verdict, only where it is computed."""
     adj: dict = {}
-    for row in pairs:
-        adj.setdefault(row[0], set()).add(row[1])
+    for s, t in zip(src.tolist(), sink.tolist()):
+        adj.setdefault(s, set()).add(t)
     n_seeds = len(seed_ids)
-    abort_at = 2.0 * budget * n_seeds / n_src
     settled = {(s, s) for s in seed_ids}
     frontier = settled
     mass = 0
@@ -1588,6 +1491,8 @@ def _mass_bfs_driver(pairs, seed_ids, n_src: int, budget: int,
         settled = settled1 | nxt2
         frontier = nxt2
     return float("inf")
+
+
 # Asymmetric skip threshold (round 9, calibrated on measured cases):
 # per-seed reach is heavy-tailed — a handful of deep srcs carry much
 # of the closure mass — so the sampled mean carries real variance at
@@ -1612,8 +1517,7 @@ _MASS_SKIP_FRACTION = 0.7
 def _closure_mass_doomed(e: DataFrame, budget: int,
                          n_edges: int | None = None) -> bool:
     """True when the finished closure's estimated mass cannot fit
-    ``budget`` — the strategy verdict both closure loops and the SCC
-    peel consult.
+    ``budget`` — the strategy verdict the distance closure consults.
 
     Round 10: the verdict is the MAX of two ~256-seed estimates of the
     same quantity — closure mass = Σ_src |reach(src)| (forward BFS over
@@ -1699,42 +1603,41 @@ def _closure_mass_estimate(e: DataFrame, budget: int,
     is bounded by ~2×budget×(seeds/srcs) rows regardless of density.
     Returns +inf too when the frontier outlives ``max_depth``: a graph
     that deep has closure mass ≥ V·depth/2, past any sane budget."""
+    # null endpoints never join in the distributed loop; dropping them
+    # here keeps the driver BFS from chaining through None (ADVICE r13)
+    e = e.select("src", "sink").dropna()
     srcs = e.select("src").distinct().transform(_ckpt_lazy)
     n_src = srcs.count()
     if n_src == 0:
         return 0.0
     k = max(1, n_src // (sample_target or _MASS_SEEDS))
     seeds = srcs.filter(F.pmod(F.xxhash64("src"), F.lit(k)) == 0)
-
-    # Round 13 (VERDICT r12 "Next #5", measured via
-    # tools/probe_scc_phases.py): at sf1 the three strategy verdicts of
-    # q_graph_scc cost 60 s of its 128 s cold run — the BFS frontiers
-    # are abort_at-bounded (~10⁴ rows) and every hop pays the per-job
-    # scheduling floor, not data. When the EDGE frame itself is
-    # broadcast-small (≤ _MASS_DRIVER_EDGES rows — the same bound
-    # _LOOP_BCAST_ROWS uses to ship a frame to every executor, so one
-    # driver copy is strictly lighter), collect it once and run the
-    # identical sampled BFS in plain sets: 3 tiny jobs instead of
-    # 2 + 2·⌈depth/2⌉. Seed selection still happens IN SPARK (the
-    # xxhash64 sample must match the distributed path bit-for-bit), and
-    # _mass_bfs_driver transcribes the pair-granularity loop below
-    # exactly — both paths return the same float for the same frame, so
-    # the strategy verdict is independent of which path computed it
-    # (property-tested both ways in tests/test_loop_scale_guards.py).
-    # Above the gate (true scale) the distributed loop runs unchanged.
-    if n_edges is None:
-        n_edges = e.count()
-    if n_edges <= _MASS_DRIVER_EDGES:
-        seed_ids = [r[0] for r in seeds.collect()]
-        if not seed_ids:  # hash skew emptied the sample
-            return 0.0
-        pairs = e.select("src", "sink").collect()
-        return _mass_bfs_driver(pairs, seed_ids, n_src, budget, max_depth)
-
-    n_seeds = seeds.count()
-    if n_seeds == 0:  # hash skew emptied the sample: nothing to learn
+    seed_ids = [r[0] for r in seeds.collect()]
+    if not seed_ids:  # hash skew emptied the sample: nothing to learn
         return 0.0
+    n_seeds = len(seed_ids)
     abort_at = 2.0 * budget * n_seeds / n_src
+
+    # Round 13 (VERDICT r12 "Next #5"): at sf1 the strategy verdicts
+    # cost 60 s of a 128 s cold SCC run — the BFS frontiers are
+    # abort_at-bounded (~10⁴ rows) and every hop pays the per-job
+    # scheduling floor, not data. When both the edge frame and the
+    # abort_at bound on the driver's pair sets fit _MASS_DRIVER_EDGES,
+    # collect the edges once and run the identical sampled BFS in plain
+    # sets: 3 tiny jobs instead of 2 + 2·⌈depth/2⌉. Seed selection still
+    # happens IN SPARK (the xxhash64 sample must match the distributed
+    # path bit-for-bit), and _mass_bfs_driver transcribes the
+    # pair-granularity loop below exactly — both paths return the same
+    # float for the same frame (property-tested both ways in
+    # tests/test_loop_scale_guards.py). Otherwise the distributed loop
+    # runs unchanged.
+    bound = _MASS_DRIVER_EDGES
+    if abort_at <= bound and (n_edges is None or n_edges <= bound):
+        collected = _collect_edges(e, bound)
+        if collected is not None:
+            return _mass_bfs_driver(*collected, seed_ids, n_src, abort_at,
+                                    max_depth)
+
     settled = seeds.select(F.col("src").alias("s"),
                            F.col("src").alias("id"))
     frontier = settled
@@ -1747,7 +1650,7 @@ def _closure_mass_estimate(e: DataFrame, budget: int,
     # join broadcasts the frontier (e never shuffles) and the
     # anti-join broadcasts the settled set: one shuffle per hop (the
     # distinct) instead of three. Same measured-bound discipline as
-    # _shortcut_closure's delta broadcast.
+    # _distance_closure's delta broadcast.
     bcast_ok = abort_at + n_seeds <= _LOOP_BCAST_ROWS
 
     def _hop(fr, st):
@@ -1958,63 +1861,136 @@ def _propagate_fb(lab: DataFrame, e: DataFrame,
 
 def strongly_connected_components(
     nodes: DataFrame, edges: DataFrame, max_rounds: int = 20,
-    budget_factor: int = 32, finish_nodes: int | None = None,
+    driver_edges: int | None = None,
 ) -> DataFrame:
     """SCC labels over directed (src, sink) edges. Returns (id, scc)
-    where scc is the component's minimum member id.
+    for every row of ``nodes``, where scc is the component's minimum
+    member id. Components are those of the subgraph ``nodes`` induces:
+    edges with a null endpoint or an endpoint outside ``nodes`` are
+    dropped before either strategy runs, so both return the same
+    answer and no label names an id outside ``nodes``.
 
-    Two-strategy design:
+    One measured size picks the strategy (``driver_edges``, default
+    _MASS_DRIVER_EDGES; 0 forces the distributed path):
 
-    - **Closure-direct (preferred):** compute the transitive closure
-      by path-doubling (_shortcut_closure, O(log diameter) jobs). If
-      it completes within the edge budget, SCCs fall out in ONE more
-      self-join: u and v are in the same SCC iff both (u,v) and (v,u)
-      are reach pairs, so each node's label is the minimum over its
-      mutual-reach partners. Near-DAG graphs — referral trees, dedup
-      pair graphs, deduplicated web-link graphs, i.e. what a training
-      corpus actually yields — have O(V·depth) closures and take this
-      path.
-    - **Iterative FW-BW peel (fallback, _scc_peel):** when the
-      closure blows the budget (dense cyclic graphs), peel with the
-      bounded-memory coloring loop — O(V) state per round, one
-      shuffle per propagation step — the same structure as the public
-      GraphX StronglyConnectedComponents. Slower in rounds, never in
-      memory."""
-    # no eager checkpoint here: the closure's seed materialization IS
-    # the one pass over the edge lineage; the peel fallback checkpoints
-    # what it needs itself
-    e = edges.select("src", "sink")
-    closure, complete = _shortcut_closure(e, budget_factor)
-    if not complete:
-        return _scc_peel(nodes, e, max_rounds, finish_nodes=finish_nodes)
-    return _scc_from_closure(nodes.select("id"), closure)
-
-
-def _scc_from_closure(ids: DataFrame, closure: DataFrame) -> DataFrame:
-    """SCC labels from a COMPLETE reachability closure: u, v share an
-    SCC iff both (u,v) and (v,u) are reach pairs, so each node's label
-    is the min over its mutual-reach partners (itself when none)."""
-    mutual = closure.join(
-        closure.select(F.col("sink").alias("src"),
-                       F.col("src").alias("sink")),
-        ["src", "sink"],
+    - **Driver (preferred):** an induced edge frame of at most
+      ``driver_edges`` rows is collected ONCE — the size check and the
+      collect are one ``limit(bound + 1)`` action — and labelled
+      exactly by an iterative Tarjan over a numpy CSR
+      (_scc_on_driver). At the bound, 1M random edges label in
+      1.5–2.3 s at a ≤ 350 MiB process peak, so the bound is also this
+      path's memory bound.
+    - **Trim + FW-BW peel (_scc_peel):** larger frames run the
+      bounded-memory coloring loop — O(V) state per round, one shuffle
+      per propagation step — the same structure as the public GraphX
+      StronglyConnectedComponents. The peel hands its residual to the
+      driver labelling as soon as the residual edge frame fits
+      ``driver_edges``."""
+    bound = _MASS_DRIVER_EDGES if driver_edges is None else driver_edges
+    ids = nodes.select("id")
+    # the lazy checkpoint materializes inside the first action (the
+    # collect, else the trim's count), so the peel never recomputes the
+    # caller's lineage, and it keeps Catalyst from pushing the
+    # restriction into the caller's joins, where each copy costs
+    # another broadcast job
+    e = (
+        edges.select("src", "sink").transform(_ckpt_lazy)
+        .join(ids.select(F.col("id").alias("src")), "src", "semi")
+        .join(ids.select(F.col("id").alias("sink")), "sink", "semi")
     )
-    partner_min = (
-        mutual.groupBy("src").agg(F.min("sink").alias("m"))
-        .withColumnRenamed("src", "id")
-    )
-    return ids.join(partner_min, "id", "left").select(
-        "id",
-        F.least(F.col("id"), F.coalesce(F.col("m"), F.col("id"))
-                ).alias("scc"),
-    )
+    if bound:
+        collected = _collect_edges(e, bound)
+        if collected is not None:
+            return _scc_on_driver(ids, collected)
+    return _scc_peel(ids, e, max_rounds, driver_edges=bound)
+
+
+def _scc_labels(src, sink):
+    """Exact SCCs of the (src, sink) arrays: iterative Tarjan (no
+    recursion, so path depth is bounded by memory, not the interpreter
+    stack) over a CSR built with numpy. Returns (ids, labels) for every
+    node that is NOT the minimum of its component — the other nodes,
+    and nodes without edges, label themselves."""
+    ids, inv = np.unique(np.concatenate([src, sink]), return_inverse=True)
+    n, m = len(ids), len(src)
+    s, t = inv[:m], inv[m:]
+    start = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(s, minlength=n), out=start[1:])
+    adj = t[np.argsort(s, kind="stable")].tolist()
+    start = start.tolist()
+    index = [-1] * n
+    low = [0] * n
+    on_stack = [False] * n
+    label = list(range(n))
+    stack: list[int] = []
+    counter = 0
+    for root in range(n):
+        if index[root] >= 0:
+            continue
+        index[root] = low[root] = counter
+        counter += 1
+        stack.append(root)
+        on_stack[root] = True
+        work = [(root, start[root])]  # (node, next edge offset)
+        while work:
+            v, i = work[-1]
+            end = start[v + 1]
+            while i < end:
+                w = adj[i]
+                i += 1
+                if index[w] < 0:
+                    work[-1] = (v, i)
+                    index[w] = low[w] = counter
+                    counter += 1
+                    stack.append(w)
+                    on_stack[w] = True
+                    work.append((w, start[w]))
+                    break
+                if on_stack[w] and index[w] < low[v]:
+                    low[v] = index[w]
+            else:
+                work.pop()
+                if low[v] == index[v]:
+                    # v roots a component: its members sit above it on
+                    # the stack; ids are sorted, so the min index is the
+                    # min member id
+                    at = len(stack) - 1
+                    while stack[at] != v:
+                        at -= 1
+                    members = stack[at:]
+                    del stack[at:]
+                    lo = min(members)
+                    for w in members:
+                        on_stack[w] = False
+                        label[w] = lo
+                if work:
+                    u = work[-1][0]
+                    if low[v] < low[u]:
+                        low[u] = low[v]
+    label = np.asarray(label, dtype=np.int64)
+    moved = label != np.arange(n)
+    return ids[moved], ids[label[moved]]
+
+
+def _scc_on_driver(ids: DataFrame, collected) -> DataFrame:
+    """(id, scc) for every row of ``ids`` from the collected (src, sink)
+    arrays of the edges among them: only the labels that differ from
+    the node's own id are shipped back and left-joined on."""
+    node, scc = _scc_labels(*collected)
+    if len(node) == 0:
+        return ids.select("id", F.col("id").alias("scc"))
+    lab = ids.sparkSession.createDataFrame(
+        pa.table({"id": node, "scc": scc}))
+    return ids.join(lab, "id", "left").select(
+        "id", F.coalesce(F.col("scc"), F.col("id")).alias("scc"))
 
 
 def _scc_peel(nodes: DataFrame, e: DataFrame,
               max_rounds: int = 20,
-              finish_nodes: int | None = None) -> DataFrame:
-    """Iterative FW-BW/coloring SCC peel — the bounded-memory fallback
-    for graphs whose reachability closure exceeds the shortcut budget.
+              driver_edges: int | None = None) -> DataFrame:
+    """Iterative FW-BW/coloring SCC peel — the bounded-memory path for
+    edge frames larger than the driver bound. ``e`` must already be
+    restricted to ``nodes`` (strongly_connected_components does this).
 
     Each round computes f = min reachable-ancestor label and b = min
     reachable-descendant label as (xxhash64(id), id) structs in ONE
@@ -2035,7 +2011,9 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
 
     Each round peels at least every class's min-hash pivot, so the
     peel always progresses. Hashed pivot order keeps monotone-id
-    graphs from degrading to one SCC per round. Labels are then
+    graphs from degrading to one SCC per round. Once the residual edge
+    frame fits ``driver_edges`` (default _MASS_DRIVER_EDGES; 0 never)
+    the remainder is labelled on the driver. Labels are then
     canonicalized to the component minimum so both strategies return
     identical frames.
 
@@ -2053,8 +2031,9 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
     parts: list[DataFrame] = []
     with _loop_regime(nodes.sparkSession) as size_shuffle:
         remaining, e = _scc_trim(remaining, e, parts, size_shuffle)
-        _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
-                         finish_nodes=finish_nodes)
+        _scc_peel_rounds(
+            remaining, e, parts, max_rounds, size_shuffle,
+            _MASS_DRIVER_EDGES if driver_edges is None else driver_edges)
     if not parts:
         return nodes.sparkSession.createDataFrame(
             [], "id long, scc long")
@@ -2120,87 +2099,26 @@ def _scc_trim(remaining, e, parts, size_shuffle, max_rounds: int = 256):
     return remaining, e  # depth cap: peel handles whatever is left
 
 
-# residual size below which the peel hands the remainder to the
-# closure-direct path: after trim + a few FB rounds the class-
-# restricted residual is a sliver, and finishing it with O(log d)
-# closure jobs beats more FB fixpoints (measured at the sf1 scale
-# fixture: the 998-node tail round cost more than the whole peel to
-# that point). A closure attempt that still blows its budget or
-# compose prediction bails in bounded work and FB peeling resumes.
-_SCC_FINISH_NODES = 4096
-# re-run the peel's closure-mass verdict only after the class
-# restriction shrank the residual edge frame geometrically (≤0.8× the
-# count at the last doomed verdict) — see _scc_peel_rounds round-13 note
-_SCC_RECHECK_SHRINK = 0.8
-# ADVICE r9 #2: the peel's mass-verdict budget and the routed closure
-# attempt's own budget MUST be the same number — if they diverge, the
-# verdict can say "fits" while the attempt trips (or vice versa). One
-# constant feeds both (the verdict at _scc_peel_rounds and the
-# _shortcut_closure call it routes to).
-_PEEL_BUDGET_FACTOR = 32
-
-
 def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
-                     finish_nodes: int | None = None):
+                     driver_edges: int):
     """Peel loop body (see _scc_peel): mutates ``parts`` in place so the
-    caller can union outside the loop regime. ``finish_nodes``
-    overrides _SCC_FINISH_NODES (0 disables the closure-direct finish —
-    the oracle-gated peel fixture uses this so the FB fixpoint leg
-    stays driver-verified instead of being short-circuited)."""
-    cutoff = _SCC_FINISH_NODES if finish_nodes is None else finish_nodes
-    doomed_at_edges = None
+    caller can union outside the loop regime. As soon as the residual
+    edge frame fits ``driver_edges`` rows, the remainder is labelled
+    exactly on the driver (_scc_on_driver) — after trim and a few class
+    restrictions the residual is usually a sliver whose FB fixpoints
+    would pay the per-job floor for nothing. ``driver_edges=0`` keeps
+    every round on the FB leg (the oracle-gated peel fixture)."""
     for _ in range(max_rounds):
         n_remaining = remaining.count()
         if n_remaining == 0:
             return
+        # the count also materializes the lazily checkpointed residual
+        # the next FB round reads; the collect runs only once it fits
+        if driver_edges and e.count() <= driver_edges:
+            parts.append(_scc_on_driver(
+                remaining, _collect_edges(e, driver_edges)))
+            return
         size_shuffle(n_remaining)
-        try_closure = n_remaining <= cutoff
-        if not try_closure and cutoff:
-            # Round 9: the node-count cutoff alone leaves big-but-easy
-            # residuals (the sf1 trim core: ~30k nodes of short mutual
-            # chains, closure mass ~15 pairs/node) paying FB fixpoints
-            # (~35s at sf1) when O(log depth) closure squarings finish
-            # them in seconds. One sampled-BFS mass estimate — the same
-            # estimator the top-level strategy pick uses — decides.
-            # Round 13 (VERDICT r12 "Next #5"): the verdict is
-            # re-evaluated after any round whose class restriction cut
-            # the edge frame below _SCC_RECHECK_SHRINK × the count at
-            # the last DOOMED verdict — "checked once" left the sf1
-            # residual paying an extra FB fixpoint when the first
-            # round's restriction had already made the closure finish
-            # viable. Measured (same-process alternated A/B at sf1,
-            # _SCC_RECHECK_SHRINK 0.8 vs disabled): graph_scc
-            # 32.1/35.5 s vs 45.5/45.1 s — the re-checked verdict
-            # routes the residual to a ~3 s closure finish instead of
-            # a ~12 s propagate round. A re-check only fires on a
-            # geometric edge shrink, so a peel whose restriction never
-            # bites pays the estimator exactly once, as before; a
-            # fit-verdict that still fails pays the attempt's own
-            # bounded guards, then FB resumes.
-            # finish_nodes=0 disables this with the cutoff, keeping
-            # the oracle-gated FB-leg fixture on the FB path.
-            n_e = e.count()
-            if (doomed_at_edges is None
-                    or n_e <= _SCC_RECHECK_SHRINK * doomed_at_edges):
-                budget = _PEEL_BUDGET_FACTOR * max(n_e, 1)
-                try_closure = not _closure_mass_doomed(
-                    e, budget, n_edges=n_e)
-                if not try_closure:
-                    doomed_at_edges = n_e
-        if try_closure:
-            # skip_mass_check: this round's verdict (or the ≤cutoff
-            # size) already routed here — re-estimating inside the
-            # attempt would double the cost and, on marginal cores,
-            # could DISAGREE with the verdict that sent us (measured
-            # at sf3: two back-to-back verdicts on the same core,
-            # ~80s, opposite answers at the sampling-noise boundary)
-            closure, complete = _shortcut_closure(
-                e, budget_factor=_PEEL_BUDGET_FACTOR,
-                skip_mass_check=True)
-            if complete:
-                parts.append(_scc_from_closure(remaining, closure))
-                return
-            # residual still closure-hostile: keep peeling
         lab = remaining.select(
             "id", F.struct(F.xxhash64("id").alias("h"),
                            F.col("id").alias("pid")).alias("p")
@@ -2256,25 +2174,36 @@ def _distance_closure(e: DataFrame, budget_factor: int = 32,
     """Min-plus path-doubling: D ← min(D, D∘D) with dist summed along
     the composition — k squarings give exact shortest distances for
     paths up to 2^k edges, fixpoint = all-pairs shortest distances.
-    Same O(log diameter) job count and the same edge budget rationale
-    as _shortcut_closure (near-DAG closures are O(V·depth); dense
-    graphs must use per-source frontier BFS instead). Fixpoint test
-    compares (pair count, total distance) — both monotone, so equality
-    means no pair appeared and no distance improved. Returns
-    ((src, sink, dist), complete); self-pairs excluded from the seed so
-    dist ≥ 1 (cycles may introduce them later; they carry the true
-    cycle length).
+    Each squaring is one self-join + groupBy, so the closure costs
+    O(log diameter) driver-synchronized jobs, versus one job per hop
+    for message-round BFS (the dominant cost on deep graphs: per-job
+    overhead, not data volume). The budget guard stops when the pair
+    set exceeds ``budget_factor``×|E|: near-DAG closures (referral
+    trees) are O(V·depth) and fit; dense graphs are quadratic and must
+    use per-source frontier BFS instead. Fixpoint test compares (pair
+    count, total distance) — both monotone, so equality means no pair
+    appeared and no distance improved. Returns ((src, sink, dist),
+    complete); self-pairs excluded from the seed so dist ≥ 1 (cycles
+    may introduce them later; they carry the true cycle length).
 
-    Same two per-round cost cuts as _shortcut_closure: seminaive delta
-    composition (only pairs whose distance appeared or improved last
-    round compose — exactness by the same path-splitting argument, with
-    "fresh" meaning the half's final exact value just arrived) and the
-    non-eager checkpoint whose materializing action IS the fixpoint
-    probe (one job per squaring). Runs under _loop_regime;
-    ``materialize=True`` eager-checkpoints the result BEFORE the regime
-    exits, so a closure that outlives the call (the per-app cache)
-    materializes under the loop's shuffle shape, not the restored
-    session conf (the _loop_regime escape caveat)."""
+    Two per-round cost cuts:
+
+    - **Seminaive delta composition.** Only pairs whose distance
+      appeared or improved last round (``fresh``) compose:
+      D ∪ delta∘D ∪ D∘delta. Exact by path splitting — a shortest path
+      of length ≤ 2^(k+1) splits into two halves of length ≤ 2^k; at
+      the round after the LATER half's final value arrives, the earlier
+      half is present and the later is fresh, so the composition
+      derives the pair. The fixpoint-confirming round composes an empty
+      delta, so it is nearly free.
+    - **Probe rides the squaring job.** The checkpoint is non-eager and
+      the count/fresh-sum probe is the action that materializes it:
+      one Spark job per squaring, not two.
+
+    Runs under _loop_regime; ``materialize=True`` eager-checkpoints the
+    result BEFORE the regime exits, so a closure that outlives the call
+    (the per-app cache) materializes under the loop's shuffle shape,
+    not the restored session conf (the _loop_regime escape caveat)."""
     def _finish(frame, complete):
         out = frame.select("src", "sink", "dist")
         if materialize and complete:
@@ -2372,7 +2301,8 @@ def _distance_closure(e: DataFrame, budget_factor: int = 32,
             )
             row = d2.agg(F.count(F.lit(1)), F.sum("fresh")).first()
             n2, n_fresh = row[0], row[1]
-            # None on an empty frame = converged (see _shortcut_closure)
+            # n_fresh is NULL (None) on an empty frame — an edge-free
+            # input — and an empty closure IS converged (ADVICE r8)
             if n2 == 0 or not n_fresh:
                 return _finish(d, True)
             pred = _pred_if_big(d2, n2)
@@ -2383,8 +2313,8 @@ def _distance_closure(e: DataFrame, budget_factor: int = 32,
             if (n >= _PREDICT_MIN_ROWS and grow >= _DOOMED_GROWTH
                     and n * grow > budget
                     and _probe_next_mass(d) > budget):
-                # doomed next squaring (sampled dry run): see
-                # _shortcut_closure
+                # the sampled dry run of the next squaring says its
+                # output crosses the budget — bail before paying it
                 return _finish(d, False)
         return _finish(d, False)
 
@@ -2865,7 +2795,11 @@ def q_graph_scc(spark, sf_dir: str) -> DataFrame:
     (every edge whose child key is divisible by 5 also gets the reverse
     direction) — the reversals thread mutual chains k ↔ 2k ↔ 4k…
     through the heap-shaped tree, so nontrivial SCCs exist at every
-    scale. Output is label-agnostic (counts and sizes only).
+    scale. Output is label-agnostic (counts and sizes only). Through
+    sf1 (~180k directed edges) the edge frame fits _MASS_DRIVER_EDGES,
+    so the labelling is one collect plus a driver Tarjan;
+    q_graph_scc_peel keeps the distributed trim + peel leg under its
+    own oracle.
 
     Oracle note: on THIS derived graph, every directed cycle descends a
     tree path and must climb back up the same unique parent chain, so
@@ -2946,16 +2880,15 @@ _PEEL_NODE_MAX = 500  # 20 extra keys stay singleton SCCs
 
 
 def q_graph_scc_peel(spark, sf_dir: str) -> DataFrame:
-    """Drives the FW-BW peel fallback (_scc_peel) END-TO-END under an
-    oracle — the leg q_graph_scc's near-DAG graph never reaches because
-    its closure fits the budget. The derived graph is 80 directed
+    """Drives the distributed trim + FW-BW peel (_scc_peel) END-TO-END
+    under an oracle — the leg q_graph_scc never reaches because its
+    edge frame fits the driver bound. The derived graph is 80 directed
     6-cycles over c_custkey ≤ 480 (block b = (k-1) div 6, edge k → next
     position in the block's cycle) plus 20 isolated keys ≤ 500:
-    budget_factor=2 trips at the second squaring (dist≤4 pairs = 4|E| >
-    2|E|), so the general peel runs — the trim pre-pass disposes of the
-    isolated keys, f==b peels every cycle whole; finish_nodes=0 keeps
-    the closure-direct residual finish OFF so the FB fixpoint leg
-    itself stays under the oracle (the query's whole purpose). The
+    driver_edges=0 skips the driver labelling at the top AND as the
+    peel's residual finish, so the trim pre-pass disposes of the
+    isolated keys and f==b peels every cycle whole — the FB fixpoint
+    leg itself stays under the oracle (the query's whole purpose). The
     DuckDB oracle does an honest recursive reachability closure +
     mutual-reach minimum, not the generator's closed form. Summary
     output is label-agnostic, same shape as q_graph_scc."""
@@ -2974,8 +2907,7 @@ def q_graph_scc_peel(spark, sf_dir: str) -> DataFrame:
              ).alias("sink"),
         )
     )
-    scc = strongly_connected_components(
-        nodes, edges, budget_factor=2, finish_nodes=0)
+    scc = strongly_connected_components(nodes, edges, driver_edges=0)
     sizes = scc.groupBy("scc").agg(F.count(F.lit(1)).alias("n"))
     return sizes.agg(
         F.count(F.lit(1)).alias("n_sccs"),

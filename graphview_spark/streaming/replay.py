@@ -143,9 +143,12 @@ def _replay_through_engine(
         # the b1..bN names the reader globs. An input with fewer rows
         # than slices leaves some ntile values unused; partitionBy
         # writes no directory for those, so they become empty slices.
+        # maxRecordsPerFile=0 overrides a session cap that would split
+        # a slice into several files with one pinned mtime (ADVICE r13).
         raw = base + "_raw"
         os.makedirs(base, exist_ok=True)
         (sliced.coalesce(1).write.partitionBy("_b")
+         .option("maxRecordsPerFile", 0)
          .parquet(raw, mode="overwrite"))
         for b in range(1, REPLAY_SLICES + 1):
             d = os.path.join(base, f"b{b}")

@@ -293,9 +293,9 @@ def test_scc_small_fixture(spark):
     scc = strongly_connected_components(nodes, edges)
     got = {r["id"]: r["scc"] for r in scc.collect()}
     assert set(got) == set(range(1, 9))
-    # budget_factor=1 forces the iterative FW-BW peel fallback; both
+    # driver_edges=0 forces the distributed trim + FW-BW peel; both
     # strategies must agree exactly
-    peel = strongly_connected_components(nodes, edges, budget_factor=1)
+    peel = strongly_connected_components(nodes, edges, driver_edges=0)
     assert {r["id"]: r["scc"] for r in peel.collect()} == got
     # the 3-cycle is one SCC, the mutual pair another, the rest single
     assert got[1] == got[2] == got[3]
@@ -325,22 +325,18 @@ def test_closure_loops_converge_on_empty_edges(spark):
     """ADVICE r8 #1: an empty closure frame is CONVERGED, not a crash.
     F.sum('fresh') is NULL on an empty frame; before the fix the next
     iteration died comparing None < _LOOP_BCAST_ROWS. Reachable from
-    edge-free graphs and from the SCC peel's class-restricted residual
-    handed to the closure-direct finish."""
-    from graphview_spark.algorithms import (
-        _distance_closure, _shortcut_closure)
+    edge-free graphs."""
+    from graphview_spark.algorithms import _distance_closure
 
     empty = spark.createDataFrame([], "src long, sink long")
-    g, complete = _shortcut_closure(empty)
-    assert complete and g.count() == 0
     d, complete = _distance_closure(empty)
     assert complete and d.count() == 0
 
 
 def test_scc_edge_free_graph(spark):
     """Every node of an edge-free graph is its own singleton SCC, via
-    both the closure-direct path and the explicit FW-BW peel (whose
-    trim pre-pass must dispose of all degree-0 nodes)."""
+    both the driver labelling and the explicit FW-BW peel (whose trim
+    pre-pass must dispose of all degree-0 nodes)."""
     from graphview_spark.algorithms import (
         _scc_peel, strongly_connected_components)
 

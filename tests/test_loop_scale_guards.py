@@ -5,7 +5,24 @@ fixes behind the sf1 graph_scc cliff (SCALECHECK.md round-8 section).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+
+@pytest.fixture
+def fb_calls(monkeypatch):
+    """Counts FB fixpoints: ``fb_calls["n"]`` after any SCC call."""
+    import graphview_spark.algorithms as A
+
+    calls = {"n": 0}
+    orig = A._propagate_fb
+
+    def spy(*a, **k):
+        calls["n"] += 1
+        return orig(*a, **k)
+
+    monkeypatch.setattr(A, "_propagate_fb", spy)
+    return calls
 
 
 def test_local_ckpt_stats_stay_flat(spark):
@@ -98,10 +115,10 @@ def test_closure_guard_bails_on_predicted_blowup(spark, monkeypatch):
     rows = [(i, 1000) for i in range(50)] + [(1000, 2000 + j)
                                              for j in range(50)]
     e = spark.createDataFrame(rows, "src long, sink long")
-    closure, complete = A._shortcut_closure(e, budget_factor=1)
+    d, complete = A._distance_closure(e, budget_factor=1)
     assert not complete
     # the returned frame is the last SAFE state (the seed here)
-    assert closure.count() == 100
+    assert d.count() == 100
 
 
 def test_probe_next_mass_exact_at_mod_one(spark):
@@ -246,10 +263,8 @@ def test_mass_estimate_skips_doomed_attempt(spark, monkeypatch):
     # chain 1→2→…→8: closure mass 28 > budget 1×7 → skip
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "src long, sink long")
-    closure, complete = A._shortcut_closure(e, budget_factor=1)
-    assert not complete and closure.count() == 7  # the seed, untouched
     d, complete = A._distance_closure(e, budget_factor=1)
-    assert not complete and d.count() == 7
+    assert not complete and d.count() == 7  # the seed, untouched
 
 
 def test_mass_verdict_routes_both_ways_across_threshold(spark, monkeypatch):
@@ -279,15 +294,15 @@ def test_mass_verdict_routes_both_ways_across_threshold(spark, monkeypatch):
 
     # 0.64× of budget: the verdict routes to the ATTEMPT, which runs
     # squarings and completes the closure (36 pairs ≤ 56 budget)
-    closure, complete = A._shortcut_closure(e, budget_factor=7)
-    assert complete and closure.count() == 36
+    d, complete = A._distance_closure(e, budget_factor=7)
+    assert complete and d.count() == 36
     assert squarings["n"] > 0, "attempt route must run the squaring loop"
 
     # 0.75× of budget: the verdict routes to the SKIP — incomplete,
     # seed frame untouched, zero squarings
     squarings["n"] = 0
-    closure, complete = A._shortcut_closure(e, budget_factor=6)
-    assert not complete and closure.count() == 8
+    d, complete = A._distance_closure(e, budget_factor=6)
+    assert not complete and d.count() == 8
     assert squarings["n"] == 0, "skip route must not run a single squaring"
 
 
@@ -315,52 +330,72 @@ def test_scc_trim_peels_acyclic_fringe(spark):
             assert r["id"] == r["scc"]
 
 
-def test_peel_mass_check_routes_easy_residual_to_closure(spark, monkeypatch):
-    """Round 9: a residual ABOVE the node-count cutoff whose estimated
-    closure mass fits the budget takes the closure-direct finish —
-    pinned by making any FB fixpoint an error. Graph: two disjoint
-    3-cycles (6 nodes > cutoff 1, closure mass 18 ≪ budget)."""
+def test_peel_residual_within_driver_edges_finishes_on_driver(
+        spark, monkeypatch):
+    """A peel residual whose edge frame fits ``driver_edges`` is
+    labelled on the driver — pinned by making any FB fixpoint an error.
+    Graph: two disjoint 3-cycles, which trim cannot shrink (6 edges)."""
     import graphview_spark.algorithms as A
 
-    monkeypatch.setattr(A, "_SCC_FINISH_NODES", 1)
-
     def boom(*a, **k):
-        raise AssertionError("FB fixpoint ran despite fitting mass")
+        raise AssertionError("FB fixpoint ran on a residual that fits")
 
     monkeypatch.setattr(A, "_propagate_fb", boom)
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4)],
         "src long, sink long")
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
-    got = {r["id"]: r["scc"] for r in A._scc_peel(nodes, e).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    for driver_edges in (None, 6):
+        got = {r["id"]: r["scc"] for r in A._scc_peel(
+            nodes, e, driver_edges=driver_edges).collect()}
+        assert got == want, driver_edges
 
 
-def test_peel_finish_nodes_zero_keeps_fb_leg(spark, monkeypatch):
-    """finish_nodes=0 (the oracle-gated FB fixture contract) must keep
-    the mass check OFF: the FB fixpoint leg runs."""
+def _scc_both_ways(spark, fb_calls, edges, n):
+    """Labels and FB round count with driver_edges=0, then the default
+    path's labels, which must run no FB round."""
     import graphview_spark.algorithms as A
 
-    ran = {"fb": False}
-    orig = A._propagate_fb
+    e = spark.createDataFrame(edges, "src long, sink long")
+    nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
+    fb_calls["n"] = 0
+    got = {r["id"]: r["scc"] for r in A.strongly_connected_components(
+        nodes, e, driver_edges=0).collect()}
+    rounds = fb_calls["n"]
+    fb_calls["n"] = 0
+    drv = {r["id"]: r["scc"] for r in A.strongly_connected_components(
+        nodes, e).collect()}
+    assert fb_calls["n"] == 0
+    return got, rounds, drv
 
-    def spy(*a, **k):
-        ran["fb"] = True
-        return orig(*a, **k)
 
-    monkeypatch.setattr(A, "_propagate_fb", spy)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1)], "src long, sink long")
-    nodes = spark.createDataFrame([(i,) for i in range(1, 4)], "id long")
-    got = {r["id"]: r["scc"]
-           for r in A._scc_peel(nodes, e, finish_nodes=0).collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
-    assert ran["fb"]
+def test_peel_driver_edges_zero_keeps_fb_leg(spark, fb_calls):
+    """driver_edges=0 (the oracle-gated peel fixture's contract) keeps
+    the FB fixpoint leg: a 3-cycle, which trim cannot shrink, takes one
+    FB round, and the labels equal the driver path's."""
+    got, rounds, drv = _scc_both_ways(
+        spark, fb_calls, [(1, 2), (2, 3), (3, 1)], 3)
+    assert got == drv == {1: 1, 2: 1, 3: 1}
+    assert rounds == 1
+
+
+def test_peel_bridged_cycles_take_two_fb_rounds(spark, fb_calls):
+    """Two 2-cycles joined by a bridge: with driver_edges=0 round 1
+    peels one cycle and round 2 the other, so exactly two FB rounds
+    run, and the labels equal the driver path's."""
+    got, rounds, drv = _scc_both_ways(
+        spark, fb_calls, [(1, 2), (2, 1), (3, 4), (4, 3), (2, 3)], 4)
+    assert got == drv == {1: 1, 2: 1, 3: 3, 4: 3}
+    assert rounds == 2
 
 
 def test_scc_full_results_unchanged_by_trim_and_finish(spark):
-    """End-to-end SCC on a graph exercising trim + peel + the
-    closure-direct residual finish, vs hand-computed components."""
+    """End-to-end SCC vs hand-computed components on every route: the
+    driver labelling (default), trim + FB peel only (driver_edges=0),
+    and trim + one FB round + the driver finish of the residual
+    (driver_edges=5: the 9 edges and the 6 left after trim do not fit,
+    the class-restricted residual does)."""
     from graphview_spark.algorithms import strongly_connected_components
 
     edges = [
@@ -372,10 +407,11 @@ def test_scc_full_results_unchanged_by_trim_and_finish(spark):
     ]
     e = spark.createDataFrame(edges, "src long, sink long")
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "id long")
-    # budget_factor=1 forces the peel path on this cyclic graph
-    got = {r["id"]: r["scc"] for r in strongly_connected_components(
-        nodes, e, budget_factor=1).collect()}
-    assert got == {1: 1, 2: 2, 3: 3, 4: 3, 5: 3, 6: 6, 7: 6, 8: 8}
+    want = {1: 1, 2: 2, 3: 3, 4: 3, 5: 3, 6: 6, 7: 6, 8: 8}
+    for driver_edges in (None, 0, 5):
+        got = {r["id"]: r["scc"] for r in strongly_connected_components(
+            nodes, e, driver_edges=driver_edges).collect()}
+        assert got == want, driver_edges
 
 
 def test_mass_estimate_driver_path_matches_distributed(spark, monkeypatch):
@@ -384,7 +420,10 @@ def test_mass_estimate_driver_path_matches_distributed(spark, monkeypatch):
     dominated the sf1 strategy verdicts — 60 s of graph_scc's 128 s).
     The gate must never change the VERDICT, only where it is computed:
     both paths must return the same float on every family and budget,
-    including inf aborts and the k>1 hash-sampled regime."""
+    including inf aborts, the k>1 hash-sampled regime and null
+    endpoints (which must not chain the driver BFS through None). The
+    driver path also needs abort_at, its pair-set bound, within
+    _MASS_DRIVER_EDGES."""
     import graphview_spark.algorithms as A
 
     hub = [(0, i) for i in range(1, 600)]  # shallow, n_src big enough
@@ -396,6 +435,8 @@ def test_mass_estimate_driver_path_matches_distributed(spark, monkeypatch):
         "self_loop": [(7, 7)],
         "deep_chain": [(i, i + 1) for i in range(1, 200)],  # inf: depth
         "hub_sampled_k_gt_1": hub,
+        "null_endpoints": [(1, 2), (2, None), (None, 3), (2, 3), (3, 1),
+                           (None, None), (4, None), (None, 1)],
     }
     for name, edges in fams.items():
         e = spark.createDataFrame(edges, "src long, sink long")
@@ -406,35 +447,56 @@ def test_mass_estimate_driver_path_matches_distributed(spark, monkeypatch):
             dist = A._closure_mass_estimate(e, budget=budget)
             assert drv == dist, (name, budget, drv, dist)
 
+    # abort_at above the bound: the 6 edges fit, yet the BFS may not
+    # hold its pair sets on the driver — the distributed loop runs
+    calls = {"n": 0}
+    orig = A._mass_bfs_driver
 
-def test_scc_peel_verdict_recheck_fires_only_on_shrink(spark, monkeypatch):
-    """Round 13: _scc_peel_rounds re-consults the closure-mass verdict
-    after a round whose class restriction shrank the edge frame to
-    ≤ _SCC_RECHECK_SHRINK × the count at the last DOOMED verdict, and
-    only then. Two 2-cycles joined by a bridge peel in two FB rounds;
-    round 1's restriction drops the bridge and the peeled cycle's
-    edges (5 → 2 ≤ 0.8×5), so round 2 re-checks — exactly two verdict
-    calls with the re-check on, exactly one with it disabled, and the
-    labels identical either way."""
+    def spy(*a, **k):
+        calls["n"] += 1
+        return orig(*a, **k)
+
+    monkeypatch.setattr(A, "_mass_bfs_driver", spy)
+    monkeypatch.setattr(A, "_MASS_DRIVER_EDGES", 6)
+    e = spark.createDataFrame(fams["chain_shortcut_cycle"],
+                              "src long, sink long")
+    # all 5 srcs are seeds: abort_at = 2·budget
+    assert A._closure_mass_estimate(e, budget=10**6) == 10.0
+    assert calls["n"] == 0
+    assert A._closure_mass_estimate(e, budget=1) == float("inf")
+    assert calls["n"] == 1  # abort_at = 2 ≤ 6: the driver path
+
+
+def test_scc_driver_labels_long_cycle(spark):
+    """A 200k-node single cycle is one SCC on the driver path: the
+    Tarjan walk is iterative, so a 200k-deep DFS hits no recursion
+    limit."""
     import graphview_spark.algorithms as A
 
-    calls = {"n": 0}
+    n = 200_000
+    nodes = spark.range(n).select(F.col("id"))
+    e = spark.range(n).select(F.col("id").alias("src"),
+                              ((F.col("id") + 1) % n).alias("sink"))
+    out = A.strongly_connected_components(nodes, e)
+    row = out.agg(F.count(F.lit(1)), F.countDistinct("scc"),
+                  F.max("scc")).first()
+    assert tuple(row) == (n, 1, 0)
 
-    def spy(e, budget, **kw):
-        calls["n"] += 1
-        return True  # always doomed → pure FB peel
 
-    monkeypatch.setattr(A, "_closure_mass_doomed", spy)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 1), (3, 4), (4, 3), (2, 3)], "src long, sink long")
-    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "id long")
-    out = A._scc_peel(nodes, e, finish_nodes=1)
-    labels = {r["id"]: r["scc"] for r in out.collect()}
-    assert labels == {1: 1, 2: 1, 3: 3, 4: 3}
-    assert calls["n"] == 2, "shrink must trigger exactly one re-check"
+def test_scc_driver_gate_boundary(spark, monkeypatch, fb_calls):
+    """The driver bound is inclusive: an n-edge frame runs the FB peel
+    when _MASS_DRIVER_EDGES is n−1 and is labelled on the driver,
+    without one FB fixpoint, when it is n."""
+    import graphview_spark.algorithms as A
 
-    calls["n"] = 0
-    monkeypatch.setattr(A, "_SCC_RECHECK_SHRINK", 0.0)
-    out = A._scc_peel(nodes, e, finish_nodes=1)
-    assert {r["id"]: r["scc"] for r in out.collect()} == labels
-    assert calls["n"] == 1, "disabled re-check must check exactly once"
+    edges = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4)]
+    e = spark.createDataFrame(edges, "src long, sink long")
+    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
+    want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    for bound, fb_runs in ((len(edges) - 1, True), (len(edges), False)):
+        monkeypatch.setattr(A, "_MASS_DRIVER_EDGES", bound)
+        fb_calls["n"] = 0
+        got = {r["id"]: r["scc"] for r in A.strongly_connected_components(
+            nodes, e).collect()}
+        assert got == want, bound
+        assert (fb_calls["n"] > 0) == fb_runs, bound

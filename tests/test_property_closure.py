@@ -1,12 +1,12 @@
-"""Property-based tests for the path-doubling closure operators —
-the seminaive delta composition's exactness argument (path splitting:
-only last-round-fresh pairs compose) is the subtlest invariant in
-algorithms.py, so it gets randomized adversarial coverage against a
-brute-force Python reachability/shortest-distance reference."""
+"""Property-based tests for the path-doubling distance closure — the
+seminaive delta composition's exactness argument (path splitting: only
+last-round-fresh pairs compose) is the subtlest invariant in
+algorithms.py — and for the SCC strategies, against brute-force Python
+reachability/shortest-distance references."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 edges_strategy = st.lists(
@@ -45,19 +45,6 @@ def _brute_closure(edges):
 
 @given(edges_strategy)
 @prop_settings
-def test_shortcut_closure_matches_bruteforce(spark, raw_edges):
-    from graphview_spark.algorithms import _shortcut_closure
-
-    edges = sorted(set(raw_edges))
-    ref_reach, _ = _brute_closure(edges)
-    e = spark.createDataFrame(edges, "src long, sink long")
-    got, complete = _shortcut_closure(e, budget_factor=10 ** 6)
-    assert complete
-    assert {(r["src"], r["sink"]) for r in got.collect()} == ref_reach
-
-
-@given(edges_strategy)
-@prop_settings
 def test_distance_closure_matches_bruteforce(spark, raw_edges):
     from graphview_spark.algorithms import _distance_closure
 
@@ -71,31 +58,42 @@ def test_distance_closure_matches_bruteforce(spark, raw_edges):
     } == ref_dist
 
 
-@given(edges_strategy)
-@prop_settings
-def test_scc_matches_bruteforce(spark, raw_edges):
-    """End-to-end SCC (either strategy — the tiny budget_factor pushes
-    dense examples onto the peel path) vs mutual-reach reference."""
-    from graphview_spark.algorithms import strongly_connected_components
+endpoint = st.one_of(st.none(), st.integers(min_value=0, max_value=11))
 
-    edges = sorted(set(raw_edges))
-    ref_reach, _ = _brute_closure(edges)
-    nodes = sorted({x for e in edges for x in e})
+
+@given(
+    st.sets(st.integers(min_value=0, max_value=9)),
+    st.lists(st.tuples(endpoint, endpoint), max_size=25),
+)
+@example({1, 2, 3}, [(1, 0), (0, 1), (2, 3), (3, 2), (3, None), (None, 3)])
+@example(set(range(5)), [])
+@prop_settings
+def test_scc_matches_bruteforce(spark, node_set, raw_edges):
+    """Both SCC strategies — the driver Tarjan (default) and the
+    distributed trim + FW-BW peel (driver_edges=0) — must equal the
+    brute-force mutual-reach labels of the subgraph ``nodes`` induces,
+    on graphs with self-loops, duplicate edges, null endpoints,
+    endpoints outside ``nodes``, isolated nodes and empty edge frames.
+    The first example is the one on which the old closure path labelled
+    node 1 with 0, an id outside ``nodes``."""
+    import graphview_spark.algorithms as A
+
+    nodes = sorted(node_set)
+    induced = [(s, t) for s, t in raw_edges
+               if s in node_set and t in node_set]
+    ref_reach, _ = _brute_closure(induced) if induced else (set(), {})
     ref_scc = {
-        a: min(
-            [a] + [b for b in nodes
-                   if (a, b) in ref_reach and (b, a) in ref_reach]
-        )
+        a: min([a] + [b for b in nodes
+                      if (a, b) in ref_reach and (b, a) in ref_reach])
         for a in nodes
     }
     ndf = spark.createDataFrame([(n,) for n in nodes], "id long")
-    e = spark.createDataFrame(edges, "src long, sink long")
-    got = {
-        r["id"]: r["scc"]
-        for r in strongly_connected_components(ndf, e, budget_factor=2)
-        .collect()
-    }
-    assert got == ref_scc
+    e = spark.createDataFrame(raw_edges, "src long, sink long")
+    for driver_edges in (None, 0):
+        got = A.strongly_connected_components(
+            ndf, e, driver_edges=driver_edges).collect()
+        assert len(got) == len(nodes), driver_edges
+        assert {r["id"]: r["scc"] for r in got} == ref_scc, driver_edges
 
 
 @given(edges_strategy)
@@ -137,37 +135,6 @@ def test_probe_next_mass_matches_bruteforce(spark, raw_edges, fresh_bits):
     nxt |= {(a, t) for a, b in delta for s, t in pairs if s == b}
     nxt |= {(a, t) for a, b in pairs for s, t in delta if s == b}
     assert _probe_next_mass(g, mod=1) == len(nxt)
-
-
-@given(edges_strategy)
-@prop_settings
-def test_scc_matches_bruteforce_via_mass_estimate_path(spark, raw_edges):
-    """End-to-end SCC with the round-9 mass pre-estimate FORCED ON for
-    every graph (threshold 1): whichever strategy the estimate routes
-    to, the labels must match the mutual-reach reference. (mock.patch
-    context, not the monkeypatch fixture — hypothesis forbids
-    function-scoped fixtures under @given.)"""
-    from unittest import mock
-
-    import graphview_spark.algorithms as A
-
-    edges = sorted(set(raw_edges))
-    ref_reach, _ = _brute_closure(edges)
-    nodes = sorted({x for e in edges for x in e})
-    ref_scc = {
-        a: min([a] + [b for b in nodes
-                      if (a, b) in ref_reach and (b, a) in ref_reach])
-        for a in nodes
-    }
-    ndf = spark.createDataFrame([(n,) for n in nodes], "id long")
-    e = spark.createDataFrame(edges, "src long, sink long")
-    with mock.patch.object(A, "_MASS_ESTIMATE_MIN_EDGES", 1):
-        got = {
-            r["id"]: r["scc"]
-            for r in A.strongly_connected_components(
-                ndf, e, budget_factor=2).collect()
-        }
-    assert got == ref_scc
 
 
 def _brute_brandes(edges, seeds):

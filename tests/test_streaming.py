@@ -568,3 +568,44 @@ def test_replay_input_smaller_than_slice_count(spark, sf_dir):
     ).select(*cols)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, three.collect()))
+
+
+def test_replay_one_file_per_slice_under_max_records_per_file(spark, sf_dir):
+    """A session-wide spark.sql.files.maxRecordsPerFile would split each
+    slice into many files sharing one pinned mtime (ADVICE r13); the
+    slice writer overrides it, so every b<k> directory holds exactly
+    one data file and the drained replay still equals its input."""
+    import glob
+    import tempfile
+
+    from graphview_spark.streaming.events import build_dedup
+    from graphview_spark.streaming.replay import (
+        REPLAY_SLICES,
+        REPLAY_WATERMARK,
+        _replay_through_engine,
+    )
+
+    cols = ["event_id", "user_id", "event_type", "ts", "value"]
+    ev = read_table(spark, sf_dir, "events").select(*cols).orderBy(
+        "ts", "event_id").limit(10 * REPLAY_SLICES).localCheckpoint(
+            eager=True)
+    label = "one_file_per_slice"
+    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        got = _replay_through_engine(
+            spark, ev, lambda s: build_dedup(s, within=REPLAY_WATERMARK),
+            label,
+        ).select(*cols)
+        rows = sorted(map(tuple, got.collect()))
+    finally:
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
+    app = spark.sparkContext.applicationId
+    base = max(glob.glob(os.path.join(
+        tempfile.gettempdir(), "gv_stream_replay", app, label, "*")),
+        key=os.path.getmtime)
+    for b in range(1, REPLAY_SLICES + 1):
+        data = [f for f in os.listdir(os.path.join(base, f"b{b}"))
+                if f.endswith(".parquet") and not f.startswith(".")]
+        assert len(data) == 1, (b, data)
+    assert rows == sorted(map(tuple, ev.collect()))

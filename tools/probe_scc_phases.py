@@ -1,6 +1,6 @@
-"""Phase breakdown for graph_scc at a given SF dir: wraps the
-strategy verdict, trim, FB fixpoint and closure helpers with timers so
-the 65 s sf1 reading decomposes into named phases.
+"""Phase breakdown for graph_scc at a given SF dir: wraps the edge
+collect, driver labelling, trim, peel rounds and FB fixpoint helpers
+with timers so a reading decomposes into named phases.
 
 Usage: python tools/probe_scc_phases.py /root/repo/.testdata/sf1
 """
@@ -34,11 +34,9 @@ def wrap(name: str):
 def main() -> None:
     sf_dir = sys.argv[1]
     spark = get_spark("probe-scc")
-    for n in ("_closure_mass_doomed", "_closure_mass_estimate",
-              "_scc_trim", "_scc_peel_rounds", "_shortcut_closure",
-              "_propagate_fb", "_scc_peel", "_scc_from_closure"):
-        if hasattr(A, n):
-            wrap(n)
+    for n in ("_collect_edges", "_scc_labels", "_scc_on_driver",
+              "_scc_trim", "_scc_peel_rounds", "_propagate_fb", "_scc_peel"):
+        wrap(n)
     t0 = time.time()
     n = A.q_graph_scc(spark, sf_dir).count()
     total = time.time() - t0
