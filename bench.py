@@ -186,28 +186,10 @@ def main() -> None:
     qs["dedup_pair_build"] = _q_pair_build
     qs["dedup_embed_build"] = _q_embed_build
 
-    # Same artifact discipline for the Refers distance closure: built
-    # ONCE per app and shared by graph_closeness + graph_betweenness
-    # (algorithms._REFERS_CLOSURE_CACHE), so the build is timed as its
-    # own entry (cache cleared each run) and the consumers as their
-    # INCREMENTAL cost on top of it.
-    from graphview_spark import algorithms as _alg
-    from graphview_spark.graph_queries import tpch_graph as _tpch
-
-    def _clear_closure(spark, sf_dir):
-        _alg._REFERS_CLOSURE_CACHE.clear()
-
-    def _q_closure_build(spark, sf_dir):
-        D, _ = _alg._cached_refers_closure(
-            spark, sf_dir, _tpch(spark, sf_dir))
-        return D
-
-    qs["graph_closure_build"] = _q_closure_build
     pre_run = {
         "dedup_signatures": _clear_all,
         "dedup_pair_build": _clear_pairs,
         "dedup_ngram_jaccard": _clear_pairs,
-        "graph_closure_build": _clear_closure,
         "dedup_embed_build": _clear_embed,
     }
     # Canonical artifact-family order, roster-rotation-proof: builders
@@ -227,9 +209,6 @@ def main() -> None:
                     default=len(names))
         names = [n for n in names if n not in fam]
         names[first:first] = fam
-    j = (names.index("graph_closeness")
-         if "graph_closeness" in names else len(names))
-    names.insert(j, "graph_closure_build")
     # embed-corpus builder runs cold immediately before its first
     # consumer (builder-before-consumer, same as dedup_pair_build)
     emb_consumers = [i for i, n in enumerate(names)

@@ -43,10 +43,6 @@ def _ckpt_lazy(df: DataFrame) -> DataFrame:
 # (see _loop_regime); above it they defer to the session defaults + AQE.
 _LOOP_SMALL_ROWS = 50_000_000
 _LOOP_ROWS_PER_PARTITION = 100_000
-# Delta frames below this row count are broadcast into the closure
-# compose joins (a few MB of (src, sink) longs), so the big side never
-# shuffles for the join; above it the join falls back to shuffle-hash.
-_LOOP_BCAST_ROWS = 1_000_000
 
 
 @contextmanager
@@ -78,8 +74,8 @@ def _loop_regime(spark):
     authors: the regime only governs actions EXECUTED inside the
     context — a lazily-checkpointed frame that escapes materializes
     under the restored session conf, so materialize any frame whose
-    shuffle shape matters (e.g. the closure handed to the per-app
-    cache) with an eager action BEFORE the context exits."""
+    shuffle shape matters with an eager action BEFORE the context
+    exits."""
     conf = spark.conf
     prev_aqe = conf.get("spark.sql.adaptive.enabled")
     prev_parts = conf.get("spark.sql.shuffle.partitions")
@@ -90,7 +86,8 @@ def _loop_regime(spark):
             conf.set("spark.sql.shuffle.partitions", prev_parts)
             return
         # floor of 8: fewer leaves cores idle on the shuffle-heavy
-        # rounds (measured ~15% slower at 4 on the sf0.1 closure loop)
+        # rounds (measured ~15% slower at 4 on the sf0.1 distance
+        # closure loop this regime was tuned on)
         parts = max(8, min(int(prev_parts),
                            n_rows // _LOOP_ROWS_PER_PARTITION + 1))
         conf.set("spark.sql.adaptive.enabled", "false")
@@ -1365,7 +1362,7 @@ ORACLES.update({
 })
 # --------------------------------------------------------------------------
 # Strongly connected components. An induced edge frame within
-# _MASS_DRIVER_EDGES rows is collected once and labelled exactly on the
+# _DRIVER_EDGES rows is collected once and labelled exactly on the
 # driver (iterative Tarjan). Larger frames run GraphX-style trim + pivot
 # coloring (the same structure as org.apache.spark.graphx.lib.Strongly
 # ConnectedComponents — trim DAG fringes, then peel SCCs by forward/
@@ -1379,68 +1376,15 @@ ORACLES.update({
 _SCC_PROBE_EVERY = 4   # propagation rounds between convergence probes
 
 
-# compose-size guard slack: the predicted enumeration count is an
-# upper bound (duplicates collapse in the groupBy; round 0 double-
-# counts its single compose), so the guard must only fire on the
-# CATASTROPHIC class — a squaring gone quadratic (dense graph: ratio
-# in the thousands) — never on legitimate closure rounds. Measured on
-# the Refers+back-edge family: the biggest round that still completes
-# within budget predicts 8.9× (sf0.1), the first budget-tripping round
-# 18× (sf1, 39 s — bounded, and the materialized check catches it); a
-# true quadratic blowup at that node count predicts ~4000×. 64 sits
-# an order of magnitude above the legitimate band and two below the
-# disaster band.
-_PREDICT_SLACK = 64
-# ... and the guard only runs at all once the frame is big enough for
-# a blowup round to be catastrophic: the prediction costs a fixed
-# ~0.35 s/round of stage scheduling (measured 40% of graph_scc's
-# sf0.1 wall time), while below this row count even a severely
-# super-budget round is seconds, already bounded by the materialized
-# check one round later. Above it, the pred job is amortized by the
-# round's real data work.
-_PREDICT_MIN_ROWS = 2_000_000
-# Doomed-trajectory bail (VERDICT r8 "What's wrong #2"): the
-# materialized budget check sees a blowup only AFTER paying the
-# squaring that produced it — at sf1 that final doomed squaring alone
-# cost ~39 s of the SCC wall. Growth-rate extrapolation ALONE cannot
-# decide (measured on the Refers+back-edge family: the sf0.1 closure
-# holds grow ≈ 2.1 for every round and then converges at 0.77× budget
-# in ONE final collapse, while sf1 holds grow ≈ 2.2-2.4 and crosses to
-# 1.12× budget — the same local trajectory, opposite outcomes). So the
-# extrapolation is only the TRIGGER: when mass is still growing ≥
-# _DOOMED_GROWTH, one more such round would cross the budget, and the
-# frame is big enough for a wasted squaring to hurt (_PREDICT_MIN_ROWS),
-# the loop buys certainty with _probe_next_mass — an src-sampled dry
-# run of the next compose costing ~1/_PROBE_MOD of the squaring it
-# predicts — and bails only when the estimated post-dedup output
-# actually crosses the budget. A mis-bail costs the exact
-# bounded-memory fallback, never correctness.
-_DOOMED_GROWTH = 1.5
-_PROBE_MOD = 16
-
-
-# Closure-mass pre-estimate (round 9): even with the next-mass probe,
-# a doomed attempt pays every under-budget squaring before the bail —
-# at sf1 rounds 0-3 alone cost ~4 minutes on this host. Above this
-# edge count, the distance closure first spends a sampled multi-seed BFS
-# (~depth jobs over ≤2×budget×(seeds/srcs) sampled settled rows — tens
-# of seconds) to estimate the FINISHED closure's mass and skip the
-# attempt outright when it cannot fit. Below it the attempt itself is
-# seconds and the estimate would be pure overhead (the sf0.1 gate
-# graphs stay under this). Trade named: a legitimately-fitting big
-# closure (the sf1 Refers tree for closeness) pays the estimate's BFS
-# once before its attempt — linear cost to dodge a quadratic trap.
-_MASS_ESTIMATE_MIN_EDGES = 100_000
-_MASS_SEEDS = 256
-# the one bound on edge frames collected to the driver (_collect_edges):
+# The one bound on edge frames collected to the driver (_collect_edges):
 # at or below it, SCCs are labelled on the driver (top level and the
-# peel's residual finish), and the mass-estimate BFS runs there when its
-# abort_at pair bound also fits (see _closure_mass_estimate). Kept equal
-# to _LOOP_BCAST_ROWS — a frame small enough to ship to every executor
-# as a broadcast is small enough for one driver copy (measured on a
-# 4-CPU host: 1M random edges label in 1.5–2.3 s at a ≤ 350 MiB process
-# peak) — but a separate knob so tests can force either path
-_MASS_DRIVER_EDGES = 1_000_000
+# peel's residual finish), and closeness and betweenness run one BFS per
+# seed there (scaled down for more than CLOSENESS_SEEDS seeds, see
+# _driver_bfs). A frame that ships to every executor as a broadcast is
+# small enough for one driver copy (measured on a 4-CPU host: 1M random
+# edges label in 1.5–2.3 s at a ≤ 350 MiB process peak); tests lower it
+# to force the distributed path
+_DRIVER_EDGES = 1_000_000
 
 
 def _collect_edges(e: DataFrame, bound: int):
@@ -1452,340 +1396,6 @@ def _collect_edges(e: DataFrame, bound: int):
     if t.num_rows > bound:
         return None
     return t.column("src").to_numpy(), t.column("sink").to_numpy()
-
-
-def _mass_bfs_driver(src, sink, seed_ids, n_src: int, abort_at: float,
-                     max_depth: int) -> float:
-    """Exact driver-side transcription of _closure_mass_estimate's
-    distributed two-hop loop over the collected (src, sink) arrays
-    (null endpoints already dropped): same seeds (selected in Spark by
-    the same xxhash64 filter), same pair-granularity exits, same
-    cycle-pair correction, same returned float — only the substrate
-    differs (Python sets instead of per-hop Spark jobs). The pair sets
-    stay under ``abort_at`` + seeds, which the caller bounds by
-    _MASS_DRIVER_EDGES. Keep the two in lockstep: the gate must never
-    change the verdict, only where it is computed."""
-    adj: dict = {}
-    for s, t in zip(src.tolist(), sink.tolist()):
-        adj.setdefault(s, set()).add(t)
-    n_seeds = len(seed_ids)
-    settled = {(s, s) for s in seed_ids}
-    frontier = settled
-    mass = 0
-
-    def _hop(fr, st):
-        return {(s, t) for (s, i) in fr for t in adj.get(i, ())} - st
-
-    for _ in range(max(1, max_depth // 2)):
-        nxt1 = _hop(frontier, settled)
-        settled1 = settled | nxt1
-        nxt2 = _hop(nxt1, settled1)
-        c1, c2 = len(nxt1), len(nxt2)
-        if c1 == 0 or c2 == 0:
-            done = settled if c1 == 0 else settled1
-            cyc = len({s for (s, i) in done if s in adj.get(i, ())})
-            return (mass + c1 + cyc) / n_seeds * n_src
-        mass += c1 + c2
-        if mass > abort_at:
-            return float("inf")
-        settled = settled1 | nxt2
-        frontier = nxt2
-    return float("inf")
-
-
-# Asymmetric skip threshold (round 9, calibrated on measured cases):
-# per-seed reach is heavy-tailed — a handful of deep srcs carry much
-# of the closure mass — so the sampled mean carries real variance at
-# ANY affordable seed count, and because the sampling hash is
-# deterministic a bad draw is a fixed bias, not a re-rollable one
-# (measured: sf1 true ≥1.12× budget estimated 1.10× at 256 seeds but
-# 0.60× at 4096 — the "refinement" flipped a correct skip into a 58s
-# doomed attempt; sf3 true ≈1.0× estimated 0.39×/0.65×/1.02× at
-# 256/1024/8192). The decision costs are asymmetric: a wrong ATTEMPT
-# is probe-bounded but grows with scale (sf1 58s, sf3 385s), while a
-# wrong SKIP pays the bounded-linear peel. So the verdict is a single
-# 256-seed pass compared against a FRACTION of the budget — estimates
-# in the noise band around the boundary route to the safe side.
-# 0.7 keeps every measured legitimate closure attempting (sf1
-# closeness tree: 0.48×) and every measured doomed one skipping
-# (sf1 SCC: 1.10×); sf3's flukish 0.39× under-read still attempts and
-# pays the bounded wrong-guess cost — no threshold fixes an estimate
-# that far off without breaking the legitimate band.
-_MASS_SKIP_FRACTION = 0.7
-
-
-def _closure_mass_doomed(e: DataFrame, budget: int,
-                         n_edges: int | None = None) -> bool:
-    """True when the finished closure's estimated mass cannot fit
-    ``budget`` — the strategy verdict the distance closure consults.
-
-    Round 10: the verdict is the MAX of two ~256-seed estimates of the
-    same quantity — closure mass = Σ_src |reach(src)| (forward BFS over
-    sampled srcs) = Σ_sink |ancestors(sink)| (the same BFS over the
-    edge-reversed frame) — because the two marginals are rarely
-    heavy-tailed together. On the deep-tree calibration family the
-    forward per-seed reach is dominated by a handful of near-root srcs
-    a 256-seed sample usually misses (sf3 read 0.39× of true mass),
-    while the reverse per-seed mass is the bounded ancestor chain —
-    light-tailed, so the sampled mean is tight. Degree-stratified
-    seeding (the other candidate fix) has no signal to stratify on
-    here: the calibration family's out-degree is capped at 3 (tree
-    fanout 2 + one back-edge) and is uncorrelated with reach — see
-    PLANS.md. Taking the max biases the verdict toward SKIP, cutting
-    exactly the under-read failure mode (a wrong attempt is
-    probe-bounded but grows with scale: 58 s at sf1, 385 s at sf3)
-    while a wrong skip pays the bounded-linear fallback by design.
-    The reverse pass is short-circuited whenever the forward estimate
-    alone already crosses the threshold (the sf1 SCC case pays one
-    pass, as before).
-
-    Round 11 — the adversarial BOTH-tails-heavy bound (VERDICT r10
-    "Next #7", measured via tools/calibrate_mass.py's ``hubbridge``
-    family: H rare source hubs → shared bridge chain → H rare sink
-    hubs, padded with reach-1 bulk pairs, so each marginal is heavy
-    ONLY at nodes the other pass cannot rescue): max(fwd, rev) reads
-    ~0.47× of true there — the documented residual under-read. It is
-    structurally bounded: a closure pair hides from the forward pass
-    only if its SOURCE sits in the hash-unsampled heavy set, and from
-    the reverse pass only if its SINK does too, so doubly-hidden mass
-    ≤ |S_f|·|S_r| where a set of size s evades a 1/k hash sample with
-    probability ~e^(−s/k) — at 95% confidence |S| ≲ 3·n_src/SEEDS.
-    The verdict can therefore flip only when (3·n_src/256)² exceeds
-    the ~0.7·32·|E| skip margin, i.e. n_src² ≳ 1.6e5·|E| — 2.7× above
-    the densest tested rung (sf3: n=60k, E≈60k → n² = 3.6e9 vs margin
-    9.7e9) and farther at every smaller one. Past that scale the
-    verdict may under-read, and the protection reverts to the in-loop
-    guards, which bound a wrong attempt's cost by construction: the
-    verdict is a cost optimization, never the only guard.
-
-    Round 12 — that residual claim is now MEASURED, not arithmetic
-    (VERDICT r11 "Next #7", tools/calibrate_mass.py ``hubflip``: hubs
-    placed adversarially on hash-unsampled ids, realizing the
-    |S_f|·|S_r| worst case past the bound). Both wrong-attempt regimes
-    flip the verdict (max reads 0.03× while true mass is 7.6× / 228×
-    budget) and both are bounded: at 278k edges (pred guard disengaged
-    below _PREDICT_MIN_ROWS) the attempt pays exactly ONE over-budget
-    compose — 129 s, same class as the measured sf3 385 s — before the
-    materialized budget trips; at 2.36M edges the compose-size
-    prediction bails BEFORE paying the 17-billion-pair compose, 8.4 s
-    total. Numbers in SCALECHECK.md round-12."""
-    thresh = _MASS_SKIP_FRACTION * budget
-    if _closure_mass_estimate(e, budget, n_edges=n_edges) > thresh:
-        return True
-    rev = e.select(F.col("sink").alias("src"), F.col("src").alias("sink"))
-    return _closure_mass_estimate(rev, budget, n_edges=n_edges) > thresh
-
-
-def _closure_mass_estimate(e: DataFrame, budget: int,
-                           max_depth: int = 64,
-                           sample_target: int | None = None,
-                           n_edges: int | None = None) -> float:
-    """Estimated reach-pair count of the FINISHED closure, from a BFS
-    over a deterministic hash-sample of ~_MASS_SEEDS source nodes:
-    mass ≈ n_src × mean per-seed reach. The per-seed reach is computed
-    EXACTLY (full frontier expansion per sampled seed), so the only
-    error is the seed marginal's sampling noise; the decision this
-    feeds is safe in both directions (a mis-skip costs the exact
-    bounded-memory fallback, a mis-attempt is still caught by the
-    budget and next-mass-probe guards inside the loop).
-
-    Cycle self-pairs count (ADVICE r9 #3): the closure frame the budget
-    measures contains (s, s) for every node on a cycle, but the BFS
-    seeds ``settled`` with the seed's own id so a re-reach of the seed
-    is anti-joined away. On the complete exit one extra join counts the
-    sampled seeds some settled node points back to, and adds one pair
-    each — at k=1 the estimate now equals the finished frame's count
-    exactly, cycles included.
-
-    Early-aborts with +inf as soon as the SAMPLED settled mass crosses
-    2× its budget-equivalent share — so on hub graphs whose reach sets
-    are the whole graph the estimate never expands them, and its work
-    is bounded by ~2×budget×(seeds/srcs) rows regardless of density.
-    Returns +inf too when the frontier outlives ``max_depth``: a graph
-    that deep has closure mass ≥ V·depth/2, past any sane budget."""
-    # null endpoints never join in the distributed loop; dropping them
-    # here keeps the driver BFS from chaining through None (ADVICE r13)
-    e = e.select("src", "sink").dropna()
-    srcs = e.select("src").distinct().transform(_ckpt_lazy)
-    n_src = srcs.count()
-    if n_src == 0:
-        return 0.0
-    k = max(1, n_src // (sample_target or _MASS_SEEDS))
-    seeds = srcs.filter(F.pmod(F.xxhash64("src"), F.lit(k)) == 0)
-    seed_ids = [r[0] for r in seeds.collect()]
-    if not seed_ids:  # hash skew emptied the sample: nothing to learn
-        return 0.0
-    n_seeds = len(seed_ids)
-    abort_at = 2.0 * budget * n_seeds / n_src
-
-    # Round 13 (VERDICT r12 "Next #5"): at sf1 the strategy verdicts
-    # cost 60 s of a 128 s cold SCC run — the BFS frontiers are
-    # abort_at-bounded (~10⁴ rows) and every hop pays the per-job
-    # scheduling floor, not data. When both the edge frame and the
-    # abort_at bound on the driver's pair sets fit _MASS_DRIVER_EDGES,
-    # collect the edges once and run the identical sampled BFS in plain
-    # sets: 3 tiny jobs instead of 2 + 2·⌈depth/2⌉. Seed selection still
-    # happens IN SPARK (the xxhash64 sample must match the distributed
-    # path bit-for-bit), and _mass_bfs_driver transcribes the
-    # pair-granularity loop below exactly — both paths return the same
-    # float for the same frame (property-tested both ways in
-    # tests/test_loop_scale_guards.py). Otherwise the distributed loop
-    # runs unchanged.
-    bound = _MASS_DRIVER_EDGES
-    if abort_at <= bound and (n_edges is None or n_edges <= bound):
-        collected = _collect_edges(e, bound)
-        if collected is not None:
-            return _mass_bfs_driver(*collected, seed_ids, n_src, abort_at,
-                                    max_depth)
-
-    settled = seeds.select(F.col("src").alias("s"),
-                           F.col("src").alias("id"))
-    frontier = settled
-    mass = 0
-
-    # Both loop frames are bounded BY CONSTRUCTION: the frontier was
-    # counted ≤ abort_at at the previous pair's check (else the inf
-    # exit fired) and settled ≤ seeds + abort_at for the same reason —
-    # so when that bound clears the loop-broadcast gate, the expansion
-    # join broadcasts the frontier (e never shuffles) and the
-    # anti-join broadcasts the settled set: one shuffle per hop (the
-    # distinct) instead of three. Same measured-bound discipline as
-    # _distance_closure's delta broadcast.
-    bcast_ok = abort_at + n_seeds <= _LOOP_BCAST_ROWS
-
-    def _hop(fr, st):
-        if bcast_ok:
-            fr, st = F.broadcast(fr), F.broadcast(st)
-        return (
-            fr.join(e, fr["id"] == e["src"])
-            .select("s", F.col("sink").alias("id"))
-            .distinct()
-            .join(st, ["s", "id"], "left_anti")
-            .transform(_ckpt_lazy)
-        )
-
-    # TWO BFS hops per Spark action (round 13, VERDICT r12 "Next #5"):
-    # at estimate scale the frontier frames are tiny (bounded by
-    # abort_at rows), so the verdict's wall time is mostly per-job
-    # scheduling floor × hop count. The fused pair shares one
-    # materializing count: hop 1 is a lazy localCheckpoint (LogicalRDD
-    # — both its consumers, hop 2 and the tagged count, read the one
-    # persisted copy), and a single groupBy-tag aggregate returns both
-    # frontier sizes. Mass accumulation, exits and the cycle-pair
-    # correction are value-identical to the one-hop loop (the abort
-    # fires at pair granularity — one bounded hop later, same
-    # verdict). Measured: graph_scc sf0.1 6.6 → 3.5 s min-of-3
-    # worktree A/B (its peel consults the verdict at every rung);
-    # at sf1 the hops are no longer pure floor and the fusion is
-    # noise-neutral there — the driver path above is what removes the
-    # sf1 cost; this loop serves frames past _MASS_DRIVER_EDGES.
-    for _ in range(max(1, max_depth // 2)):
-        nxt1 = _hop(frontier, settled)
-        settled1 = settled.unionByName(nxt1)
-        nxt2 = _hop(nxt1, settled1)
-        counts = dict(
-            nxt1.select(F.lit(1).alias("_h"))
-            .unionByName(nxt2.select(F.lit(2).alias("_h")))
-            .groupBy("_h").agg(F.count(F.lit(1)).alias("_c"))
-            .collect()
-        )
-        c1, c2 = counts.get(1, 0), counts.get(2, 0)
-        if c1 == 0 or c2 == 0:
-            done = settled if c1 == 0 else settled1
-            cyc = (
-                done.join(e, done["id"] == e["src"])
-                .filter(F.col("sink") == F.col("s"))
-                .select("s").distinct().count()
-            )
-            return (mass + c1 + cyc) / n_seeds * n_src
-        mass += c1 + c2
-        if mass > abort_at:
-            return float("inf")
-        settled = settled1.unionByName(nxt2)
-        frontier = nxt2
-    return float("inf")
-
-
-def _probe_next_mass(g: DataFrame, mod: int = _PROBE_MOD) -> int:
-    """Unbiased estimate of the NEXT squaring's post-dedup pair count.
-
-    Both seminaive compose terms emit the LEFT side's src as the output
-    src, so the next round's output rows for a fixed src depend only on
-    that src's rows (left) and the FULL frame (right). Restricting the
-    left side to a 1/mod hash sample of src values therefore computes
-    the per-src output EXACTLY; scaling the distinct count by mod gives
-    an estimator of the full output whose only error is the src
-    marginal's sampling noise (~10k sampled srcs at the scales that
-    trigger it). Cost ≈ 1/mod of the squaring it predicts — the probe
-    pays seconds to decide whether to pay minutes."""
-    samp = g.filter(F.pmod(F.xxhash64(F.col("src")), F.lit(mod)) == 0)
-    delta = g.filter(F.col("fresh") == 1)
-    comp = (
-        samp.filter(F.col("fresh") == 1).alias("a")
-        .join(g.alias("b"), F.col("a.sink") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.sink").alias("sink"))
-        .unionByName(
-            samp.alias("a")
-            .join(delta.alias("b"), F.col("a.sink") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"),
-                    F.col("b.sink").alias("sink"))
-        )
-    )
-    u = samp.select("src", "sink").unionByName(comp)
-    return u.distinct().count() * mod
-
-
-def _pred_if_big(frame: DataFrame, n: int,
-                 delta_is_all: bool = False) -> int:
-    """The compose-size prediction, gated on frame size (see
-    _PREDICT_MIN_ROWS): 0 — guard disengaged — below the threshold,
-    else one count-table job over ``frame``."""
-    if n < _PREDICT_MIN_ROWS:
-        return 0
-    return _compose_pred(frame, delta_is_all).first()["_pred"]
-
-
-def _compose_pred(frame: DataFrame, delta_is_all: bool = False) -> DataFrame:
-    """1-row ``(_pred long)``: upper bound on the rows the NEXT
-    seminaive compose will enumerate — Σ_mid |delta·sink=mid| ×
-    |all·src=mid| (plus the symmetric all∘delta term), computed from
-    per-mid COUNT tables only, never the pairs themselves. ONE explode
-    + ONE groupBy + ONE agg (two shuffle stages of integer counts),
-    and only consulted at all above _PREDICT_MIN_ROWS via
-    ``_pred_if_big`` — below that the fixed ~0.35 s/round of stage
-    scheduling would dominate the loops it protects (measured 40% of
-    graph_scc's sf0.1 wall time when it rode every probe).
-
-    Why it exists (sf1 scale evidence, round 8): the materialized-size
-    budget checks |G| AFTER a squaring — but the squaring join itself
-    can jump from under-budget to billions of enumerated rows inside
-    one round (Refers tree + back-edges at 150k nodes: >30 min, 40 GB
-    heap). Predicting the enumeration from count tables lets the
-    closure bail to the bounded-memory fallback BEFORE paying it."""
-    fresh = (F.lit(1) if delta_is_all else F.col("fresh")).cast("long")
-    both = frame.select(
-        F.explode(F.array(
-            F.struct(F.col("src").alias("m"), F.lit(1).alias("o"),
-                     fresh.alias("fr")),
-            F.struct(F.col("sink").alias("m"), F.lit(0).alias("o"),
-                     fresh.alias("fr")),
-        )).alias("x")
-    ).select("x.m", "x.o", "x.fr")
-    per_mid = both.groupBy("m").agg(
-        F.sum("o").alias("out_all"),
-        F.sum(1 - F.col("o")).alias("in_all"),
-        F.sum(F.col("o") * F.col("fr")).alias("out_fresh"),
-        F.sum((1 - F.col("o")) * F.col("fr")).alias("in_fresh"),
-    )
-    # delta∘g pairs through mid = in_fresh·out_all; g∘delta = in_all·
-    # out_fresh (the seed round's single compose is the first term —
-    # delta_is_all makes them equal, so halve)
-    term = (F.col("in_fresh") * F.col("out_all")
-            + F.col("in_all") * F.col("out_fresh"))
-    if delta_is_all:
-        term = F.col("in_all") * F.col("out_all")
-    return per_mid.agg(
-        F.coalesce(F.sum(term), F.lit(0)).alias("_pred"))
 
 
 def _propagate_fb(lab: DataFrame, e: DataFrame,
@@ -1871,7 +1481,8 @@ def strongly_connected_components(
     answer and no label names an id outside ``nodes``.
 
     One measured size picks the strategy (``driver_edges``, default
-    _MASS_DRIVER_EDGES; 0 forces the distributed path):
+    _DRIVER_EDGES, the bound closeness and betweenness share; 0 forces
+    the distributed path):
 
     - **Driver (preferred):** an induced edge frame of at most
       ``driver_edges`` rows is collected ONCE — the size check and the
@@ -1886,7 +1497,7 @@ def strongly_connected_components(
       StronglyConnectedComponents. The peel hands its residual to the
       driver labelling as soon as the residual edge frame fits
       ``driver_edges``."""
-    bound = _MASS_DRIVER_EDGES if driver_edges is None else driver_edges
+    bound = _DRIVER_EDGES if driver_edges is None else driver_edges
     ids = nodes.select("id")
     # the lazy checkpoint materializes inside the first action (the
     # collect, else the trim's count), so the peel never recomputes the
@@ -2012,7 +1623,7 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
     Each round peels at least every class's min-hash pivot, so the
     peel always progresses. Hashed pivot order keeps monotone-id
     graphs from degrading to one SCC per round. Once the residual edge
-    frame fits ``driver_edges`` (default _MASS_DRIVER_EDGES; 0 never)
+    frame fits ``driver_edges`` (default _DRIVER_EDGES; 0 never)
     the remainder is labelled on the driver. Labels are then
     canonicalized to the component minimum so both strategies return
     identical frames.
@@ -2033,7 +1644,7 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
         remaining, e = _scc_trim(remaining, e, parts, size_shuffle)
         _scc_peel_rounds(
             remaining, e, parts, max_rounds, size_shuffle,
-            _MASS_DRIVER_EDGES if driver_edges is None else driver_edges)
+            _DRIVER_EDGES if driver_edges is None else driver_edges)
     if not parts:
         return nodes.sparkSession.createDataFrame(
             [], "id long, scc long")
@@ -2167,174 +1778,13 @@ def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
     raise RuntimeError(f"SCC did not converge in {max_rounds} rounds")
 
 
-def _distance_closure(e: DataFrame, budget_factor: int = 32,
-                      max_squarings: int = 12,
-                      materialize: bool = False
-                      ) -> tuple[DataFrame, bool]:
-    """Min-plus path-doubling: D ← min(D, D∘D) with dist summed along
-    the composition — k squarings give exact shortest distances for
-    paths up to 2^k edges, fixpoint = all-pairs shortest distances.
-    Each squaring is one self-join + groupBy, so the closure costs
-    O(log diameter) driver-synchronized jobs, versus one job per hop
-    for message-round BFS (the dominant cost on deep graphs: per-job
-    overhead, not data volume). The budget guard stops when the pair
-    set exceeds ``budget_factor``×|E|: near-DAG closures (referral
-    trees) are O(V·depth) and fit; dense graphs are quadratic and must
-    use per-source frontier BFS instead. Fixpoint test compares (pair
-    count, total distance) — both monotone, so equality means no pair
-    appeared and no distance improved. Returns ((src, sink, dist),
-    complete); self-pairs excluded from the seed so dist ≥ 1 (cycles
-    may introduce them later; they carry the true cycle length).
-
-    Two per-round cost cuts:
-
-    - **Seminaive delta composition.** Only pairs whose distance
-      appeared or improved last round (``fresh``) compose:
-      D ∪ delta∘D ∪ D∘delta. Exact by path splitting — a shortest path
-      of length ≤ 2^(k+1) splits into two halves of length ≤ 2^k; at
-      the round after the LATER half's final value arrives, the earlier
-      half is present and the later is fresh, so the composition
-      derives the pair. The fixpoint-confirming round composes an empty
-      delta, so it is nearly free.
-    - **Probe rides the squaring job.** The checkpoint is non-eager and
-      the count/fresh-sum probe is the action that materializes it:
-      one Spark job per squaring, not two.
-
-    Runs under _loop_regime; ``materialize=True`` eager-checkpoints the
-    result BEFORE the regime exits, so a closure that outlives the call
-    (the per-app cache) materializes under the loop's shuffle shape,
-    not the restored session conf (the _loop_regime escape caveat)."""
-    def _finish(frame, complete):
-        out = frame.select("src", "sink", "dist")
-        if materialize and complete:
-            out = out.transform(_ckpt_eager)
-        return out, complete
-
-    with _loop_regime(e.sparkSession) as size_shuffle:
-        # seed covers dist ≤ 2 exactly (min over the 1-hop ∪ 2-hop
-        # union): the first squaring rides the seed materialization.
-        # The edge dedup runs under the SESSION regime (the input may
-        # be arbitrarily large); its count sizes the loop regime.
-        d0 = (
-            e.select("src", "sink").distinct()
-            .select("src", "sink", F.lit(1).cast("long").alias("dist"))
-            .transform(_ckpt_lazy)
-        )
-        n_e = d0.agg(F.count(F.lit(1))).first()[0]
-        budget = budget_factor * max(n_e, 1)
-        if (n_e >= _MASS_ESTIMATE_MIN_EDGES
-                and _closure_mass_doomed(d0, budget, n_edges=n_e)):
-            # sampled-BFS mass estimate: the finished distance closure
-            # cannot fit — skip the attempt (see _closure_mass_doomed)
-            return _finish(d0, False)
-        if _pred_if_big(d0, n_e, delta_is_all=True) > _PREDICT_SLACK * budget:
-            # even the dist≤2 seed fold would enumerate a blowup —
-            # bail to the bounded-memory per-seed path with dist≤1
-            return _finish(d0, False)
-        size_shuffle(n_e)
-        # hint only the join's build side (hinting d0 itself would dangle
-        # on the union below and log a hint error)
-        d0b = F.broadcast(d0) if n_e < _LOOP_BCAST_ROWS else d0
-        two0 = (
-            d0b.alias("a")
-            .join(d0.alias("b"), F.col("a.sink") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"),
-                    F.col("b.sink").alias("sink"),
-                    (F.col("a.dist") + F.col("b.dist")).alias("dist"))
-        )
-        d = (
-            d0.unionByName(two0)
-            .groupBy("src", "sink").agg(F.min("dist").alias("dist"))
-            .withColumn("fresh", F.lit(1))
-            .transform(_ckpt_lazy)
-        )
-        n = d.agg(F.count(F.lit(1))).first()[0]
-        pred = _pred_if_big(d, n)
-        n_delta = n
-        # budget on the RAW distinct-edge count (ADVICE r6 #2: basing
-        # it on the post-dist≤2-fold row count silently ~doubled the
-        # effective budget, tripping the bounded-memory fallback later
-        # than budget_factor advertises); set above the seed fold
-        for i in range(max_squarings):
-            if pred > _PREDICT_SLACK * budget:
-                # next compose would enumerate a blowup before the
-                # materialized budget could see it (see _compose_pred)
-                return _finish(d, False)
-            size_shuffle(n)
-            delta = d.filter(F.col("fresh") == 1)
-            if n_delta < _LOOP_BCAST_ROWS:
-                delta = F.broadcast(delta)
-            compose = [
-                delta.alias("a")
-                .join(d.alias("b"), F.col("a.sink") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"),
-                        F.col("b.sink").alias("sink"),
-                        (F.col("a.dist") + F.col("b.dist")).alias("dist")),
-            ]
-            if i > 0:  # round 1: delta == d, one composition covers both
-                compose.append(
-                    d.alias("a")
-                    .join(delta.alias("b"), F.col("a.sink") == F.col("b.src"))
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.sink").alias("sink"),
-                            (F.col("a.dist") + F.col("b.dist")).alias("dist"))
-                )
-            two = compose[0]
-            for c in compose[1:]:
-                two = two.unionByName(c)
-            d2 = (
-                d.select("src", "sink", "dist", F.col("dist").alias("_old"))
-                .unionByName(two.select(
-                    "src", "sink", "dist",
-                    F.lit(None).cast("long").alias("_old")
-                ))
-                .groupBy("src", "sink")
-                .agg(F.min("dist").alias("dist"), F.min("_old").alias("_old"))
-                .select(
-                    "src", "sink", "dist",
-                    F.when(
-                        F.col("_old").isNull()
-                        | (F.col("dist") < F.col("_old")), 1
-                    ).otherwise(0).alias("fresh"),
-                )
-                .transform(_ckpt_lazy)
-            )
-            row = d2.agg(F.count(F.lit(1)), F.sum("fresh")).first()
-            n2, n_fresh = row[0], row[1]
-            # n_fresh is NULL (None) on an empty frame — an edge-free
-            # input — and an empty closure IS converged (ADVICE r8)
-            if n2 == 0 or not n_fresh:
-                return _finish(d, True)
-            pred = _pred_if_big(d2, n2)
-            grow = n2 / max(n, 1)
-            d, n, n_delta = d2, n2, n_fresh
-            if n > budget:
-                return _finish(d, False)
-            if (n >= _PREDICT_MIN_ROWS and grow >= _DOOMED_GROWTH
-                    and n * grow > budget
-                    and _probe_next_mass(d) > budget):
-                # the sampled dry run of the next squaring says its
-                # output crosses the budget — bail before paying it
-                return _finish(d, False)
-        return _finish(d, False)
-
-
 CLOSENESS_SEEDS = 8
-# BFS horizon for the closeness budget-trip fallback (ADVICE r8 #2):
-# multi_source_distances fails LOUD past its horizon (a silent cut
-# would under-report sum_dist for every seed that reaches beyond it),
-# so the closeness query threads a horizon deep enough for any graph
-# the budget-tripped closure could plausibly hand it. 240 hops ≈ 4× the
-# default BFS horizon; a Refers chain deeper than that raises with the
-# instruction to raise this constant rather than return wrong sums.
+# BFS horizon of the closeness and betweenness queries: both legs fail
+# LOUD past it (a silent cut would under-report sum_dist and δ for every
+# seed that reaches beyond it). 240 hops ≈ 4× the default horizon; a
+# Refers chain deeper than that raises with the instruction to raise
+# this constant rather than return wrong sums.
 CLOSENESS_MAX_DEPTH = 240
-
-
-# (app, sf_dir) → (distance-closure frame, complete) for the Refers
-# graph — closeness AND betweenness consume the identical closure, so
-# it is built once per app and shared, the same session-artifact
-# discipline as the MinHash signature cache (operators/dedup.py).
-_REFERS_CLOSURE_CACHE: dict[tuple[str, str], tuple[DataFrame, bool]] = {}
 
 
 def _refers_edges(g):
@@ -2351,94 +1801,163 @@ def _refers_edges(g):
     )
 
 
-def _cached_refers_closure(spark, sf_dir: str, g) -> tuple[DataFrame, bool]:
-    from graphview_spark.plans import lazy as _lazy
+def _bfs_on_driver(src, sink, seeds, max_depth: int):
+    """Brandes from each seed over the collected (src, sink) arrays
+    (null endpoints already dropped; duplicate edges count once, as in
+    multi_source_levels). Per seed, a level-synchronous BFS over a
+    numpy CSR carries hop distance and σ (shortest-path count); a
+    reverse sweep over the recorded levels accumulates δ. Returns
+    ``(n_reach, sum_dist, ids, bt)``: per-seed reach and total hop
+    distance, aligned with ``seeds`` (0 for a seed without edges), and
+    Σ_s δ_s(v) for every node id in ``ids``. Raises, like the
+    distributed leg, when a seed's BFS is still live after
+    ``max_depth`` levels — which also bounds the fixed per-level numpy
+    cost on deep graphs (measured ≈60 µs a level on a 4-CPU host: a
+    20k-deep chain from 8 seeds takes 9 s)."""
+    ids, inv = np.unique(np.concatenate([src, sink]), return_inverse=True)
+    n, m = len(ids), len(src)
+    pair = np.unique(inv[:m] * n + inv[m:])
+    adj = pair % max(n, 1)
+    start = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(pair // max(n, 1), minlength=n), out=start[1:])
+    pos = np.searchsorted(ids, seeds)
+    found = pos < n
+    found[found] = ids[pos[found]] == seeds[found]
+    n_reach = np.zeros(len(seeds), dtype=np.int64)
+    sum_dist = np.zeros(len(seeds), dtype=np.int64)
+    bt = np.zeros(n)
 
-    if _lazy.is_lazy():  # plan audit: full pipeline, no cache, no jobs
-        return _distance_closure(_refers_edges(g))
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    hit = _REFERS_CLOSURE_CACHE.get(ckey)
-    if hit is None:
-        from graphview_spark.session import evict_dead_app_entries
+    def _out(front):
+        """(out-degree, offset into the edge list, successors) of the
+        nodes in ``front``."""
+        lo = start[front]
+        cnt = start[front + 1] - lo
+        off = np.cumsum(cnt) - cnt
+        at = np.repeat(lo - off, cnt) + np.arange(off[-1] + cnt[-1])
+        return cnt, off, adj[at]
 
-        evict_dead_app_entries(_REFERS_CLOSURE_CACHE, ckey[0])
-        D, complete = _distance_closure(_refers_edges(g), materialize=True)
-        hit = (D, complete)
-        _REFERS_CLOSURE_CACHE[ckey] = hit
-    return hit
+    for k in np.flatnonzero(found):
+        dist = np.full(n, -1, dtype=np.int64)
+        sigma = np.zeros(n)
+        delta = np.zeros(n)
+        front = pos[k:k + 1]
+        dist[front] = 0
+        sigma[front] = 1.0
+        levels = [front]
+        while True:
+            cnt, _, w = _out(front)
+            new = dist[w] < 0
+            if not new.any():
+                break
+            if len(levels) == max_depth:
+                raise ValueError(
+                    f"_bfs_on_driver: BFS frontier still live after "
+                    f"max_depth={max_depth} levels — the graph is deeper "
+                    "than the horizon; raise max_depth")
+            w, via = w[new], np.repeat(sigma[front], cnt)[new]
+            front = np.unique(w)
+            dist[front] = len(levels)
+            np.add.at(sigma, w, via)
+            levels.append(front)
+        n_reach[k] = sum(len(lvl) for lvl in levels) - 1
+        sum_dist[k] = sum(d * len(lvl) for d, lvl in enumerate(levels))
+        # δ(v) = σ_v · Σ_{w: v→w, dist w = dist v + 1} (1 + δ_w) / σ_w;
+        # the deepest level keeps δ = 0 and the seed's own δ is not
+        # counted
+        for d in range(len(levels) - 2, -1, -1):
+            front = levels[d]
+            cnt, off, w = _out(front)
+            # every successor of a reached node is reached: σ_w > 0
+            part = np.where(dist[w] == d + 1,
+                            (1.0 + delta[w]) / sigma[w], 0.0)
+            has = cnt > 0
+            delta[front[has]] = (sigma[front[has]]
+                                 * np.add.reduceat(part, off[has]))
+            if d:
+                bt[front] += delta[front]
+    return n_reach, sum_dist, ids, bt
+
+
+def _driver_bfs(seeds: DataFrame, edges: DataFrame, driver_edges,
+                max_depth: int):
+    """The closeness/betweenness size gate: ``(seed ids, *_bfs_on_driver
+    result)`` when n_seeds × |E| ≤ CLOSENESS_SEEDS × the driver bound
+    (``driver_edges``, default _DRIVER_EDGES; 0 never), else None. A
+    seed's BFS is linear in the edges it reaches (plus a fixed cost per
+    level, at most ``max_depth`` levels), so the product bounds driver
+    time as well as memory. Two ``limit``ed actions: the
+    distinct non-null seed ids (at most CLOSENESS_SEEDS × bound of
+    them), then the edge frame under the bound the seed count leaves."""
+    bound = _DRIVER_EDGES if driver_edges is None else driver_edges
+    if not bound:
+        return None
+    cap = CLOSENESS_SEEDS * bound
+    s = (seeds.select(seeds.columns[0]).dropna().distinct()
+         .limit(cap + 1).toArrow().column(0))
+    if len(s) > cap:
+        return None
+    collected = _collect_edges(
+        edges, cap // max(len(s), CLOSENESS_SEEDS))
+    if collected is None:
+        return None
+    return (s, *_bfs_on_driver(*collected, s.to_numpy(), max_depth))
+
+
+def closeness(seeds: DataFrame, edges: DataFrame, max_depth: int = 60,
+              driver_edges: int | None = None) -> DataFrame:
+    """Seed-sampled closeness inputs over directed (src, sink) edges:
+    ``(s, n_reach, sum_dist)`` for every distinct non-null seed — the
+    number of nodes s reaches (itself excluded) and their total hop
+    distance; (0, 0) for a seed without out-edges. Null endpoints and
+    duplicate edges are ignored on both legs.
+
+    One measured size picks the leg (see _driver_bfs): within the
+    driver bound, the edges are collected once and each seed runs an
+    exact BFS on the driver; past it (or with ``driver_edges=0``) one
+    batched (seed, node)-keyed BFS runs in Spark
+    (multi_source_distances: job count = graph depth, independent of
+    seed count). Both legs raise when a seed reaches deeper than
+    ``max_depth`` hops, so the gate never changes the answer."""
+    got = _driver_bfs(seeds, edges, driver_edges, max_depth)
+    if got is not None:
+        s, n_reach, sum_dist, _, _ = got
+        return seeds.sparkSession.createDataFrame(pa.table(
+            {"s": s, "n_reach": n_reach, "sum_dist": sum_dist}))
+    sp = multi_source_distances(
+        seeds.select(F.col(seeds.columns[0]).alias("s")).dropna(), edges,
+        max_depth=max_depth)
+    return sp.groupBy("s").agg(
+        (F.count(F.lit(1)) - 1).alias("n_reach"),
+        F.sum("dist").alias("sum_dist"),
+    )
 
 
 def q_graph_closeness(spark, sf_dir: str) -> DataFrame:
-    """Closeness centrality for the first 8 customers over the Refers
-    tree: n_reach (reachable nodes), sum_dist (total hop distance) and
-    closeness = n_reach / sum_dist, computed from one min-plus
-    distance closure (exact shortest paths in O(log diameter) jobs,
-    edge-budget-guarded) instead of one BFS per seed. The ratio is
-    rounded with the integer round-half-up identity so both engines
-    agree at decimal halfway points. At 100 TB the standard posture is
-    the same: seed-sampled closeness over a distance table — built with
-    ONE batched (seed, node)-keyed BFS when the closure budget trips
-    (multi_source_distances: job count = graph depth, independent of
-    seed count; no per-seed driver loop)."""
+    """Closeness centrality for the customers with c_custkey ≤
+    CLOSENESS_SEEDS over the Refers tree: n_reach (reachable nodes),
+    sum_dist (total hop distance) and closeness = n_reach / sum_dist
+    (NULL when sum_dist = 0, mirrored by the oracle's CASE guard), from
+    ``closeness`` — one collect plus a driver BFS per seed through sf1,
+    else one batched BFS in Spark.
+    Every sampled seed emits a row, even with zero outgoing reach, so
+    the query is not silently coupled to the tree shape of the tested
+    data. The ratio is rounded with the integer round-half-up identity
+    so both engines agree at decimal halfway points."""
     from graphview_spark.graph_queries import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    nodes = g.nodes["Customer"]
-    key = nodes.select("GlobalNodeId", "c_custkey")
-    D, complete = _cached_refers_closure(spark, sf_dir, g)
-    if complete:
-        seed_rows = D.filter(F.col("src") <= CLOSENESS_SEEDS)
-    else:  # bounded-memory fallback: one batched multi-seed BFS
-        seed_ids = (
-            nodes.filter(F.col("c_custkey") <= CLOSENESS_SEEDS)
-            .select("GlobalNodeId")
-        )  # same seed set as the closure path's src <= CLOSENESS_SEEDS
-        sp = multi_source_distances(
-            seed_ids, g.edge_with_id("Customer.Refers"),
-            max_depth=CLOSENESS_MAX_DEPTH)
-        seed_rows = (
-            sp.filter(F.col("dist") > 0)
-            .join(key.select(F.col("GlobalNodeId").alias("s"),
-                             F.col("c_custkey").alias("src")), "s")
-            .join(key.select(F.col("GlobalNodeId").alias("id"),
-                             F.col("c_custkey").alias("sink")), "id")
-            .select(F.col("src").cast("long").alias("src"),
-                    F.col("sink").alias("sink"),
-                    F.col("dist").cast("long").alias("dist"))
-        )
-    # every sampled seed emits a row, even with zero outgoing reach
-    # (left join from the seed list; closeness NULL when sum_dist=0 —
-    # mirrored by the oracle's CASE guard), so the query is not
-    # silently coupled to the tree shape of the tested data
-    seeds = (
-        nodes.filter(F.col("c_custkey") <= CLOSENESS_SEEDS)
-        .select(F.col("c_custkey").cast("long").alias("src"))
-    )
-    agg = (
-        seeds.join(
-            seed_rows.groupBy("src").agg(
-                F.count(F.lit(1)).alias("n_reach"),
-                F.sum("dist").alias("sum_dist"),
-            ),
-            "src", "left",
-        )
-        .select(
-            "src",
-            F.coalesce(F.col("n_reach"), F.lit(0).cast("long"))
-            .alias("n_reach"),
-            F.coalesce(F.col("sum_dist"), F.lit(0).cast("long"))
-            .alias("sum_dist"),
-        )
-    )
+    seeds = g.nodes["Customer"].filter(
+        F.col("c_custkey") <= CLOSENESS_SEEDS).select("c_custkey")
+    agg = closeness(seeds, _refers_edges(g), max_depth=CLOSENESS_MAX_DEPTH)
     scale = 10 ** 6
-    closeness = F.when(
+    ratio = F.when(
         F.col("sum_dist") > 0,
         F.floor((2 * scale * F.col("n_reach") + F.col("sum_dist"))
                 / (2 * F.col("sum_dist"))) / F.lit(float(scale)),
     )
     return agg.select(
-        F.col("src").alias("c_custkey"), "n_reach", "sum_dist",
-        closeness.alias("closeness"),
+        F.col("s").alias("c_custkey"), "n_reach", "sum_dist",
+        ratio.alias("closeness"),
     )
 
 
@@ -2480,16 +1999,16 @@ def multi_source_levels(
     materialized lineage instead of re-scanning.
 
     Shared forward pass for ``brandes_betweenness`` AND the
-    bounded-memory closeness fallback (``multi_source_distances``) —
-    memory is bounded by the per-level frontier, not an all-pairs
-    closure. Raises if the frontier is still live after ``max_depth``
-    levels: a silent cut would undercount distances/δ for every node
-    beyond the horizon."""
+    distributed closeness leg (``multi_source_distances``) — memory is
+    bounded by the per-level frontier. Null endpoints are dropped, as
+    on the driver leg (_bfs_on_driver). Raises if the frontier is still
+    live after ``max_depth`` levels: a silent cut would undercount
+    distances/δ for every node beyond the horizon."""
     sid = seeds.columns[0]
     spark = seeds.sparkSession
     with _loop_regime(spark) as size_shuffle:
         edges = (
-            edges.select("src", "sink").distinct()
+            edges.select("src", "sink").dropna().distinct()
             .transform(_ckpt_eager)
         )
         size_shuffle(edges.count())
@@ -2535,10 +2054,8 @@ def multi_source_distances(
 ) -> DataFrame:
     """Hop distances from every seed as ONE batched (seed, node) BFS —
     (s, id, dist) for each reachable pair, dist 0 at the seed itself.
-    This is the bounded-memory leg closeness degrades to when the
-    distance-closure budget trips: job count is the graph depth, not
-    depth × seed count (the per-seed driver loop this replaced paid
-    full job-submission latency per seed)."""
+    This is the distributed leg of ``closeness``: job count is the
+    graph depth, not depth × seed count."""
     levels, _ = multi_source_levels(seeds, edges, max_depth=max_depth)
     out = levels[0].select("s", "id", F.lit(0).cast("long").alias("dist"))
     for d, lvl in enumerate(levels[1:], start=1):
@@ -2567,11 +2084,9 @@ def brandes_betweenness(
     source level excluded.
 
     Memory is bounded by the per-level frontier (≤ |seeds|·|V| rows
-    total across levels, in practice far less), NOT by the all-pairs
-    distance closure — this is the bounded-memory leg that
-    ``seed_betweenness`` degrades to when the closure budget trips,
-    mirroring q_graph_closeness's batched multi-seed-BFS fallback
-    (both ride ``multi_source_levels``). Reference
+    total across levels, in practice far less) — this is the
+    distributed leg of ``betweenness``, as multi_source_distances is
+    of ``closeness`` (both ride ``multi_source_levels``). Reference
     analog: iterative computation via T-SQL WHILE loops is GraphView's
     advertised path for algorithms (/root/reference/README.md:16).
 
@@ -2579,12 +2094,12 @@ def brandes_betweenness(
     (src, sink) directed. Returns (v, betweenness double) for every v
     with δ > 0. On unique-shortest-path graphs every σ is 1 and each
     δ_s(v) is the integer count of targets behind v, so the result
-    coincides exactly with the closure pair count; on multi-path
+    coincides exactly with the through-node pair count; on multi-path
     graphs it is the σ-fractional centrality (property-tested against
     brute-force Brandes in tests/test_property_closure.py)."""
     spark = seeds.sparkSession
     # forward pass: shared batched multi-seed BFS (also the closeness
-    # fallback's distance engine); raises rather than silently
+    # distributed leg's distance engine); raises rather than silently
     # undercounting past max_depth
     levels, edges = multi_source_levels(seeds, edges, max_depth=max_depth)
     # reverse sweep: δ at the deepest level is 0; each shallower level
@@ -2632,139 +2147,43 @@ def brandes_betweenness(
     )
 
 
-def betweenness(
-    seeds: DataFrame, edges: DataFrame, variant: str = "brandes",
-    budget_factor: int = 32, max_depth: int = 60,
-) -> DataFrame:
-    """Public seed-sampled betweenness surface.
+def betweenness(seeds: DataFrame, edges: DataFrame, max_depth: int = 60,
+                driver_edges: int | None = None) -> DataFrame:
+    """Seed-sampled σ-weighted Brandes betweenness over directed
+    (src, sink) edges: ``(v, betweenness double)`` for every v with
+    Σ_s δ_s(v) > 0, sources s from the one-column ``seeds`` frame.
 
-    variant="brandes" (default): σ-weighted Brandes via batched
-    multi-seed BFS (``brandes_betweenness``) — (v, betweenness double).
-    variant="stress": pair-count through-node centrality from the
-    min-plus distance closure (``seed_betweenness``); when the closure
-    edge budget trips, degrades to the Brandes leg (documented there) —
-    (v, betweenness long). The gate queries use "stress" on graphs with
-    unique shortest paths, where the two variants coincide exactly."""
-    if variant == "brandes":
+    Same leg choice as ``closeness`` (see _driver_bfs): within the
+    driver bound, one exact Brandes pass per seed on the driver; past
+    it (or with ``driver_edges=0``) the batched multi-seed BFS in Spark
+    (``brandes_betweenness``). Both legs raise when a seed reaches
+    deeper than ``max_depth`` hops."""
+    got = _driver_bfs(seeds, edges, driver_edges, max_depth)
+    if got is None:
         return brandes_betweenness(seeds, edges, max_depth=max_depth)
-    if variant != "stress":
-        raise ValueError(f"unknown betweenness variant: {variant!r}")
-    D, complete = _distance_closure(edges, budget_factor=budget_factor)
-    return seed_betweenness(
-        D, seeds, budget_ok=complete, edges=edges, seeds=seeds,
-        max_depth=max_depth)
-
-
-def seed_betweenness(
-    d_all: DataFrame, seeds_pred, budget_ok: bool = True,
-    edges: DataFrame | None = None, seeds: DataFrame | None = None,
-    max_depth: int = 60,
-) -> DataFrame:
-    """Seed-sampled betweenness from a complete distance closure: node
-    v lies on a shortest s→t path iff dist(s,v) + dist(v,t) = dist(s,t)
-    (v ∉ {s, t}); count qualifying (s, t) pairs per v over sampled
-    sources s. On unique-shortest-path graphs (trees, forests of
-    referral/ownership edges — the shapes these queries derive) this IS
-    Brandes betweenness restricted to sampled sources; with multiple
-    shortest paths it counts each pair once per through-node (the
-    stress-indicator variant) rather than σ-fractionally — the
-    σ-weighted refinement needs per-pair path counts, which the closure
-    deliberately does not carry. ``betweenness(variant="brandes")`` is
-    the σ-weighted alternative.
-
-    ``seeds_pred`` is either a Column-predicate callable or a
-    one-column seed DataFrame (filtered via semi-join — no literal
-    predicate needed, no driver collect).
-
-    Bounded-memory fallback: when ``budget_ok`` is False (the closure
-    edge budget tripped, so ``d_all`` is incomplete and the pair count
-    would silently undercount), and ``edges``+``seeds`` are provided,
-    the computation degrades to ``brandes_betweenness`` — per-level
-    BFS memory instead of all-pairs closure memory, mirroring
-    q_graph_closeness's batched multi-seed-BFS fallback. The Brandes
-    result is
-    rounded to the closure path's long schema; on unique-shortest-path
-    graphs the values are identical integers, on multi-path graphs the
-    fallback reports the (rounded) σ-weighted centrality rather than
-    the stress pair count — the principled quantity, noted here so the
-    semantics switch is explicit.
-
-    Plan: two joins of the seed-filtered closure slice against the full
-    closure — (s,v) ⋈ᵥ (v,t) ⋈ₛ,ₜ (s,t) — then one count per v. Join
-    volume is Σᵥ reach_in_from_seeds(v)·reach_out(v), bounded by the
-    closure budget that produced ``d_all``."""
-    if not budget_ok:
-        if edges is None or seeds is None:
-            raise ValueError(
-                "seed_betweenness: the closure edge budget tripped and "
-                "no (edges, seeds) were provided for the bounded-memory "
-                "Brandes fallback — pass them, or rebuild the closure "
-                "with a larger budget_factor"
-            )
-        bt = brandes_betweenness(seeds, edges, max_depth=max_depth)
-        return bt.select(
-            "v", F.round("betweenness").cast("long").alias("betweenness"))
-
-    def _seed_slice(frame):
-        if callable(seeds_pred):
-            return frame.filter(seeds_pred(F.col("src")))
-        s = seeds_pred.select(
-            F.col(seeds_pred.columns[0]).alias("src")).distinct()
-        return frame.join(s, "src", "left_semi")
-
-    # (s, s, L) closure self-pairs — cycles introduce them — are NOT
-    # Brandes targets or through-nodes (its BFS settles the source at
-    # distance 0 and never revisits), so both seed slices exclude them;
-    # without this guard the stress count and the Brandes fallback
-    # disagree on cyclic graphs even with unique shortest paths.
-    no_self = F.col("sink") != F.col("src")
-    sv = _seed_slice(d_all).filter(no_self).select(
-        F.col("src").alias("s"), F.col("sink").alias("v"),
-        F.col("dist").alias("d1"),
-    )
-    st = _seed_slice(d_all).filter(no_self).select(
-        F.col("src").alias("s"), F.col("sink").alias("t"),
-        F.col("dist").alias("d"),
-    )
-    vt = d_all.select(
-        F.col("src").alias("v"), F.col("sink").alias("t"),
-        F.col("dist").alias("d2"),
-    )
-    through = (
-        sv.join(vt, "v")
-        .join(st, ["s", "t"])
-        .filter(F.col("d1") + F.col("d2") == F.col("d"))
-        .filter(F.col("v") != F.col("t"))  # v == s excluded above: d1 ≥ 1
-    )
-    return through.groupBy("v").agg(
-        F.count(F.lit(1)).alias("betweenness"))
+    *_, ids, bt = got
+    keep = bt > 0
+    return seeds.sparkSession.createDataFrame(pa.table(
+        {"v": ids[keep], "betweenness": bt[keep]}))
 
 
 def q_graph_betweenness(spark, sf_dir: str) -> DataFrame:
     """Betweenness for the Refers tree's interior nodes w.r.t. the
     CLOSENESS_SEEDS sampled sources — the remaining classic centrality
     (degree/closeness/PageRank/HITS/k-core live elsewhere in the
-    family). Reuses the same min-plus distance closure as
-    q_graph_closeness; paths in the tree are unique, so the count is
-    exact Brandes betweenness for the seed set (see seed_betweenness).
-    Output: every node on ≥1 seed-pair shortest path, with its pair
-    count."""
+    family). Paths in the tree are unique, so every σ is 1 and each
+    δ is the integer count of seed-pair shortest paths through the node
+    (the oracle's through-node pair count); rounded to long. Output:
+    every node on ≥1 seed-pair shortest path, with its pair count."""
     from graphview_spark.graph_queries import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    D, complete = _cached_refers_closure(spark, sf_dir, g)
-    edges = _refers_edges(g)
-    seeds = edges.select("src").filter(
-        F.col("src") <= CLOSENESS_SEEDS).distinct()
-    # ADVICE r9 #1: the Brandes fallback consumes the SAME
-    # budget-tripped Refers closure as closeness, so it needs the same
-    # deepened horizon — a 61-240-hop Refers chain must degrade loudly
-    # in NEITHER query, not just closeness.
-    bt = seed_betweenness(
-        D, lambda c: c <= CLOSENESS_SEEDS, budget_ok=complete,
-        edges=edges, seeds=seeds, max_depth=CLOSENESS_MAX_DEPTH)
+    seeds = g.nodes["Customer"].filter(
+        F.col("c_custkey") <= CLOSENESS_SEEDS).select("c_custkey")
+    bt = betweenness(seeds, _refers_edges(g), max_depth=CLOSENESS_MAX_DEPTH)
     return bt.select(
-        F.col("v").alias("c_custkey"), "betweenness",
+        F.col("v").alias("c_custkey"),
+        F.round("betweenness").cast("long").alias("betweenness"),
     )
 
 
@@ -2796,7 +2215,7 @@ def q_graph_scc(spark, sf_dir: str) -> DataFrame:
     direction) — the reversals thread mutual chains k ↔ 2k ↔ 4k…
     through the heap-shaped tree, so nontrivial SCCs exist at every
     scale. Output is label-agnostic (counts and sizes only). Through
-    sf1 (~180k directed edges) the edge frame fits _MASS_DRIVER_EDGES,
+    sf1 (~180k directed edges) the edge frame fits _DRIVER_EDGES,
     so the labelling is one collect plus a driver Tarjan;
     q_graph_scc_peel keeps the distributed trim + peel leg under its
     own oracle.
@@ -2952,18 +2371,18 @@ _BFS_BT_SEED_MAX = 9  # block 0 fully seeded + half of block 1: varied counts
 
 
 def q_graph_betweenness_bfs(spark, sf_dir: str) -> DataFrame:
-    """Drives the bounded-memory Brandes fallback of seed_betweenness
-    END-TO-END under an oracle — the leg q_graph_betweenness's Refers
-    tree never reaches because its closure fits the budget. Same
-    derived graph as q_graph_scc_peel (80 directed 6-cycles over
-    c_custkey ≤ 480): budget_factor=2 trips the min-plus closure at the
-    second squaring, so seed_betweenness degrades to the batched
-    multi-seed Brandes BFS (forward σ pass + reverse δ accumulation).
-    Directed cycles have UNIQUE shortest paths, so the σ-weighted
-    accumulation is integral and equals the closure pair count the
-    DuckDB oracle computes (depth-capped recursive closure + min-dist
-    fold). Seeds ≤ 9 leave block 1 partially seeded, so per-node counts
-    vary (1..10) rather than collapsing to one constant."""
+    """Drives the distributed Brandes leg of ``betweenness`` END-TO-END
+    under an oracle — the leg q_graph_betweenness never reaches because
+    its Refers edges fit the driver bound. Same derived graph as
+    q_graph_scc_peel (80 directed 6-cycles over c_custkey ≤ 480):
+    driver_edges=0 runs the batched multi-seed Brandes BFS (forward σ
+    pass + reverse δ accumulation), as q_graph_scc_peel does for the
+    peel. Directed cycles have UNIQUE shortest paths, so the σ-weighted
+    accumulation is integral (rounded to long) and equals the
+    through-node pair count the DuckDB oracle computes (depth-capped
+    recursive closure + min-dist fold). Seeds ≤ 9 leave block 1
+    partially seeded, so per-node counts vary (1..10) rather than
+    collapsing to one constant."""
     from graphview_spark.session import read_table
 
     cust = read_table(spark, sf_dir, "customer").select("c_custkey")
@@ -2979,10 +2398,11 @@ def q_graph_betweenness_bfs(spark, sf_dir: str) -> DataFrame:
     )
     seeds = cust.filter(F.col("c_custkey") <= _BFS_BT_SEED_MAX).select(
         F.col("c_custkey").alias("s"))
-    D, complete = _distance_closure(edges, budget_factor=2)
-    bt = seed_betweenness(
-        D, seeds, budget_ok=complete, edges=edges, seeds=seeds)
-    return bt.select(F.col("v").alias("c_custkey"), "betweenness")
+    bt = betweenness(seeds, edges, driver_edges=0)
+    return bt.select(
+        F.col("v").alias("c_custkey"),
+        F.round("betweenness").cast("long").alias("betweenness"),
+    )
 
 
 def _oracle_betweenness_bfs() -> str:

@@ -42,7 +42,7 @@ MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.5, "zh": 0.25}
 MIX_BUCKETS = 1000        # acceptance-hash granularity
 # Measured-size broadcast gate for the bigram LM's scored count table
 # (rows counted on the PINNED cb checkpoint, never an estimate — the
-# same discipline as algorithms._LOOP_BCAST_ROWS). 1M (prev, cur, nll)
+# same discipline as algorithms._DRIVER_EDGES). 1M (prev, cur, nll)
 # rows ≈ low hundreds of MB as a hash relation: safely under the 8 GB
 # broadcast cap, far above any corpus whose vocab² table should
 # shuffle instead.
@@ -726,7 +726,7 @@ def q_pipeline_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   13.8× cost at 10× data. The count table is bounded by vocab²,
     #   and cb is already pinned (an EAGER localCheckpoint), so its
     #   TRUE row count is one cheap job over materialized partitions —
-    #   the same measured-size gate as algorithms._LOOP_BCAST_ROWS,
+    #   the same measured-size gate as algorithms._DRIVER_EDGES,
     #   not an estimate and not a blanket hint. Below the gate the
     #   scored count table is broadcast (the corpus-sized stream never
     #   shuffles for the join, and the following doc_id aggregation is

@@ -12,6 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_memory() -> str:
+    """48g, or half the host's RAM when that is less: a max heap above
+    physical memory lets the JVM grow until the OS kills it (measured:
+    the test suite's JVM reached 15 GB RSS on a 16 GB host and was
+    OOM-killed) instead of collecting garbage and spilling checkpoint
+    blocks to disk."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf names
+        return "48g"
+    return f"{max(1, min(48, ram // 2 ** 31))}g"
+
 
 def get_spark(app_name: str = "graphview_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the session.
@@ -34,7 +49,8 @@ def get_spark(app_name: str = "graphview_spark", cpus: int | None = None) -> Spa
         # local mode = one JVM for driver AND executors; checkpoint
         # blocks from long query sweeps live here too, and storage
         # eviction churn shows up as late-sweep slowdowns at 24g
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # no data-locality to wait for in local mode (and for short OLAP
@@ -49,6 +65,12 @@ def get_spark(app_name: str = "graphview_spark", cpus: int | None = None) -> Spa
         # the driver's events.parquet stores ts as TIMESTAMP(NANOS); read as
         # long and convert (read_table) — Spark has no nanos timestamp type
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers (UDFs, applyInPandas*) unpickle functions that
+        # import this package by name: put its root on their PYTHONPATH
+        # so they resolve it whatever the process cwd (Spark merges this
+        # with the worker's own PYTHONPATH; by-value pickling would ship
+        # module globals, cached DataFrames included, into every UDF)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -93,8 +115,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
 
 def evict_dead_app_entries(cache: dict, app_id: str) -> None:
     """Drop cache entries whose key doesn't start with ``app_id`` — the
-    per-app artifact caches (signatures, pair graphs, closures, stat
-    rows) key on (applicationId, ...), and a long-lived process that
+    per-app artifact caches (signatures, pair graphs, stat rows) key
+    on (applicationId, ...), and a long-lived process that
     recreates SparkSessions would otherwise accumulate DataFrame
     references bound to stopped contexts (ADVICE r6 #5). Called on
     cache miss, so a new session never trusts — or retains — a dead

@@ -321,17 +321,6 @@ def test_scc_two_nested_cycles_share_component(spark):
     assert got[1] == got[2] == got[3] == got[4]
 
 
-def test_closure_loops_converge_on_empty_edges(spark):
-    """ADVICE r8 #1: an empty closure frame is CONVERGED, not a crash.
-    F.sum('fresh') is NULL on an empty frame; before the fix the next
-    iteration died comparing None < _LOOP_BCAST_ROWS. Reachable from
-    edge-free graphs."""
-    from graphview_spark.algorithms import _distance_closure
-
-    empty = spark.createDataFrame([], "src long, sink long")
-    d, complete = _distance_closure(empty)
-    assert complete and d.count() == 0
-
 
 def test_scc_edge_free_graph(spark):
     """Every node of an edge-free graph is its own singleton SCC, via
@@ -350,38 +339,18 @@ def test_scc_edge_free_graph(spark):
     assert got == want
 
 
-def test_distance_closure_exact(spark):
-    """Min-plus doubling gives exact shortest hop counts, including
-    through a shorter alternative path and around a cycle."""
-    from graphview_spark.algorithms import _distance_closure
 
-    edges = spark.createDataFrame(
-        # chain 1→2→3→4 plus shortcut 1→3; cycle 5→6→5
-        [(1, 2), (2, 3), (3, 4), (1, 3), (5, 6), (6, 5)],
-        "src long, sink long",
-    )
-    d, complete = _distance_closure(edges)
-    assert complete
-    got = {(r["src"], r["sink"]): r["dist"] for r in d.collect()}
-    assert got[(1, 2)] == 1 and got[(1, 3)] == 1  # shortcut wins
-    assert got[(1, 4)] == 2 and got[(2, 4)] == 2
-    assert got[(5, 6)] == 1 and got[(6, 5)] == 1
-    assert got[(5, 5)] == 2 and got[(6, 6)] == 2  # cycle self-distance
-    assert (4, 1) not in got
-
-
-def test_closeness_fallback_matches_closure(spark, sf_dir, monkeypatch):
-    """The batched multi-seed-BFS fallback (closure budget tripped)
-    must produce exactly the closure-direct result. The per-app closure
-    cache is cleared so the monkeypatched budget trip actually routes
-    the second run down the fallback leg."""
+def test_closeness_and_betweenness_legs_agree(spark, sf_dir, monkeypatch):
+    """On the sf fixture's Refers tree, q_graph_closeness and
+    q_graph_betweenness return the same rows from the batched
+    distributed BFS (driver bound 0) as from the default driver BFS."""
     import graphview_spark.algorithms as A
 
-    a = sorted(tuple(r) for r in A.q_graph_closeness(spark, sf_dir).collect())
-    monkeypatch.setattr(A, "_distance_closure", lambda e, **kw: (None, False))
-    monkeypatch.setattr(A, "_REFERS_CLOSURE_CACHE", {})
-    b = sorted(tuple(r) for r in A.q_graph_closeness(spark, sf_dir).collect())
-    assert a == b and len(a) > 0
+    qs = (A.q_graph_closeness, A.q_graph_betweenness)
+    drv = [sorted(map(tuple, q(spark, sf_dir).collect())) for q in qs]
+    monkeypatch.setattr(A, "_DRIVER_EDGES", 0)
+    dist = [sorted(map(tuple, q(spark, sf_dir).collect())) for q in qs]
+    assert drv == dist and all(drv)
 
 
 def test_multi_source_distances_batched(spark):

@@ -609,3 +609,32 @@ def test_replay_one_file_per_slice_under_max_records_per_file(spark, sf_dir):
                 if f.endswith(".parquet") and not f.startswith(".")]
         assert len(data) == 1, (b, data)
     assert rows == sorted(map(tuple, ev.collect()))
+
+
+def test_state_replay_workers_import_package_from_any_cwd(sf_dir, tmp_path):
+    """The applyInPandasWithState worker unpickles a state function that
+    imports graphview_spark by name. Started outside the repo with
+    PYTHONPATH unset — only the driver's sys.path knows the package — a
+    get_spark session must still let the worker resolve it."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from graphview_spark.session import get_spark\n"
+        "from graphview_spark.streaming.replay import q_stream_state_replay\n"
+        "spark = get_spark('import_cwd', cpus=2)\n"
+        f"n = len(q_stream_state_replay(spark, {sf_dir!r}).collect())\n"
+        "print('ROWS', n)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"  # a second JVM beside the suite's
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600)
+    assert "ModuleNotFoundError" not in out.stderr, out.stderr[-2000:]
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[-1].split()[1]) > 0, out.stdout

@@ -166,8 +166,9 @@ def audit(sf_dir: str) -> str:
         "  SF), var-length-path start_nodes (matching/paths.py —",
         "  caller-provided, unbounded), the decontam contaminated-id",
         "  list (pipeline.py — scales with contamination mass).",
-        "- Loop deltas in algorithms.py stay size-gated in code",
-        "  (`n_e < _LOOP_BCAST_ROWS`), not blanket-hinted.",
+        "- Loop frames in algorithms.py are never blanket-hinted: an",
+        "  edge frame small enough to ship is collected to the driver",
+        "  under the measured `_DRIVER_EDGES` bound instead.",
         "",
         "Accepted cost (round 8 honesty note, VERDICT r7 \"What's wrong",
         "#2\"): removing the cluster-table hint DID change",
