@@ -1801,7 +1801,7 @@ def _refers_edges(g):
     )
 
 
-def _bfs_on_driver(src, sink, seeds, max_depth: int):
+def _bfs_on_driver(src, sink, seeds, max_depth: int, brandes: bool = True):
     """Brandes from each seed over the collected (src, sink) arrays
     (null endpoints already dropped; duplicate edges count once, as in
     multi_source_levels). Per seed, a level-synchronous BFS over a
@@ -1809,7 +1809,9 @@ def _bfs_on_driver(src, sink, seeds, max_depth: int):
     reverse sweep over the recorded levels accumulates δ. Returns
     ``(n_reach, sum_dist, ids, bt)``: per-seed reach and total hop
     distance, aligned with ``seeds`` (0 for a seed without edges), and
-    Σ_s δ_s(v) for every node id in ``ids``. Raises, like the
+    Σ_s δ_s(v) for every node id in ``ids``; ``brandes=False`` runs the
+    forward levels only (no σ, no δ sweep: ``bt`` stays 0), all that
+    closeness reads. Raises, like the
     distributed leg, when a seed's BFS is still live after
     ``max_depth`` levels — which also bounds the fixed per-level numpy
     cost on deep graphs (measured ≈60 µs a level on a 4-CPU host: a
@@ -1854,13 +1856,16 @@ def _bfs_on_driver(src, sink, seeds, max_depth: int):
                     f"_bfs_on_driver: BFS frontier still live after "
                     f"max_depth={max_depth} levels — the graph is deeper "
                     "than the horizon; raise max_depth")
-            w, via = w[new], np.repeat(sigma[front], cnt)[new]
+            w = w[new]
+            if brandes:
+                np.add.at(sigma, w, np.repeat(sigma[front], cnt)[new])
             front = np.unique(w)
             dist[front] = len(levels)
-            np.add.at(sigma, w, via)
             levels.append(front)
         n_reach[k] = sum(len(lvl) for lvl in levels) - 1
         sum_dist[k] = sum(d * len(lvl) for d, lvl in enumerate(levels))
+        if not brandes:
+            continue
         # δ(v) = σ_v · Σ_{w: v→w, dist w = dist v + 1} (1 + δ_w) / σ_w;
         # the deepest level keeps δ = 0 and the seed's own δ is not
         # counted
@@ -1879,7 +1884,7 @@ def _bfs_on_driver(src, sink, seeds, max_depth: int):
 
 
 def _driver_bfs(seeds: DataFrame, edges: DataFrame, driver_edges,
-                max_depth: int):
+                max_depth: int, brandes: bool = True):
     """The closeness/betweenness size gate: ``(seed ids, *_bfs_on_driver
     result)`` when n_seeds × |E| ≤ CLOSENESS_SEEDS × the driver bound
     (``driver_edges``, default _DRIVER_EDGES; 0 never), else None. A
@@ -1900,7 +1905,8 @@ def _driver_bfs(seeds: DataFrame, edges: DataFrame, driver_edges,
         edges, cap // max(len(s), CLOSENESS_SEEDS))
     if collected is None:
         return None
-    return (s, *_bfs_on_driver(*collected, s.to_numpy(), max_depth))
+    return (s, *_bfs_on_driver(*collected, s.to_numpy(), max_depth,
+                               brandes))
 
 
 def closeness(seeds: DataFrame, edges: DataFrame, max_depth: int = 60,
@@ -1918,7 +1924,7 @@ def closeness(seeds: DataFrame, edges: DataFrame, max_depth: int = 60,
     (multi_source_distances: job count = graph depth, independent of
     seed count). Both legs raise when a seed reaches deeper than
     ``max_depth`` hops, so the gate never changes the answer."""
-    got = _driver_bfs(seeds, edges, driver_edges, max_depth)
+    got = _driver_bfs(seeds, edges, driver_edges, max_depth, brandes=False)
     if got is not None:
         s, n_reach, sum_dist, _, _ = got
         return seeds.sparkSession.createDataFrame(pa.table(

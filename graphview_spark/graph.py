@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from graphview_spark.catalog import EdgeType, GraphCatalog, NodeTable, StoredProcedure
 from graphview_spark.ddl import parse_create_node_table
+from graphview_spark.plans.lazy import is_lazy
 
 EDGE_META_COLS = ("src", "edge_id", "sink")
 
@@ -220,6 +221,15 @@ class GraphDatabase:
         self._degree_cache: dict[tuple, tuple[tuple, tuple, DataFrame]] = {}
         # checkpoint outputs (checkpoint_tables, delete_edges), held weakly
         self._checkpointed: weakref.WeakSet[DataFrame] = weakref.WeakSet()
+        # pinned edge ordinals (edge_ordinals(pin=True)), keyed weakly by
+        # the edge DataFrame version they were derived from: DML rebinds
+        # self.edges entries, so a pin can only serve its own version
+        # and dies with it
+        self._ordinals: weakref.WeakKeyDictionary[DataFrame, DataFrame] = (
+            weakref.WeakKeyDictionary())
+        # partition count of each literal INSERT's output (insert_nodes)
+        self._node_parts: weakref.WeakKeyDictionary[DataFrame, int] = (
+            weakref.WeakKeyDictionary())
         # SELECT INTO targets (reference: plain SQL tables created by
         # SELECT INTO passthrough) — queryable in later statements
         self.derived_tables: dict[str, DataFrame] = {}
@@ -614,19 +624,34 @@ class GraphDatabase:
             F.col("_ord"), F.col("sink"), *[F.col(c) for c in attr_cols]
         )
 
+    def edge_ordinals(self, qualified: str, pin: bool = False) -> DataFrame:
+        """``edges[qualified]`` plus its ``edge_id`` column: the pinned
+        frame of the current version if one exists, else the lazy
+        window. ``pin=True`` (outside ``lazy_plans()``) materializes the
+        window once for this version, so every later consumer of the
+        same version — a var-length BFS, DELETE EDGE's match and its
+        anti-join — reads the same ordinals instead of re-deriving
+        them. Only consumers that execute anyway pin; a plan-only
+        consumer (``plan_match``) must stay job-free."""
+        df = self.edges[qualified]
+        out = self._ordinals.get(df)
+        if out is not None:
+            return out
+        out = df.withColumn(
+            "edge_id", F.row_number().over(self._edge_id_window(df)).cast("long"))
+        if pin and not is_lazy():
+            out = out.localCheckpoint(eager=True)
+            self._ordinals[df] = out
+        return out
+
     def edge_with_id(self, qualified: str) -> DataFrame:
         """The user-visible edge DataFrame: (src, edge_id, sink, attrs...).
         The window shuffles by ``src`` — the same partitioning every edge
         join uses, so at scale this folds into the existing exchange."""
-        df = self.edges[qualified]
-        w = self._edge_id_window(df)
-        attr_cols = [c for c in df.columns if c not in ("src", "sink", "_ord")]
-        return df.select(
-            "src",
-            F.row_number().over(w).cast("long").alias("edge_id"),
-            "sink",
-            *attr_cols,
-        )
+        df = self.edge_ordinals(qualified)
+        attr_cols = [c for c in df.columns
+                     if c not in ("src", "sink", "_ord", "edge_id")]
+        return df.select("src", "edge_id", "sink", *attr_cols)
 
     # ------------------------------------------------------------------
     # Node ingestion
@@ -654,8 +679,18 @@ class GraphDatabase:
             data.append(row)
         self._seq[t.name] = start + len(rows)
         self._node_counts.pop(t.name, None)
-        new_df = _values_df(self.spark, self.nodes[t.name].schema, data)
-        self.nodes[t.name] = self.nodes[t.name].unionByName(new_df)
+        cur = self.nodes[t.name]
+        out = cur.unionByName(_values_df(self.spark, cur.schema, data))
+        # each VALUES relation is one more partition, which checkpoints
+        # keep forever; fold it back where the table's partition count
+        # is known without a job (a checkpoint output, or this method's)
+        parts = self._node_parts.get(cur)
+        if parts is None and cur in self._checkpointed:
+            parts = cur.rdd.getNumPartitions()
+        if parts is not None:
+            out = out.coalesce(parts)
+            self._node_parts[out] = parts
+        self.nodes[t.name] = out
 
     def insert_nodes_df(self, table_name: str, df: DataFrame) -> None:
         """Bulk node ingestion from a DataFrame (reference: BulkInsertNode,
@@ -1053,17 +1088,15 @@ class GraphDatabase:
     # Graph DML (SURVEY §2.6)
     # ------------------------------------------------------------------
     def delete_edges(self, source_table: str, edge_name: str, matched: DataFrame) -> None:
-        """DELETE EDGE: anti-join the edge DF against matched
+        """DELETE EDGE: anti-join the edge DF's ordinals
+        (``edge_ordinals``: the pinned frame when the statement or an
+        earlier read pinned this version) against matched
         (src, edge_id) pairs. The reference appends tombstones to
         DeleteCol and filters them in the decoder
         (NodeTableGraphViewCodeTemplate.cs:186-207); immutable DataFrames
         need no tombstones — the rewrite IS the delete."""
         e = self.catalog.resolve_edge(source_table, edge_name)
-        cur = self.edges[e.qualified]
-        with_id = cur.withColumn(
-            "edge_id", F.row_number().over(self._edge_id_window(cur)).cast("long")
-        )
-        survivors = with_id.join(
+        survivors = self.edge_ordinals(e.qualified).join(
             matched.select("src", "edge_id"), ["src", "edge_id"], "left_anti"
         ).drop("edge_id")
         # materialize: matched usually derives from this same edge DF, and

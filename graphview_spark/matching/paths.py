@@ -63,21 +63,28 @@ def var_length_paths(
     restricts the traversal to paths starting there — the pushed-down
     source-alias predicate pruning the whole BFS instead of its result.
     """
-    from graphview_spark.matching.planner import _edge_df, _member_tables
+    from graphview_spark.matching.planner import (
+        _edge_df,
+        _member_tables,
+        _resolve_edge_types,
+    )
 
     if node_unique is None:
         node_unique = getattr(g, "path_semantics", "trail") == "simple"
     alias = e.alias
 
+    # pin each edge type's ordinals: every hop joins this set, deriving
+    # it repeats the edge_id window otherwise (one recompute per hop),
+    # and a later DELETE EDGE of the same table version reuses the pin
+    for et in _resolve_edge_types(g, e, src_name, sink_name):
+        g.edge_ordinals(et.qualified, pin=True)
     edges = _edge_df(g, e, src_name, sink_name, raw=True)
     ekey = F.concat_ws(":", F.col("_etype"), F.col("src"), F.col("edge_id"))
-    # materialize once: every hop joins this set, and deriving it repeats
-    # the edge_id window otherwise (one recompute per hop). _emsg is the
-    # per-edge display message (edge name + attribute values for
-    # attributed edges — the PathMessageDecoder parity, see _one_edge_df).
+    # _emsg is the per-edge display message (edge name + attribute
+    # values for attributed edges — the PathMessageDecoder parity, see
+    # _one_edge_df).
     edges = edges.select(
-        "src", "sink", "_etype", ekey.alias("_ekey"), "_emsg"
-    ).transform(_ckpt_eager)
+        "src", "sink", "_etype", ekey.alias("_ekey"), "_emsg")
 
     seed = edges
     if start_nodes is not None:

@@ -1072,9 +1072,19 @@ def kmv_sketch(
     high-cardinality streams where the per-task distinct exceeds k.
     Output-identical by construction; asserted bit-exact vs the old
     shape at sf0.1 and by every KMV oracle row."""
+    return _kmv_smallest(
+        df.select(*group_cols, _hash60(F.col(value_col)).alias("h")),
+        group_cols)
+
+
+def _kmv_smallest(hashed: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The KMV_K smallest distinct ``h`` per group of (group..., h)
+    rows: distinct first, then ``row_number ≤ KMV_K`` (see
+    ``kmv_sketch``). Also the store merge: the k smallest of a union
+    are associative, so a store and a batch's raw hashes merge in one
+    pass."""
     from pyspark.sql import Window as W
 
-    hashed = df.select(*group_cols, _hash60(F.col(value_col)).alias("h"))
     w = W.partitionBy(*group_cols).orderBy("h")
     return (
         hashed.distinct()

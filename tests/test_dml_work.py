@@ -6,6 +6,7 @@ choice plans without statistics."""
 from __future__ import annotations
 
 import gc
+import random
 import weakref
 
 import pytest
@@ -221,3 +222,173 @@ def test_one_edge_match_and_delete_edge_read_no_statistics(spark, plan_jobs):
     ).collect()
     assert plan_jobs[-1] > 0
     assert "P.Knows" in g._edge_counts and "P" in g._node_counts
+
+
+# ---------------------------------------------------------------------
+# Edge ordinals: one materialization per edge table version
+# ---------------------------------------------------------------------
+def _ordinal_graph(spark) -> GraphDatabase:
+    """One node table with an attributed edge type E, a plain one K
+    and an edge view over both."""
+    g = GraphDatabase(spark)
+    g.execute(
+        """CREATE TABLE [N] (
+            [ColumnRole:"NodeId"] id INT,
+            [ColumnRole:"Edge",Reference:"N",Attributes:{w:"int"}]
+                E VARBINARY(max),
+            [ColumnRole:"Edge",Reference:"N"] K VARBINARY(max) )"""
+    )
+    g.execute("INSERT INTO N(id) VALUES (1), (2), (3), (4)")
+    g.execute("CREATE EDGE VIEW EV AS SELECT * FROM N.E "
+              "UNION ALL SELECT * FROM N.K")
+    return g
+
+
+def _ordinal_rows(g) -> dict:
+    rows = {q: sorted(tuple(r) for r in g.edge_with_id(q).collect())
+            for q in ("N.E", "N.K")}
+    rows["EV"] = sorted(tuple(r) for r in g.edge_view_df("EV").collect())
+    return rows
+
+
+def _ordinal_statements(seed: int, n: int) -> list[str]:
+    """Seeded INSERT EDGE / DELETE EDGE / var-length reads over four
+    nodes, so (src, sink) pairs repeat within and across batches."""
+    rng = random.Random(seed)
+    pair = "FROM N x, N y WHERE x.id = {a} AND y.id {op} {b}"
+    out = []
+    for _ in range(n):
+        a, b, w = rng.randint(1, 4), rng.randint(1, 4), rng.randint(0, 2)
+        op = rng.choice(["=", "<="])
+        kind = rng.random()
+        if kind < 0.25:
+            out.append(f"INSERT EDGE INTO N.E SELECT x, y, {w} "
+                       + pair.format(a=a, op=op, b=b))
+        elif kind < 0.45:
+            out.append("INSERT EDGE INTO N.K SELECT x, y "
+                       + pair.format(a=a, op=op, b=b))
+        elif kind < 0.6:
+            out.append("DELETE EDGE [x]-[E AS e]->[y] FROM N x, N y "
+                       f"WHERE x.id = {a} AND e.edge_id = {rng.randint(1, 3)}")
+        elif kind < 0.7:
+            out.append(f"DELETE EDGE [x]-[E {{w:{w}}}]->[y] FROM N x, N y "
+                       f"WHERE y.id = {b}")
+        elif kind < 0.8:
+            out.append("DELETE EDGE [x]-[K]->[y] "
+                       + pair.format(a=a, op="=", b=b))
+        else:
+            out.append("SELECT x.id AS s, y.id AS t, p.hops AS hops "
+                       "FROM N x, N y MATCH x-[EV*1..2 AS p]->y "
+                       f"WHERE x.id = {a}")
+    return out
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_pinned_ordinals_match_lazy_window(spark, seed):
+    """After every statement of a seeded INSERT EDGE / DELETE EDGE /
+    read sequence, the pinned ordinals of each edge type and of the
+    edge view equal the lazy window's on a twin graph that never pins
+    (statements run under lazy_plans()), and the twins agree on every
+    read and every deletion."""
+    from graphview_spark.plans.lazy import lazy_plans
+
+    pinned, lazy = _ordinal_graph(spark), _ordinal_graph(spark)
+    for stmt in _ordinal_statements(seed, 10):
+        got = pinned.execute(stmt)
+        with lazy_plans():
+            want = lazy.execute(stmt)
+            want = want and sorted(want.collect())
+        assert (got and sorted(got.collect())) == want, stmt
+        for q in ("N.E", "N.K"):
+            pinned.edge_ordinals(q, pin=True)
+            assert _is_checkpoint_scan(pinned.edge_ordinals(q))
+        assert not lazy._ordinals
+        assert _ordinal_rows(pinned) == _ordinal_rows(lazy), stmt
+
+
+def test_delete_edge_after_read_deletes_same_edges(spark):
+    """A DELETE EDGE that reuses the ordinals a var-length read pinned
+    deletes the same edges as one that derives them itself."""
+    graphs = [_ordinal_graph(spark), _ordinal_graph(spark)]
+    for g in graphs:
+        for w in (2, 1, 2):
+            g.execute(f"INSERT EDGE INTO N.E SELECT x, y, {w} "
+                      "FROM N x, N y WHERE x.id = 1 AND y.id <= 2")
+    read = ("SELECT y.id AS t FROM N x, N y MATCH x-[E*1..2 AS p]->y "
+            "WHERE x.id = 1")
+    assert graphs[0].execute(read).count() > 0
+    version = graphs[0].edges["N.E"]
+    assert version in graphs[0]._ordinals
+    for g in graphs:
+        g.execute("DELETE EDGE [x]-[E AS e]->[y] FROM N x, N y "
+                  "WHERE x.id = 1 AND e.edge_id IN (2, 5)")
+    assert _ordinal_rows(graphs[0]) == _ordinal_rows(graphs[1])
+    assert len(_ordinal_rows(graphs[0])["N.E"]) == 4
+
+
+# ---------------------------------------------------------------------
+# The benchmark's net-zero cycle: steady partitions and jobs
+# ---------------------------------------------------------------------
+def _cycle_steps(k: int) -> list[tuple[str, str | None]]:
+    """One net-zero cycle on the _graph fixture, in the order of the
+    graph_dml benchmark: a fresh node k gains and loses a Knows edge
+    from node 4; None is checkpoint_tables()."""
+    pair = f"FROM P a, P b WHERE a.id = 4 AND b.id = {k}"
+    return [
+        ("insert_node", f"INSERT INTO P(id) VALUES ({k})"),
+        ("insert_edge", f"INSERT EDGE INTO P.Knows SELECT a, b {pair}"),
+        ("update", f"UPDATE P SET id = id WHERE id = {k}"),
+        ("read", "SELECT b.id AS dst FROM P a, P b "
+                 "MATCH a-[Knows*1..2 AS q]->b WHERE a.id = 4"),
+        ("delete_edge", f"DELETE EDGE [a]-[Knows]->[b] {pair}"),
+        ("delete_node", f"DELETE NODE FROM P WHERE id = {k}"),
+        ("checkpoint", None),
+    ]
+
+
+def _run_cycle(spark, g, k: int) -> dict[str, int]:
+    """Jobs per step of cycle k; checks the read-after-write."""
+    jobs = {}
+    for step, stmt in _cycle_steps(k):
+        def run():
+            if stmt is None:
+                g.checkpoint_tables()
+                return
+            out = g.execute(stmt)
+            if out is not None:
+                assert k in {r["dst"] for r in out.collect()}
+        jobs[step] = _jobs(spark, run, f"gv-cycle-{id(g)}-{k}-{step}")
+    return jobs
+
+
+def _partitions(g) -> dict[str, int]:
+    return {k: df.rdd.getNumPartitions()
+            for k, df in {**g.nodes, **g.edges}.items()}
+
+
+def test_literal_inserts_keep_partition_counts(spark):
+    """A literal INSERT INTO onto a checkpointed table adds no
+    partition: 20 cycles leave every table's partition count where the
+    first cycle's checkpoint left it (each cycle used to add one to P)."""
+    g = _graph(spark)
+    _run_cycle(spark, g, 100)
+    first = _partitions(g)
+    for k in range(101, 120):
+        _run_cycle(spark, g, k)
+    assert _partitions(g) == first
+    # consecutive literal inserts fold into the same count too
+    for k in (200, 201, 202):
+        g.execute(f"INSERT INTO P(id) VALUES ({k})")
+    assert g.nodes["P"].rdd.getNumPartitions() == first["P"]
+    assert {200, 201, 202} <= {r["id"] for r in g.nodes["P"].collect()}
+
+
+def test_dml_cycle_job_budget(spark):
+    """After two warm cycles DELETE EDGE launches at most 6 jobs (its
+    match and anti-join read the ordinals the read pinned), and every
+    later cycle launches the same number of jobs."""
+    g = _graph(spark)
+    per_cycle = [_run_cycle(spark, g, k) for k in range(100, 110)]
+    assert all(c["delete_edge"] <= 6 for c in per_cycle[2:]), per_cycle
+    totals = [sum(c.values()) for c in per_cycle[2:]]
+    assert len(set(totals)) == 1, per_cycle
