@@ -1049,10 +1049,13 @@ _KMV_DOMAIN = 1 << 60       # hash domain (15 md5 hex digits)
 
 
 def kmv_sketch(
-    df: DataFrame, group_cols: list[str], value_col: str
+    df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group KMV sketch: (group..., h) — the KMV_K smallest
-    DISTINCT 60-bit hashes of ``value_col``.
+    DISTINCT 60-bit hashes of ``value_col``. ``store``, an earlier
+    sketch of the same groups, merges in the same pass (the k smallest
+    of a union are associative): the streaming store's min-merge.
 
     Distinct FIRST, top-k second (r12 optimization, guide §2.3
     "aggregate before you shuffle"). The previous shape —
@@ -1072,19 +1075,11 @@ def kmv_sketch(
     high-cardinality streams where the per-task distinct exceeds k.
     Output-identical by construction; asserted bit-exact vs the old
     shape at sf0.1 and by every KMV oracle row."""
-    return _kmv_smallest(
-        df.select(*group_cols, _hash60(F.col(value_col)).alias("h")),
-        group_cols)
-
-
-def _kmv_smallest(hashed: DataFrame, group_cols: list[str]) -> DataFrame:
-    """The KMV_K smallest distinct ``h`` per group of (group..., h)
-    rows: distinct first, then ``row_number ≤ KMV_K`` (see
-    ``kmv_sketch``). Also the store merge: the k smallest of a union
-    are associative, so a store and a batch's raw hashes merge in one
-    pass."""
     from pyspark.sql import Window as W
 
+    hashed = df.select(*group_cols, _hash60(F.col(value_col)).alias("h"))
+    if store is not None:
+        hashed = store.unionByName(hashed)
     w = W.partitionBy(*group_cols).orderBy("h")
     return (
         hashed.distinct()

@@ -7,10 +7,10 @@ ever seen, exactly — so a ``foreachBatch`` sink can maintain streaming
 distinct-count (and, via two stores, overlap/Jaccard) estimates with a
 store bounded at KMV_K rows per group FOREVER:
 
-  1. each batch's hashes union the accumulated store and keep the k
-     smallest distinct per group (``_kmv_smallest``, the step
-     ``kmv_sketch`` runs) — one pass, the same store as sketching the
-     batch and then min-merging it;
+  1. each batch sketches together with the accumulated store
+     (``kmv_sketch(..., store=)``: the batch's hashes union the store,
+     then the k smallest distinct per group) — one pass, the same
+     store as sketching the batch and then min-merging it;
   2. ``estimate()`` reads current per-group distinct estimates from
      the store at any moment without touching any past event.
 
@@ -27,11 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphview_spark.operators.sketch import (
-    _hash60,
-    _kmv_smallest,
     _sql_kmv,
     _sql_kmv_rollup,
     kmv_estimate,
+    kmv_sketch,
 )
 from graphview_spark.plans import lazy as _lazy
 
@@ -54,18 +53,13 @@ class StreamingKmv:
         self._store: DataFrame | None = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # one pass: the batch's hashes and the store, k smallest per
-        # group (the k smallest of a union are associative, so this is
-        # the min-merge of the batch's own sketch into the store)
-        hashed = batch_df.select(
-            *self.group_cols, _hash60(F.col(self.value_col)).alias("h"))
-        if self._store is not None:
-            hashed = self._store.unionByName(hashed)
+        merged = kmv_sketch(
+            batch_df, self.group_cols, self.value_col, store=self._store)
         # eager per-batch materialization is REQUIRED (foreachBatch
         # frame validity) and is the cost model: the checkpoint is the
         # ≤ KMV_K-row sketch store. pin() passes through only under
         # lazy_plans(), where the audit needs full replayed lineage.
-        self._store = _lazy.pin(_kmv_smallest(hashed, self.group_cols))
+        self._store = _lazy.pin(merged)
 
     def sketch_store(self) -> DataFrame:
         if self._store is None:
