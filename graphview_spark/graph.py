@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from graphview_spark.catalog import EdgeType, GraphCatalog, NodeTable, StoredProcedure
 from graphview_spark.ddl import parse_create_node_table
-from graphview_spark.plans.lazy import is_lazy
+from graphview_spark.plans import lazy as _lazy
 
 EDGE_META_COLS = ("src", "edge_id", "sink")
 
@@ -226,9 +226,6 @@ class GraphDatabase:
         # self.edges entries, so a pin can only serve its own version
         # and dies with it
         self._ordinals: weakref.WeakKeyDictionary[DataFrame, DataFrame] = (
-            weakref.WeakKeyDictionary())
-        # partition count of each literal INSERT's output (insert_nodes)
-        self._node_parts: weakref.WeakKeyDictionary[DataFrame, int] = (
             weakref.WeakKeyDictionary())
         # SELECT INTO targets (reference: plain SQL tables created by
         # SELECT INTO passthrough) — queryable in later statements
@@ -639,9 +636,11 @@ class GraphDatabase:
             return out
         out = df.withColumn(
             "edge_id", F.row_number().over(self._edge_id_window(df)).cast("long"))
-        if pin and not is_lazy():
-            out = out.localCheckpoint(eager=True)
-            self._ordinals[df] = out
+        if pin:
+            got = _lazy.pin(out)
+            if got is not out:
+                self._ordinals[df] = got
+            out = got
         return out
 
     def edge_with_id(self, qualified: str) -> DataFrame:
@@ -683,13 +682,12 @@ class GraphDatabase:
         out = cur.unionByName(_values_df(self.spark, cur.schema, data))
         # each VALUES relation is one more partition, which checkpoints
         # keep forever; fold it back where the table's partition count
-        # is known without a job (a checkpoint output, or this method's)
-        parts = self._node_parts.get(cur)
-        if parts is None and cur in self._checkpointed:
+        # is known without a job (a checkpoint output; an empty one can
+        # have 0 partitions, and coalesce needs a positive count)
+        if cur in self._checkpointed:
             parts = cur.rdd.getNumPartitions()
-        if parts is not None:
-            out = out.coalesce(parts)
-            self._node_parts[out] = parts
+            if parts:
+                out = out.coalesce(parts)
         self.nodes[t.name] = out
 
     def insert_nodes_df(self, table_name: str, df: DataFrame) -> None:
@@ -899,8 +897,6 @@ class GraphDatabase:
             ), 16, 10,
         ).cast("long") % self._SAMPLING_DENOM
         filtered = df.filter(key < int(fraction * self._SAMPLING_DENOM))
-        from graphview_spark.plans import lazy as _lazy
-
         if _lazy.is_lazy():  # plan audit: full pipeline, no cache, no jobs
             return filtered
         sample = filtered.localCheckpoint(eager=True)

@@ -1524,13 +1524,6 @@ def _exec_delete_edge(g, sql: str) -> None:
         raise ValueError("DELETE EDGE expects exactly one 1-hop pattern edge")
     e = pattern.edges[0]
     bindings = _parse_from_list(_unmask(m.group("from"), lits))
-    # the match and delete_edges' anti-join read the target version's
-    # ordinals: pin them once (plan_match itself launches no job)
-    tbl = bindings.get(e.src_alias)
-    if tbl is not None and g.catalog.has_table(tbl):
-        et = g.catalog.table(tbl).edges.get(e.edge_name.lower())
-        if et is not None:
-            g.edge_ordinals(et.qualified, pin=True)
     matched = plan_match(g, pattern, bindings)
     if m.group("where"):
         cond = _rewrite_refs(g, m.group("where"), bindings, pattern)
