@@ -1085,8 +1085,8 @@ class GraphDatabase:
     # ------------------------------------------------------------------
     def delete_edges(self, source_table: str, edge_name: str, matched: DataFrame) -> None:
         """DELETE EDGE: anti-join the edge DF's ordinals
-        (``edge_ordinals``: the pinned frame when the statement or an
-        earlier read pinned this version) against matched
+        (``edge_ordinals``: the pinned frame when an earlier read of
+        this version pinned it) against matched
         (src, edge_id) pairs. The reference appends tombstones to
         DeleteCol and filters them in the decoder
         (NodeTableGraphViewCodeTemplate.cs:186-207); immutable DataFrames
