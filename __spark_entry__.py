@@ -179,16 +179,14 @@ def _registry() -> tuple[
         temporal,
         text,
     )
-    from graphview_spark.streaming import drift_stream as streaming_drift
     from graphview_spark.streaming import events as streaming_events
-    from graphview_spark.streaming import hdr_stream as streaming_hdr
-    from graphview_spark.streaming import kmv_stream as streaming_kmv
     from graphview_spark.streaming import replay as streaming_replay
+    from graphview_spark.streaming import store as streaming_store
 
     mods = [
         relational, temporal, graph_queries, dedup, text, sampling,
         similarity, clustering, multimodal, streaming_events,
-        streaming_hdr, streaming_kmv, streaming_drift, streaming_replay,
+        streaming_store, streaming_replay,
         algorithms, pipeline, search, sketch, skew,
     ]
     qs: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

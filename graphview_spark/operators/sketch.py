@@ -32,7 +32,10 @@ story.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from graphview_spark.session import read_table
@@ -42,13 +45,60 @@ HLL_REST_BITS = 52     # 60-bit hash minus the 8 bucket bits
 HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)   # standard bias constant
 
 
+class SketchSpec(NamedTuple):
+    """One mergeable sketch as the (build, merge, read) triple every
+    member of the family shares — the small-operator-algebra view of
+    "Building Advanced SQL Analytics From Low-Level Plan Operators"
+    (SIGMOD 2021):
+
+    - ``build(df, group_cols, value_col, ..., store=None)``: the
+      per-group sketch table of ``df``'s non-NULL values, with an
+      earlier table ``store`` merged in the same pass;
+    - ``merge(tbl, group_cols)``: the one lossless merge — any union of
+      sketch tables folds to the sketch of the union of their inputs
+      (extra columns such as a shard tag drop out);
+    - ``read``: the estimator — ``read(tbl, group_cols)`` for HLL,
+      HDR, KMV and the bucket counts; CMS adds its probe tokens, and
+      the Bloom probe takes the items to test first, the table after.
+    """
+
+    build: Callable[..., DataFrame]
+    merge: Callable[[DataFrame, list[str]], DataFrame]
+    read: Callable[..., DataFrame]
+
+
+def _cell_merge(agg: Callable[[str], Column], val: str, *cells: str):
+    """Merge of a cell-keyed sketch table: fold ``val`` with ``agg``
+    per (group..., cells...) in one map-side-combinable aggregate."""
+    def merge(tbl: DataFrame, group_cols: list[str]) -> DataFrame:
+        return tbl.groupBy(*group_cols, *cells).agg(agg(val).alias(val))
+    return merge
+
+
+def _build(
+    spec: SketchSpec, df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None, cells: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The build step every sketch shares. NULL values are outside
+    every sketch's domain and are dropped here, once; ``cells`` maps
+    each remaining row to one sketch-table row (its singleton sketch),
+    and ``spec.merge`` folds those rows — with ``store`` when given —
+    into the table. So build is merge of singletons, and a streaming
+    store update is one merge pass over store ∪ batch."""
+    rows = cells(df.filter(F.col(value_col).isNotNull()))
+    if store is not None:
+        rows = store.unionByName(rows)
+    return spec.merge(rows, group_cols)
+
+
 def _hash60(col: Column) -> Column:
     """The repo-standard 60-bit md5 hash (dedup.py's idiom)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def hll_registers(
-    df: DataFrame, group_cols: list[str], value_col: str
+    df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group HLL register table: (group..., bucket, m) where
     ``m`` = max leading-zero rank observed in the bucket. ONE
@@ -57,21 +107,16 @@ def hll_registers(
     Register tables merge across shards with groupBy(bucket).max(m)."""
     if "_h" in group_cols:
         raise ValueError("group column name '_h' is reserved here")
-    withh = df.select(*group_cols, _hash60(F.col(value_col)).alias("_h"))
     rest = F.expr(f"_h div {HLL_M}")  # integer div: top 52 hash bits
     rho = F.when(rest == 0, F.lit(HLL_REST_BITS + 1)).otherwise(
         # leading-zero rank: bin() length is floor(log2)+1, exactly
         F.lit(HLL_REST_BITS + 1) - F.length(F.bin(rest))
     )
-    return (
-        withh.select(
-            *group_cols,
-            (F.col("_h") % HLL_M).alias("bucket"),
-            rho.alias("rho"),
-        )
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("m"))
-    )
+    return _build(HLL, df, group_cols, value_col, store, lambda d: (
+        d.select(*group_cols, _hash60(F.col(value_col)).alias("_h"))
+        .select(*group_cols, (F.col("_h") % HLL_M).alias("bucket"),
+                rho.alias("m"))
+    ))
 
 
 # integer-scaled register sum: Σ 2^(−M_j) is accumulated as the BIGINT
@@ -117,6 +162,10 @@ def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
+HLL = SketchSpec(
+    hll_registers, _cell_merge(F.max, "m", "bucket"), hll_estimate)
+
+
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
@@ -138,15 +187,14 @@ def q_sketch_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sketch_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeability end-to-end: per-language sketches built on the two
     doc_id-parity HALVES of the corpus, merged register-wise
-    (groupBy(bucket).max), then estimated. The DuckDB oracle computes
+    (HLL.merge), then estimated. The DuckDB oracle computes
     the whole-corpus sketch DIRECTLY (no halves) — the two formulations
     agree value-for-value exactly when register merge is lossless,
     which is the property that lets per-shard/per-day sketches roll up
     without re-reading the corpus."""
     tok = _tokens(spark, sf_dir).withColumn(
         "half", (F.col("doc_id") % 2).cast("int"))
-    regs = hll_registers(tok, ["lang", "half"], "w")
-    merged = regs.groupBy("lang", "bucket").agg(F.max("m").alias("m"))
+    merged = HLL.merge(hll_registers(tok, ["lang", "half"], "w"), ["lang"])
     return hll_estimate(merged, ["lang"])
 
 
@@ -272,20 +320,20 @@ def _cms_coords(width: int = CMS_WIDTH) -> Column:
 
 
 def cms_cells(
-    df: DataFrame, group_cols: list[str], value_col: str
+    df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group CMS cell table (group..., r, c, n): each value
     increments one bucket per hash row. One explode (depth small and
     fixed) + one map-side-combinable groupBy; output is bounded by
     depth×width rows per group regardless of input size. Cell tables
     merge across shards by summing n."""
-    return (
-        _cms_halved(df, group_cols, value_col)
+    return _build(CMS, df, group_cols, value_col, store, lambda d: (
+        _cms_halved(d, group_cols, value_col)
         .select(*group_cols, F.explode(_cms_coords()).alias("rc"))
-        .groupBy(*group_cols, F.col("rc.r").alias("r"),
-                 F.col("rc.c").alias("c"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+        .select(*group_cols, F.col("rc.r").alias("r"),
+                F.col("rc.c").alias("c"), F.lit(1).alias("n"))
+    ))
 
 
 def cms_estimate(
@@ -318,6 +366,9 @@ def cms_estimate(
     )
 
 
+CMS = SketchSpec(cms_cells, _cell_merge(F.sum, "n", "r", "c"), cms_estimate)
+
+
 # fixed probe set for the gate queries: three corpus heavy hitters +
 # one token that never occurs (its estimate is pure collision noise,
 # bounded by the CMS error guarantee — and deterministic, so the
@@ -341,8 +392,7 @@ def q_sketch_cms_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches roll up without re-reading the corpus."""
     tok = _tokens(spark, sf_dir).withColumn(
         "half", (F.col("doc_id") % 2).cast("int"))
-    cells = cms_cells(tok, ["lang", "half"], "w")
-    merged = cells.groupBy("lang", "r", "c").agg(F.sum("n").alias("n"))
+    merged = CMS.merge(cms_cells(tok, ["lang", "half"], "w"), ["lang"])
     return cms_estimate(merged, ["lang"], CMS_PROBES)
 
 
@@ -537,6 +587,7 @@ def bloom_words(
     group_cols: list[str],
     value_col: str,
     m_bits: int = BLOOM_BITS,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group Bloom bitmap as a sparse word table (group..., word,
     bits): each value sets BLOOM_K bits. ONE map-side-combinable
@@ -546,8 +597,8 @@ def bloom_words(
     associative, so shard overlap is harmless. ``m_bits`` must match
     between build and probe (size it with bloom_auto_m; the fixed
     default eventually saturates — see the module comment)."""
-    coords = (
-        _cms_halved(df, group_cols, value_col)
+    return _build(BLOOM, df, group_cols, value_col, store, lambda d: (
+        _cms_halved(d, group_cols, value_col)
         .select(
             *group_cols,
             F.explode(_cms_coords(m_bits)).alias("rc"),
@@ -559,12 +610,9 @@ def bloom_words(
             # variable-amount shift: SQL form (the Python F.shiftleft
             # binding takes only a literal bit count)
             F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos & 31 AS INT))")
-            .alias("mask"),
+            .alias("bits"),
         )
-    )
-    return coords.groupBy(*group_cols, "word").agg(
-        F.bit_or("mask").alias("bits")
-    )
+    ))
 
 
 def bloom_probe(
@@ -605,6 +653,10 @@ def bloom_probe(
             == F.col(f"_bm{i}")
         )
     return probed.select(*id_cols, present.alias("present"))
+
+
+BLOOM = SketchSpec(
+    bloom_words, _cell_merge(F.bit_or, "bits", "word"), bloom_probe)
 
 
 def _bloom_scrub(
@@ -673,8 +725,7 @@ def q_sketch_bloom_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 2).cast("int").alias("half"),
         F.explode(_word_ngrams(F.col("text"), DECONTAM_N)).alias("g"),
     )
-    halves = bloom_words(bench_grams, ["half"], "g")
-    words = halves.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+    words = BLOOM.merge(bloom_words(bench_grams, ["half"], "g"), [])
     return _bloom_scrub(docs, words)
 
 
@@ -884,7 +935,8 @@ def _hdr_lower_expr() -> Column:
 
 
 def hdr_buckets(
-    df: DataFrame, group_cols: list[str], value_col: str
+    df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group HDR bucket table (group..., hdr_b, cnt): ONE map-side-
     combinable shuffle, ≤ ~4k rows per group out regardless of input
@@ -899,22 +951,21 @@ def hdr_buckets(
     divergence; and NULL is worse in BOTH engines, because
     least/greatest skip NULL args, so the r10 clamp was silently
     counting every NULL measurement as a max-value observation.
-    Non-measurements are out of the sketch's domain, full stop."""
+    Non-measurements are out of the sketch's domain, full stop (NULL
+    leaves in the shared build step, NaN — and a value that does not
+    cast to a double — here)."""
     vd = F.col(value_col).cast("double")
-    df = df.filter(vd.isNotNull() & ~F.isnan(vd))
     vm = F.greatest(
-        F.least(
-            F.floor(F.col(value_col).cast("double") * 1_000_000),
-            F.lit(float(HDR_MAX_MICRO)),
-        ).cast("long"),
+        F.least(F.floor(vd * 1_000_000), F.lit(float(HDR_MAX_MICRO)))
+        .cast("long"),
         F.lit(0).cast("long"),
     )
-    return (
-        df.select(*group_cols, vm.alias("_vm"))
-        .select(*group_cols, _hdr_bucket_expr().alias("hdr_b"))
-        .groupBy(*group_cols, "hdr_b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return _build(HDR, df, group_cols, value_col, store, lambda d: (
+        d.filter(vd.isNotNull() & ~F.isnan(vd))
+        .select(*group_cols, vm.alias("_vm"))
+        .select(*group_cols, _hdr_bucket_expr().alias("hdr_b"),
+                F.lit(1).alias("cnt"))
+    ))
 
 
 def hdr_quantiles(
@@ -924,8 +975,6 @@ def hdr_quantiles(
     (integer), estimate = lower bound of the first bucket whose
     cumulative count reaches the rank. The window runs over the tiny
     bucket table (≤ ~4k rows/group), never the data."""
-    from pyspark.sql import Window as W
-
     wc = (
         W.partitionBy(*group_cols).orderBy("hdr_b")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -948,6 +997,10 @@ def hdr_quantiles(
     return cum.groupBy(*group_cols).agg(*aggs)
 
 
+HDR = SketchSpec(
+    hdr_buckets, _cell_merge(F.sum, "cnt", "hdr_b"), hdr_quantiles)
+
+
 def q_sketch_hdr_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type latency-style percentiles (p50/p90/p99 of value,
     micro-units) from the bounded HDR bucket table — the rollup-able
@@ -967,10 +1020,8 @@ def q_sketch_hdr_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").withColumn(
         "half", (F.col("event_id") % 2).cast("int")
     )
-    halves = hdr_buckets(ev, ["event_type", "half"], "value")
-    merged = halves.groupBy("event_type", "hdr_b").agg(
-        F.sum("cnt").alias("cnt")
-    )
+    merged = HDR.merge(
+        hdr_buckets(ev, ["event_type", "half"], "value"), ["event_type"])
     return hdr_quantiles(merged, ["event_type"])
 
 
@@ -1033,7 +1084,7 @@ FROM cum GROUP BY event_type
 # keeps only its local top-k BEFORE the shuffle, so the exchange
 # carries O(k · groups · tasks) rows, never the corpus; sketch state
 # is ≤ KMV_K rows per group EVER. Sketches MERGE by taking the k
-# smallest of the union (pure SQL, proved by the union-merge pytest).
+# smallest of the union (KMV.merge, proved by the merge-law pytest).
 #
 # Determinism/oracle notes: hashes are the repo-standard 60-bit md5
 # integers (no ties — ranks are total), the θ denominator is the k-th
@@ -1046,6 +1097,20 @@ FROM cum GROUP BY event_type
 
 KMV_K = 256                 # sketch size; rel. std. error ≈ 1/√(k−2) ≈ 6%
 _KMV_DOMAIN = 1 << 60       # hash domain (15 md5 hex digits)
+
+
+def _kmv_topk(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The KMV_K smallest ``h`` per group of a frame holding each
+    (group, h) once — the family's one k-smallest selection: sketch
+    build and merge, and the union sketch of every set report.
+    row_number over unique, tie-free hashes is a total order, and the
+    rank filter is WindowGroupLimit-eligible (map-side partial top-k)."""
+    w = W.partitionBy(*group_cols).orderBy("h")
+    return (
+        df.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= KMV_K)
+        .drop("_r")
+    )
 
 
 def kmv_sketch(
@@ -1075,37 +1140,41 @@ def kmv_sketch(
     high-cardinality streams where the per-task distinct exceeds k.
     Output-identical by construction; asserted bit-exact vs the old
     shape at sf0.1 and by every KMV oracle row."""
-    from pyspark.sql import Window as W
-
-    hashed = df.select(*group_cols, _hash60(F.col(value_col)).alias("h"))
-    if store is not None:
-        hashed = store.unionByName(hashed)
-    w = W.partitionBy(*group_cols).orderBy("h")
-    return (
-        hashed.distinct()
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= KMV_K)
-        .drop("_r")
-    )
+    return _build(KMV, df, group_cols, value_col, store, lambda d: (
+        d.select(*group_cols, _hash60(F.col(value_col)).alias("h"))
+    ))
 
 
-def kmv_estimate(sk: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Distinct-count estimate from a sketch: (k−1)·2^60 / h_k when
-    the sketch is full, the exact held count otherwise. Returns
-    (group..., n_kept, est_distinct long)."""
-    agg = sk.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.max("h").alias("_hk"),
-    )
-    est = F.when(
+def _kmv_est() -> Column:
+    """The one KMV estimator, over (n_kept, _hk): (k−1)·2^60 / h_k
+    when the sketch is full, the exact held count otherwise. One
+    correctly-rounded double division (module comment); unrounded."""
+    return F.when(
         F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
     ).otherwise(
         F.lit(float((KMV_K - 1) * _KMV_DOMAIN)) / F.col("_hk").cast("double")
     )
+
+
+def kmv_estimate(sk: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Distinct-count estimate from a sketch. Returns (group...,
+    n_kept, est_distinct long)."""
+    agg = sk.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.max("h").alias("_hk"),
+    )
     return agg.select(
         *group_cols, "n_kept",
-        F.round(est, 0).cast("long").alias("est_distinct"),
+        F.round(_kmv_est(), 0).cast("long").alias("est_distinct"),
     )
+
+
+KMV = SketchSpec(
+    kmv_sketch,
+    lambda tbl, group_cols: _kmv_topk(
+        tbl.select(*group_cols, "h").distinct(), group_cols),
+    kmv_estimate,
+)
 
 
 def q_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1119,122 +1188,87 @@ def q_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("lang", "n_kept", "est_distinct")
 
 
-def q_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus overlap WITHOUT the exact join: token-set
-    intersection and Jaccard between the even and odd doc_id halves of
-    the corpus, estimated entirely from two ≤ KMV_K-row sketches. The
-    union sketch is the k smallest of the merged hash sets; matches =
-    union-sketch hashes present in BOTH sides; est_intersection =
-    matches/k · est(|A ∪ B|), jaccard_milli = ⌊1000·matches/k⌋
-    (integer — no float comparison surface). Exact when the union
-    fits the sketch.
-
-    The union + membership flags are ONE aggregation over the sketch
-    (groupBy(h) with per-side max), not a distinct-union re-joined
-    against each side: the join form referenced the sketch lineage four
-    times and Catalyst planned four full corpus scans (r12 plan audit:
-    8 FileScans at this query), where one is sufficient."""
-    from pyspark.sql import Window as W
-
-    tok = _tokens(spark, sf_dir).withColumn(
-        "half", (F.col("doc_id") % 2).cast("int"))
-    sk = kmv_sketch(tok, ["half"], "w")
-    # one pass over the ≤ 2·KMV_K sketch rows: each distinct hash with
-    # its per-side membership flags (NULL when the side never kept it —
-    # same null surface the old left joins produced)
-    memb = sk.groupBy("h").agg(
-        F.max(F.when(F.col("half") == 0, F.lit(1))).alias("_ina"),
-        F.max(F.when(F.col("half") == 1, F.lit(1))).alias("_inb"),
+def _kmv_union(tagged: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The one union-membership pass behind every two-set KMV report.
+    ``tagged`` holds (group..., h, _side) rows of two sides' sketches
+    (_side 0 = A, 1 = B). One aggregation gives each distinct hash its
+    per-side membership (not a distinct union re-joined against each
+    side: that form referenced each input lineage once per join and
+    Catalyst re-planned the full corpus scan at every reference — r12
+    plan audit); the union sketch is its k smallest per group; one
+    aggregate then counts n_kept, matches, only_a and only_b, beside
+    the unrounded estimate ``_est`` of |A ∪ B|. Every operand is
+    sketch-sized (≤ 2·KMV_K rows per group), never data. Exact when
+    the union fits the sketch."""
+    memb = tagged.groupBy(*group_cols, "h").agg(
+        F.max(F.when(F.col("_side") == 0, F.lit(1))).alias("_ina"),
+        F.max(F.when(F.col("_side") == 1, F.lit(1))).alias("_inb"),
     )
-    # union sketch = k smallest of the merged hash set (the values are
-    # ALREADY hashes — selecting, not re-hashing). The global window
-    # runs over ≤ 2·KMV_K rows, never data.
-    flagged = (
-        memb.withColumn("_r", F.row_number().over(W.orderBy("h")))
-        .filter(F.col("_r") <= KMV_K)
-        .select(F.col("h").alias("hu"), "_ina", "_inb")
-    )
-    agg = flagged.agg(
+    ina, inb = F.col("_ina").isNotNull(), F.col("_inb").isNotNull()
+
+    def n(cond: Column) -> Column:
+        return F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0)))
+
+    return _kmv_topk(memb, group_cols).groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_kept"),
-        F.max("hu").alias("_hk"),
-        F.sum(
-            F.when(F.col("_ina").isNotNull() & F.col("_inb").isNotNull(),
-                   F.lit(1)).otherwise(F.lit(0))
-        ).alias("matches"),
-    )
-    est_union = F.when(
-        F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
-    ).otherwise(
-        F.lit(float((KMV_K - 1) * _KMV_DOMAIN)) / F.col("_hk").cast("double")
-    )
-    return agg.select(
+        F.max("h").alias("_hk"),
+        n(ina & inb).alias("matches"),
+        n(ina & ~inb).alias("only_a"),
+        n(inb & ~ina).alias("only_b"),
+    ).withColumn("_est", _kmv_est())
+
+
+def _kmv_share(count_col: str) -> Column:
+    """count/n_kept · est(|A ∪ B|), rounded: the union sketch's sample
+    fraction scaled to the union estimate."""
+    return F.round(
+        F.col(count_col).cast("double") / F.col("n_kept") * F.col("_est"), 0
+    ).cast("long")
+
+
+def _kmv_overlap(tagged: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Overlap report over _kmv_union: (group..., n_kept, matches,
+    est_union, est_intersection, jaccard_milli), where jaccard_milli =
+    ⌊1000·matches/n_kept⌋ is integer — no float comparison surface."""
+    return _kmv_union(tagged, group_cols).select(
+        *group_cols,
         "n_kept",
         "matches",
-        F.round(est_union, 0).cast("long").alias("est_union"),
-        F.round(
-            F.col("matches").cast("double") / F.col("n_kept") * est_union, 0
-        ).cast("long").alias("est_intersection"),
+        F.round("_est", 0).cast("long").alias("est_union"),
+        _kmv_share("matches").alias("est_intersection"),
         F.expr("CAST(matches * 1000 AS BIGINT) div n_kept")
         .alias("jaccard_milli"),
     )
+
+
+def _kmv_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The token sketches of the even and odd doc_id halves as ONE
+    sketch pass grouped by half, tagged as the two sides."""
+    tok = _tokens(spark, sf_dir).withColumn(
+        "half", (F.col("doc_id") % 2).cast("int"))
+    return kmv_sketch(tok, ["half"], "w").select(
+        "h", F.col("half").alias("_side"))
+
+
+def q_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-corpus overlap WITHOUT the exact join: token-set
+    intersection and Jaccard between the even and odd doc_id halves of
+    the corpus, estimated entirely from two ≤ KMV_K-row sketches
+    (_kmv_overlap)."""
+    return _kmv_overlap(_kmv_halves(spark, sf_dir), [])
 
 
 def kmv_union_report(
     sk_a: DataFrame, sk_b: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Per-group overlap report from TWO KMV sketch stores (the
-    grouped form of q_sketch_kmv_intersect's global computation): the
-    union sketch is the k smallest of the two stores' hash union per
-    group (a window over ≤ 2·KMV_K rows/group, never data), matches =
-    union hashes present in BOTH stores, est_intersection =
-    matches/n_kept · est(|A ∪ B|), jaccard_milli integer. This is the
-    day-level rollup the streaming stores promise: two snapshots'
-    overlap without re-reading either snapshot — the inputs are
-    ≤ KMV_K-row stores, so the whole report is sketch-sized work.
-
-    Union + membership is ONE aggregation over the tagged union of the
-    two stores (not a distinct-union re-joined against each side, which
-    referenced each input lineage three times and made Catalyst re-plan
-    and re-run each store's build three times — r12 plan audit)."""
-    from pyspark.sql import Window as W
-
-    a = sk_a.select(*group_cols, "h").withColumn("_side", F.lit(0))
-    b = sk_b.select(*group_cols, "h").withColumn("_side", F.lit(1))
-    memb = a.unionByName(b).groupBy(*group_cols, "h").agg(
-        F.max(F.when(F.col("_side") == 0, F.lit(1))).alias("_ina"),
-        F.max(F.when(F.col("_side") == 1, F.lit(1))).alias("_inb"),
-    )
-    flagged = (
-        memb.withColumn(
-            "_r", F.row_number().over(
-                W.partitionBy(*group_cols).orderBy("h")))
-        .filter(F.col("_r") <= KMV_K)
-        .drop("_r")
-    )
-    agg = flagged.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.max("h").alias("_hk"),
-        F.sum(
-            F.when(F.col("_ina").isNotNull() & F.col("_inb").isNotNull(),
-                   F.lit(1)).otherwise(F.lit(0))
-        ).alias("matches"),
-    )
-    est_union = F.when(
-        F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
-    ).otherwise(
-        F.lit(float((KMV_K - 1) * _KMV_DOMAIN)) / F.col("_hk").cast("double")
-    )
-    return agg.select(
-        *group_cols,
-        "n_kept",
-        "matches",
-        F.round(est_union, 0).cast("long").alias("est_union"),
-        F.round(
-            F.col("matches").cast("double") / F.col("n_kept") * est_union, 0
-        ).cast("long").alias("est_intersection"),
-        F.expr("CAST(matches * 1000 AS BIGINT) div n_kept")
-        .alias("jaccard_milli"),
-    )
+    grouped form of q_sketch_kmv_intersect). This is the day-level
+    rollup the streaming stores promise: two snapshots' overlap
+    without re-reading either snapshot — the inputs are ≤ KMV_K-row
+    stores, so the whole report is sketch-sized work."""
+    a = sk_a.select(*group_cols, "h", F.lit(0).alias("_side"))
+    b = sk_b.select(*group_cols, "h", F.lit(1).alias("_side"))
+    return _kmv_overlap(a.unionByName(b), group_cols)
 
 
 def q_sketch_kmv_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,55 +1280,16 @@ def q_sketch_kmv_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. only_a = union-sketch hashes present in A's sketch but not
     B's (and symmetrically); est_only_a = only_a/n_kept · est(|A ∪ B|)
     — same single-division estimator discipline as the intersection,
-    so DuckDB replicates every value bit-for-bit. Exact when the union
-    fits the sketch. Identity matches + only_a + only_b = n_kept holds
-    by construction (each union hash is in at least one side's sketch).
-
-    Same single-aggregation union+membership shape as
-    q_sketch_kmv_intersect (one corpus scan, not four — see its
-    docstring)."""
-    from pyspark.sql import Window as W
-
-    tok = _tokens(spark, sf_dir).withColumn(
-        "half", (F.col("doc_id") % 2).cast("int"))
-    sk = kmv_sketch(tok, ["half"], "w")
-    memb = sk.groupBy("h").agg(
-        F.max(F.when(F.col("half") == 0, F.lit(1))).alias("_ina"),
-        F.max(F.when(F.col("half") == 1, F.lit(1))).alias("_inb"),
-    )
-    flagged = (
-        memb.withColumn("_r", F.row_number().over(W.orderBy("h")))
-        .filter(F.col("_r") <= KMV_K)
-        .select(F.col("h").alias("hu"), "_ina", "_inb")
-    )
-    agg = flagged.agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.max("hu").alias("_hk"),
-        F.sum(
-            F.when(F.col("_ina").isNotNull() & F.col("_inb").isNull(),
-                   F.lit(1)).otherwise(F.lit(0))
-        ).alias("only_a"),
-        F.sum(
-            F.when(F.col("_inb").isNotNull() & F.col("_ina").isNull(),
-                   F.lit(1)).otherwise(F.lit(0))
-        ).alias("only_b"),
-    )
-    est_union = F.when(
-        F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
-    ).otherwise(
-        F.lit(float((KMV_K - 1) * _KMV_DOMAIN)) / F.col("_hk").cast("double")
-    )
-    return agg.select(
+    so DuckDB replicates every value bit-for-bit. Identity matches +
+    only_a + only_b = n_kept holds by construction (each union hash is
+    in at least one side's sketch)."""
+    return _kmv_union(_kmv_halves(spark, sf_dir), []).select(
         "n_kept",
         "only_a",
         "only_b",
-        F.round(est_union, 0).cast("long").alias("est_union"),
-        F.round(
-            F.col("only_a").cast("double") / F.col("n_kept") * est_union, 0
-        ).cast("long").alias("est_only_a"),
-        F.round(
-            F.col("only_b").cast("double") / F.col("n_kept") * est_union, 0
-        ).cast("long").alias("est_only_b"),
+        F.round("_est", 0).cast("long").alias("est_union"),
+        _kmv_share("only_a").alias("est_only_a"),
+        _kmv_share("only_b").alias("est_only_b"),
     )
 
 
@@ -1308,16 +1303,13 @@ def kmv_pairwise_report(sk: DataFrame, group_col: str) -> DataFrame:
     into its S−1 pairs, so the whole report is O(S² · k) sketch rows —
     quadratic in the number of GROUPS, never touching the corpus
     (for very large S, pre-filter the pair table to candidates). Same
-    estimator discipline as kmv_union_report, so the DuckDB oracle
-    matches bit-for-bit.
+    report as kmv_union_report, grouped by pair.
 
     The input sketch is pin()ned (a ≤ k·S-row materialization) before
     the fan-out: the pair scaffold + both join sides reference it five
     times, and without the pin Catalyst planned the full corpus
     scan+hash+top-k lineage at every reference (r12 plan audit: 12
     FileScans at the gate query, where one is sufficient)."""
-    from pyspark.sql import Window as W
-
     from graphview_spark.plans import lazy as _lazy
 
     sk = _lazy.pin(sk.select(F.col(group_col).alias(group_col), "h"))
@@ -1327,52 +1319,11 @@ def kmv_pairwise_report(sk: DataFrame, group_col: str) -> DataFrame:
         srcs.select(F.col("s").alias("s1"))
         .join(srcs.select(F.col("s").alias("s2")), F.col("s1") < F.col("s2"))
     )
-    a = sk.select(g.alias("s1"), "h")
-    b = sk.select(g.alias("s2"), "h")
-    sides = (
-        pairs.join(a, "s1")
-        .select("s1", "s2", "h", F.lit(1).alias("ina"), F.lit(0).alias("inb"))
-        .unionByName(
-            pairs.join(b, "s2")
-            .select("s1", "s2", "h",
-                    F.lit(0).alias("ina"), F.lit(1).alias("inb"))
-        )
-    )
-    memb = sides.groupBy("s1", "s2", "h").agg(
-        F.max("ina").alias("ina"), F.max("inb").alias("inb")
-    )
-    union_sk = (
-        memb.withColumn(
-            "_r",
-            F.row_number().over(W.partitionBy("s1", "s2").orderBy("h")),
-        )
-        .filter(F.col("_r") <= KMV_K)
-    )
-    agg = union_sk.groupBy("s1", "s2").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.max("h").alias("_hk"),
-        F.sum(
-            F.when((F.col("ina") == 1) & (F.col("inb") == 1), F.lit(1))
-            .otherwise(F.lit(0))
-        ).alias("matches"),
-    )
-    est_union = F.when(
-        F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
-    ).otherwise(
-        F.lit(float((KMV_K - 1) * _KMV_DOMAIN)) / F.col("_hk").cast("double")
-    )
-    return agg.select(
-        "s1",
-        "s2",
-        "n_kept",
-        "matches",
-        F.round(est_union, 0).cast("long").alias("est_union"),
-        F.round(
-            F.col("matches").cast("double") / F.col("n_kept") * est_union, 0
-        ).cast("long").alias("est_intersection"),
-        F.expr("CAST(matches * 1000 AS BIGINT) div n_kept")
-        .alias("jaccard_milli"),
-    )
+    a = pairs.join(sk.select(g.alias("s1"), "h"), "s1")
+    b = pairs.join(sk.select(g.alias("s2"), "h"), "s2")
+    sides = a.select("s1", "s2", "h", F.lit(0).alias("_side")).unionByName(
+        b.select("s1", "s2", "h", F.lit(1).alias("_side")))
+    return _kmv_overlap(sides, ["s1", "s2"])
 
 
 def q_sketch_kmv_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1386,6 +1337,30 @@ def q_sketch_kmv_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.col("w") != "")
     return kmv_pairwise_report(kmv_sketch(tok, ["source"], "w"), "source")
+
+
+# --------------------------------------------------------------------------
+# Bucket counts — the plain histogram the PSI drift report reads
+# (operators/pipeline.py drift_report): per-(group, bucket) row counts
+# of an already-bucketed column, sum-merged; bounded at groups ×
+# buckets rows.
+# --------------------------------------------------------------------------
+
+def bucket_counts(
+    df: DataFrame, group_cols: list[str], value_col: str,
+    store: DataFrame | None = None,
+) -> DataFrame:
+    """Per-group counts of each ``value_col`` bucket id: (group...,
+    bucket, c)."""
+    return _build(COUNTS, df, group_cols, value_col, store, lambda d: (
+        d.select(*group_cols, F.col(value_col).alias("bucket"),
+                 F.lit(1).alias("c"))
+    ))
+
+
+# the counts table is its own read: drift_report joins two of them
+COUNTS = SketchSpec(
+    bucket_counts, _cell_merge(F.sum, "c", "bucket"), lambda tbl, _g: tbl)
 
 
 def _sql_kmv_hash(var: str) -> str:

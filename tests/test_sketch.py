@@ -7,7 +7,10 @@ fixed dataset, not statistical flakes.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from functools import reduce
+
+import pytest
+from pyspark.sql import DataFrame, functions as F
 
 from graphview_spark.operators.sketch import (
     HLL_M,
@@ -55,28 +58,6 @@ def test_small_range_correction_path(spark):
     assert est["est_distinct"] == 5
 
 
-def test_merge_equals_direct(spark):
-    """Lossless mergeability: register-wise max over two disjoint
-    shards == registers of the union, hence identical estimates —
-    the property that lets per-shard sketches roll up without
-    re-reading the corpus."""
-    a = _ints(spark, 6_000)
-    b = spark.range(4_000, 12_000).select(
-        F.lit("a").alias("g"), F.col("id").cast("string").alias("w"))
-    direct = hll_estimate(
-        hll_registers(a.unionByName(b), ["g"], "w"), ["g"]).first()
-    ra = hll_registers(a, ["g"], "w")
-    rb = hll_registers(b, ["g"], "w")
-    merged = (
-        ra.unionByName(rb)
-        .groupBy("g", "bucket")
-        .agg(F.max("m").alias("m"))
-    )
-    via_merge = hll_estimate(merged, ["g"]).first()
-    assert via_merge["est_distinct"] == direct["est_distinct"]
-    assert via_merge["n_registers"] == direct["n_registers"]
-
-
 def test_grouped_estimates_independent(spark):
     """Groups sketch independently: a 100-value group next to a
     10k-value group keeps its small-range-corrected count."""
@@ -117,29 +98,6 @@ def test_cms_never_undercounts_and_bounds_error(spark):
         truth = exact.get(t, 0)
         assert est[t] >= truth, (t, est[t], truth)
         assert est[t] - truth <= bound, (t, est[t], truth, bound)
-
-
-def test_cms_merge_equals_direct(spark):
-    """Counts are linear, so summing per-shard cell tables is a
-    lossless merge — estimates identical to the direct sketch."""
-    from graphview_spark.operators.sketch import cms_cells, cms_estimate
-
-    a = spark.range(5_000).select(
-        F.lit("g").alias("g"),
-        F.concat(F.lit("w"), (F.col("id") % 100)).cast("string").alias("w"))
-    b = spark.range(3_000).select(
-        F.lit("g").alias("g"),
-        F.concat(F.lit("w"), (F.col("id") % 37)).cast("string").alias("w"))
-    probes = ["w0", "w5", "w36", "w99"]
-    direct = {r["token"]: r["est"] for r in cms_estimate(
-        cms_cells(a.unionByName(b), ["g"], "w"), ["g"], probes).collect()}
-    merged_cells = (
-        cms_cells(a, ["g"], "w").unionByName(cms_cells(b, ["g"], "w"))
-        .groupBy("g", "r", "c").agg(F.sum("n").alias("n"))
-    )
-    via_merge = {r["token"]: r["est"] for r in
-                 cms_estimate(merged_cells, ["g"], probes).collect()}
-    assert via_merge == direct
 
 
 def test_cms_cell_table_bounded(spark):
@@ -286,22 +244,6 @@ def test_bloom_m_bits_param_build_probe_contract(spark):
     assert fp_big <= fp_dflt
 
 
-def test_bloom_merge_equals_direct(spark):
-    """bit_or over per-shard word tables == the union's word table,
-    row-for-row (even with overlapping shards — bit_or is idempotent),
-    so shard bitmaps roll up losslessly."""
-    from graphview_spark.operators.sketch import bloom_words
-
-    a = _vals(spark, 0, 1_000)
-    b = _vals(spark, 500, 1_500)  # overlaps a
-    direct = {(r["word"]): r["bits"] for r in
-              bloom_words(a.unionByName(b), [], "w").collect()}
-    merged = {(r["word"]): r["bits"] for r in
-              bloom_words(a, [], "w").unionByName(bloom_words(b, [], "w"))
-              .groupBy("word").agg(F.bit_or("bits").alias("bits")).collect()}
-    assert merged == direct
-
-
 def test_bloom_scrub_supersets_exact_decontam(spark):
     """Operator-to-operator: the Bloom scrub flags every document the
     exact join decontam flags (no false negatives), and its per-doc
@@ -372,26 +314,6 @@ def test_hdr_quantile_relative_error_bound(spark):
             p, got, exact_micro)
 
 
-def test_hdr_merge_equals_direct(spark):
-    """Counts are linear: per-shard bucket tables summed == the
-    union's bucket table, so shard histograms roll up losslessly into
-    identical quantile estimates."""
-    from graphview_spark.operators.sketch import hdr_buckets, hdr_quantiles
-
-    a = spark.range(3_000).select(
-        F.lit("g").alias("g"), (F.col("id") * 0.37 + 1).alias("v"))
-    b = spark.range(5_000).select(
-        F.lit("g").alias("g"), (F.col("id") * 1.91 + 3).alias("v"))
-    direct = hdr_quantiles(
-        hdr_buckets(a.unionByName(b), ["g"], "v"), ["g"]).collect()
-    merged_tbl = (
-        hdr_buckets(a, ["g"], "v").unionByName(hdr_buckets(b, ["g"], "v"))
-        .groupBy("g", "hdr_b").agg(F.sum("cnt").alias("cnt"))
-    )
-    via_merge = hdr_quantiles(merged_tbl, ["g"]).collect()
-    assert [tuple(r) for r in via_merge] == [tuple(r) for r in direct]
-
-
 # --------------------------------------------------------------------------
 # KMV / theta sketch
 # --------------------------------------------------------------------------
@@ -412,28 +334,6 @@ def test_kmv_state_bounded_and_plan_partial_topk(spark):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
     assert "WindowGroupLimit" in plan
-
-
-def test_kmv_merge_equals_direct(spark):
-    """k-smallest of the UNION of two sketches == the union's sketch,
-    row-for-row (hash sets, min-merge is lossless) — the property that
-    lets per-shard/per-day sketches roll up without re-reading data."""
-    from pyspark.sql import Window as W
-
-    from graphview_spark.operators.sketch import KMV_K, kmv_sketch
-
-    a = _vals(spark, 0, 5_000)
-    b = _vals(spark, 2_500, 7_500)  # overlaps a
-    direct = sorted(
-        r["h"] for r in kmv_sketch(a.unionByName(b), [], "w").collect())
-    merged_frame = (
-        kmv_sketch(a, [], "w").unionByName(kmv_sketch(b, [], "w"))
-        .distinct()
-        .withColumn("_r", F.row_number().over(W.orderBy("h")))
-        .filter(F.col("_r") <= KMV_K).drop("_r")
-    )
-    merged = sorted(r["h"] for r in merged_frame.collect())
-    assert merged == direct
 
 
 def test_kmv_estimate_accuracy_and_exact_small(spark):
@@ -699,3 +599,70 @@ def test_kmv_pairwise_exact_below_k_and_consistent_with_union_report(spark):
                 r["est_intersection"], r["jaccard_milli"]) == (
             ref["n_kept"], ref["matches"], ref["est_union"],
             ref["est_intersection"], ref["jaccard_milli"])
+
+
+# --------------------------------------------------------------------------
+# The (build, merge, read) specs shared by every sketch
+# --------------------------------------------------------------------------
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "name", ["HLL", "CMS", "BLOOM", "HDR", "KMV", "COUNTS"])
+def test_merge_law(spark, name):
+    """merge(build(a) ∪ build(b) ∪ build(∅)) == build(a ∪ b ∪ ∅), row
+    for row on the sketch table — the lossless merge that lets
+    per-shard / per-day / per-batch sketches roll up without
+    re-reading data. The shards overlap, one is empty, and one holds
+    NULL values; values are numeric strings, so HDR buckets them too,
+    and 1.5k distinct values per group exercise KMV's top-k."""
+    from graphview_spark.operators import sketch
+
+    spec = getattr(sketch, name)
+    rows = [(f"g{i % 2}", str(i)) for i in range(3_000)]
+    shards = [
+        spark.createDataFrame(part, "g string, w string")
+        for part in (rows[:2_000], rows[1_000:] + [("g0", None)] * 3, [])
+    ]
+    whole = reduce(DataFrame.unionByName, shards)
+    direct = _rows(spec.build(whole, ["g"], "w"))
+    tables = [spec.build(s, ["g"], "w") for s in shards]
+    merged = spec.merge(reduce(DataFrame.unionByName, tables), ["g"])
+    assert _rows(merged) == direct and len(direct) > 0
+
+
+@pytest.mark.parametrize("name", ["hll", "kmv", "cms", "bloom", "hdr"])
+def test_null_values_leave_sketches_unchanged(spark, name):
+    """NULL is no value: appending NULL rows to a group leaves its
+    sketch table and its estimate exactly as they were (a NULL used to
+    add an HLL register row, a KMV hash, CMS cells and a Bloom word)."""
+    from graphview_spark.operators.sketch import (
+        bloom_probe,
+        bloom_words,
+        cms_cells,
+        cms_estimate,
+        hdr_buckets,
+        hdr_quantiles,
+        kmv_estimate,
+        kmv_sketch,
+    )
+
+    vals = spark.createDataFrame(
+        [("a", str(i)) for i in range(50)], "g string, w string")
+    probes = spark.createDataFrame(
+        [(str(i),) for i in range(40, 60)], "w string")
+    build, read = {
+        "hll": (hll_registers, lambda t: hll_estimate(t, ["g"])),
+        "kmv": (kmv_sketch, lambda t: kmv_estimate(t, ["g"])),
+        "cms": (cms_cells, lambda t: cms_estimate(t, ["g"], ["1", "55"])),
+        "bloom": (bloom_words,
+                  lambda t: bloom_probe(probes, ["w"], "w", t)),
+        "hdr": (hdr_buckets, lambda t: hdr_quantiles(t, ["g"])),
+    }[name]
+    with_nulls = vals.unionByName(
+        spark.createDataFrame([("a", None)] * 3, "g string, w string"))
+    want, got = build(vals, ["g"], "w"), build(with_nulls, ["g"], "w")
+    assert _rows(got) == _rows(want)
+    assert _rows(read(got)) == _rows(read(want))

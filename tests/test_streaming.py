@@ -208,8 +208,8 @@ def test_streaming_hdr_matches_batch_sketch(spark, tmp_path):
     """Percentiles accumulated micro-batch by micro-batch equal the
     batch sketch over the union of all batches — the count-sum merge
     is lossless, so arrival slicing is invisible."""
-    from graphview_spark.operators.sketch import hdr_buckets, hdr_quantiles
-    from graphview_spark.streaming.hdr_stream import StreamingHdrHistogram
+    from graphview_spark.operators.sketch import HDR, hdr_buckets, hdr_quantiles
+    from graphview_spark.streaming.store import StreamingStore
 
     rows = [(i, "a" if i % 3 else "b", (i * 7 % 500) + 0.25)
             for i in range(1, 601)]
@@ -221,7 +221,7 @@ def test_streaming_hdr_matches_batch_sketch(spark, tmp_path):
             rows[lo:hi], ["event_id", "event_type", "value"]
         ).coalesce(1).write.json(str(src / name))
 
-    h = StreamingHdrHistogram(spark, ["event_type"], "value")
+    h = StreamingStore(HDR, ["event_type"], "value")
     stream = (
         spark.readStream.schema("event_id long, event_type string, value double")
         .option("maxFilesPerTrigger", 1).json(str(src / "*"))
@@ -230,7 +230,7 @@ def test_streaming_hdr_matches_batch_sketch(spark, tmp_path):
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(300)
 
-    streamed = sorted(tuple(r) for r in h.quantiles().collect())
+    streamed = sorted(tuple(r) for r in h.read().collect())
     batch_df = spark.createDataFrame(rows, ["event_id", "event_type", "value"])
     direct = sorted(tuple(r) for r in hdr_quantiles(
         hdr_buckets(batch_df, ["event_type"], "value"), ["event_type"]
@@ -245,7 +245,7 @@ def test_stream_hdr_replay_equals_direct_sketch(spark):
     the one-shot batch sketch over the whole events table — the same
     equality its DuckDB oracle asserts cross-engine."""
     from graphview_spark.operators.sketch import q_sketch_hdr_quantile
-    from graphview_spark.streaming.hdr_stream import q_stream_hdr_replay
+    from graphview_spark.streaming.store import q_stream_hdr_replay
 
     sf = "/root/testdata/sf0.001"
     replayed = sorted(tuple(r) for r in q_stream_hdr_replay(spark, sf).collect())
@@ -259,11 +259,12 @@ def test_streaming_kmv_matches_batch_and_stays_bounded(spark, tmp_path):
     REAL readStream/foreachBatch pipeline; the store never exceeds
     KMV_K rows per group."""
     from graphview_spark.operators.sketch import (
+        KMV,
         KMV_K,
         kmv_estimate,
         kmv_sketch,
     )
-    from graphview_spark.streaming.kmv_stream import StreamingKmv
+    from graphview_spark.streaming.store import StreamingStore
 
     rows = [(i, "a" if i % 3 else "b", f"w{i * 7 % 900}")
             for i in range(1, 1_201)]
@@ -274,7 +275,7 @@ def test_streaming_kmv_matches_batch_and_stays_bounded(spark, tmp_path):
             rows[lo:hi], ["doc_id", "lang", "w"]
         ).coalesce(1).write.json(str(src / name))
 
-    k = StreamingKmv(spark, ["lang"], "w")
+    k = StreamingStore(KMV, ["lang"], "w")
     q = (
         spark.readStream.schema("doc_id long, lang string, w string")
         .option("maxFilesPerTrigger", 1).json(str(src / "*"))
@@ -283,13 +284,13 @@ def test_streaming_kmv_matches_batch_and_stays_bounded(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    streamed = sorted(tuple(r) for r in k.estimate().collect())
+    streamed = sorted(tuple(r) for r in k.read().collect())
     batch_df = spark.createDataFrame(rows, ["doc_id", "lang", "w"])
     direct = sorted(tuple(r) for r in kmv_estimate(
         kmv_sketch(batch_df, ["lang"], "w"), ["lang"]).collect())
     assert streamed == direct
     assert {r[0] for r in streamed} == {"a", "b"}
-    per_group = k.sketch_store().groupBy("lang").count()
+    per_group = k.table().groupBy("lang").count()
     assert per_group.agg(F.max("count")).first()[0] <= KMV_K
 
 
@@ -298,7 +299,7 @@ def test_stream_kmv_replay_equals_direct_sketch(spark):
     must reproduce the one-shot corpus sketch — the same equality its
     DuckDB oracle asserts cross-engine."""
     from graphview_spark.operators.sketch import q_sketch_kmv_distinct
-    from graphview_spark.streaming.kmv_stream import q_stream_kmv_replay
+    from graphview_spark.streaming.store import q_stream_kmv_replay
 
     sf = "/root/testdata/sf0.001"
     replayed = sorted(tuple(r) for r in q_stream_kmv_replay(spark, sf).collect())
@@ -309,7 +310,8 @@ def test_stream_kmv_replay_equals_direct_sketch(spark):
 def test_streaming_hdr_store_stays_bounded(spark, tmp_path):
     """The accumulated state is the bucket table, not the data: after
     all batches the store holds ≤ 4096 rows per group."""
-    from graphview_spark.streaming.hdr_stream import StreamingHdrHistogram
+    from graphview_spark.operators.sketch import HDR
+    from graphview_spark.streaming.store import StreamingStore
 
     src = tmp_path / "ev_bound"
     src.mkdir()
@@ -318,7 +320,7 @@ def test_streaming_hdr_store_stays_bounded(spark, tmp_path):
             [(i, "g", float(i * 13 + b * 10_000 + 1)) for i in range(2_000)],
             ["event_id", "event_type", "value"],
         ).coalesce(1).write.json(str(src / f"b{b}"))
-    h = StreamingHdrHistogram(spark, ["event_type"], "value")
+    h = StreamingStore(HDR, ["event_type"], "value")
     q = (
         spark.readStream.schema("event_id long, event_type string, value double")
         .option("maxFilesPerTrigger", 1).json(str(src / "*"))
@@ -326,7 +328,7 @@ def test_streaming_hdr_store_stays_bounded(spark, tmp_path):
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(300)
-    assert h.bucket_store().count() <= 4096
+    assert h.table().count() <= 4096
 
 
 def test_streaming_kmv_two_store_rollup_equals_direct(spark, tmp_path):
@@ -337,11 +339,12 @@ def test_streaming_kmv_two_store_rollup_equals_direct(spark, tmp_path):
     from direct one-shot sketches of each day's full data. No event
     is re-read at rollup time: the report's inputs are the stores."""
     from graphview_spark.operators.sketch import (
+        KMV,
         KMV_K,
         kmv_sketch,
         kmv_union_report,
     )
-    from graphview_spark.streaming.kmv_stream import StreamingKmv
+    from graphview_spark.streaming.store import StreamingStore
 
     day_rows = {
         0: [(i, "a" if i % 3 else "b", f"w{i * 7 % 700}")
@@ -358,7 +361,7 @@ def test_streaming_kmv_two_store_rollup_equals_direct(spark, tmp_path):
             spark.createDataFrame(
                 rows[lo:hi], ["doc_id", "lang", "w"]
             ).coalesce(1).write.json(str(src / name))
-        st = StreamingKmv(spark, ["lang"], "w")
+        st = StreamingStore(KMV, ["lang"], "w")
         q = (
             spark.readStream.schema("doc_id long, lang string, w string")
             .option("maxFilesPerTrigger", 1).json(str(src / "*"))
@@ -369,7 +372,7 @@ def test_streaming_kmv_two_store_rollup_equals_direct(spark, tmp_path):
         stores[day] = st
 
     streamed = sorted(tuple(r) for r in kmv_union_report(
-        stores[0].sketch_store(), stores[1].sketch_store(), ["lang"]
+        stores[0].table(), stores[1].table(), ["lang"]
     ).collect())
     direct = sorted(tuple(r) for r in kmv_union_report(
         kmv_sketch(spark.createDataFrame(day_rows[0],
@@ -478,7 +481,8 @@ def test_streaming_bucket_counts_two_store_drift_equals_batch(
         drift_bucket,
         drift_report,
     )
-    from graphview_spark.streaming.drift_stream import StreamingBucketCounts
+    from graphview_spark.operators.sketch import COUNTS
+    from graphview_spark.streaming.store import StreamingStore
 
     half_rows = {
         0: [(i, "a" if i % 3 else "b", (i * 37) % 2000)
@@ -495,7 +499,7 @@ def test_streaming_bucket_counts_two_store_drift_equals_batch(
             spark.createDataFrame(
                 rows[lo:hi], ["doc_id", "lang", "n_chars"]
             ).coalesce(1).write.json(str(src / name))
-        st = StreamingBucketCounts(spark, ["lang"])
+        st = StreamingStore(COUNTS, ["lang"], "bucket")
         q = (
             spark.readStream
             .schema("doc_id long, lang string, n_chars long")
@@ -506,10 +510,10 @@ def test_streaming_bucket_counts_two_store_drift_equals_batch(
         )
         q.awaitTermination(300)
         stores[half] = st
-        assert st.counts().count() <= 2 * DRIFT_BUCKETS
+        assert st.read().count() <= 2 * DRIFT_BUCKETS
 
-    a = stores[0].counts().select("lang", "bucket", F.col("c").alias("ca"))
-    b = stores[1].counts().select("lang", "bucket", F.col("c").alias("cb"))
+    a = stores[0].read().select("lang", "bucket", F.col("c").alias("ca"))
+    b = stores[1].read().select("lang", "bucket", F.col("c").alias("cb"))
     cnt = a.join(b, ["lang", "bucket"], "full_outer").select(
         "lang", "bucket",
         F.coalesce("ca", F.lit(0)).alias("ca"),
@@ -526,6 +530,20 @@ def test_streaming_bucket_counts_two_store_drift_equals_batch(
         F.sum(F.when(F.col("doc_id") % 2 == 1, 1).otherwise(0)).alias("cb"))
     direct = sorted(tuple(r) for r in drift_report(direct_cnt).collect())
     assert streamed == direct
+
+
+@pytest.mark.parametrize("spec", ["HLL", "CMS", "BLOOM", "HDR", "KMV", "COUNTS"])
+def test_store_read_before_any_batch_raises(spec):
+    """A store that has seen no batch has no table to read: both its
+    table and its estimate raise the named ValueError, for every
+    spec."""
+    from graphview_spark.operators import sketch
+    from graphview_spark.streaming.store import StreamingStore
+
+    st = StreamingStore(getattr(sketch, spec), ["g"], "w")
+    for read in (st.table, st.read):
+        with pytest.raises(ValueError, match="no batches processed yet"):
+            read()
 
 
 def test_replay_statestore_provider_hook_identical(spark, monkeypatch):
