@@ -1105,7 +1105,6 @@ FROM e{rounds}"""
 def node_similarity(
     edges: DataFrame,
     max_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Common-neighbor Jaccard similarity between node pairs of an
     undirected graph given as directed (src, sink) edges.
@@ -1115,18 +1114,15 @@ def node_similarity(
     a hub node makes quadratic — ``max_degree`` drops hubs before the
     self-join (the standard mitigation; at 100 TB you cap and handle
     hubs separately, e.g. via sketches). The (capped) symmetrized edge
-    list is materialized once (``materialize=False`` keeps it lazy for
-    plan inspection): it feeds the degree aggregate and BOTH self-join
-    sides, so an unmaterialized frame would re-run its shuffles 3×.
+    list is pinned once (lazy under ``lazy_plans()``): it feeds the
+    degree aggregate and BOTH self-join sides, so an unpinned frame
+    would re-run its shuffles 3×.
     The Jaccard is computed with exact integer arithmetic so the oracle
     agrees bit-for-bit."""
     from graphview_spark.operators.text import _ratio_r
     from graphview_spark.plans import lazy as _lazy
 
-    def _pin(df: DataFrame) -> DataFrame:
-        return _lazy.pin(df) if materialize else df
-
-    sym = _pin(
+    sym = _lazy.pin(
         edges.select("src", "sink")
         .union(edges.select(F.col("sink").alias("src"), F.col("src").alias("sink")))
         .distinct()
@@ -1134,7 +1130,7 @@ def node_similarity(
     if max_degree is not None:
         deg_all = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         keep = deg_all.filter(F.col("d") <= max_degree).select("src")
-        sym = _pin(
+        sym = _lazy.pin(
             sym.join(keep, "src")
             .join(keep.withColumnRenamed("src", "sink"), "sink")
             .select("src", "sink")

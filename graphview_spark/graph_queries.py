@@ -30,9 +30,10 @@ Exercised reference semantics, with citations:
 
 Scale notes: graph build is pure DataFrame arithmetic — GlobalNodeId =
 base + key per-row (no shuffle, no window); edge DataFrames derive from
-single parquet scans plus equi-joins. The per-process cache below holds
-localCheckpoint'ed node/edge DFs, the local-mode analog of the parquet
-tables a persistent deployment would keep.
+single parquet scans plus equi-joins. The graph is an app-scoped artifact
+(``graphview_spark.artifacts``) holding localCheckpoint'ed node/edge DFs,
+the local-mode analog of the parquet tables a persistent deployment would
+keep.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphview_spark import artifacts
 from graphview_spark.graph import GraphDatabase
 from graphview_spark.session import read_table
 
@@ -69,21 +71,18 @@ _DDL = [
          Attributes:{prio:"string"}] Placed VARBINARY(max) )""",
 ]
 
-_CACHE: dict[str, tuple[int, GraphDatabase]] = {}
-
-
 def _gid(base: int, key_col: str):
     # mirrors insert_nodes_df's integral fast path: gid = base + key + 1
     return (F.lit(base + 1) + F.col(key_col)).cast("long")
 
 
 def tpch_graph(spark: SparkSession, sf_dir: str) -> GraphDatabase:
-    """Build (or fetch the cached) TPC-H property graph for ``sf_dir``."""
-    tag = id(spark.sparkContext)
-    hit = _CACHE.get(sf_dir)
-    if hit is not None and hit[0] == tag:
-        return hit[1]
+    """The TPC-H property graph for ``sf_dir``, built once per app."""
+    return artifacts.memo(spark, "tpch_graph", sf_dir,
+                          lambda: _build_tpch_graph(spark, sf_dir))
 
+
+def _build_tpch_graph(spark: SparkSession, sf_dir: str) -> GraphDatabase:
     g = GraphDatabase(spark)
     for ddl in _DDL:
         g.create_node_table(ddl)
@@ -165,7 +164,6 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> GraphDatabase:
     )
 
     g.checkpoint_tables()
-    _CACHE[sf_dir] = (tag, g)
     return g
 
 

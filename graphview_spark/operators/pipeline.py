@@ -800,13 +800,12 @@ DRIFT_BUCKETS = 16      # buckets 0..15, top bucket open-ended
 
 
 def drift_bucket(n_chars: Column) -> Column:
-    """The monitored statistic's integer bucket id (composable Column
-    form of the query's `n_chars div 256`; exact because the width is
-    a power of two, so the double division is a pure exponent shift)."""
-    return F.least(
-        F.lit(DRIFT_BUCKETS - 1),
-        F.floor(n_chars.cast("long") / F.lit(DRIFT_BUCKET_W)),
-    ).cast("int")
+    """The monitored statistic's integer bucket id (exact because the
+    width is a power of two, so the double division is a pure exponent
+    shift). NULL for a NULL length: ``least`` skips NULLs, so the clamp
+    alone would put a length-less document in the top bucket."""
+    b = F.floor(n_chars.cast("long") / F.lit(DRIFT_BUCKET_W))
+    return F.when(b.isNotNull(), F.least(F.lit(DRIFT_BUCKETS - 1), b)).cast("int")
 
 
 def q_pipeline_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,11 +815,8 @@ def q_pipeline_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select(
         "lang",
         (F.col("doc_id") % 2).cast("int").alias("half"),
-        F.least(
-            F.lit(DRIFT_BUCKETS - 1),
-            F.expr(f"n_chars div {DRIFT_BUCKET_W}"),
-        ).cast("int").alias("bucket"),
-    )
+        drift_bucket(F.col("n_chars")).alias("bucket"),
+    ).filter(F.col("bucket").isNotNull())
     cnt = (
         docs.groupBy("lang", "bucket")
         .agg(
@@ -880,6 +876,7 @@ WITH d AS (
   SELECT lang, (doc_id % 2)::INT AS half,
          least({nb - 1}, n_chars // {w})::INT AS bucket
   FROM documents
+  WHERE n_chars IS NOT NULL
 ),
 cnt AS (
   SELECT lang, bucket,

@@ -111,15 +111,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
             # DuckDB oracle see)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def evict_dead_app_entries(cache: dict, app_id: str) -> None:
-    """Drop cache entries whose key doesn't start with ``app_id`` — the
-    per-app artifact caches (signatures, pair graphs, stat rows) key
-    on (applicationId, ...), and a long-lived process that
-    recreates SparkSessions would otherwise accumulate DataFrame
-    references bound to stopped contexts (ADVICE r6 #5). Called on
-    cache miss, so a new session never trusts — or retains — a dead
-    session's artifacts."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]

@@ -45,6 +45,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graphview_spark import artifacts
 from graphview_spark.plans import lazy as _lazy
 from graphview_spark.session import read_table
 from graphview_spark.streaming.events import (
@@ -71,16 +72,6 @@ REPLAY_WATERMARK = "2 hours"
 REPLAY_ROWS_PER_SHARD = 150_000
 REPLAY_PYTHON_SHARD_FLOOR = 16
 _counter = itertools.count()
-# slice dirs per (app, label, sf_dir) → (dir, total rows, metadata) —
-# the harness files are a pure deterministic function of the corpus,
-# so re-runs (bench min-of-2, repeated gate calls) reuse one write;
-# same session-artifact discipline as dedup's _EMB_CACHE, keyed by
-# applicationId. ``metadata`` is whatever the caller's metadata_fn
-# returned in the slice-build COLD path (r13, VERDICT r12 "Next #6":
-# corpus-keyed metadata reads — the interval replay's event-type
-# bounds — happen exactly where the slice write does, never inside a
-# timed warm run that skips them).
-_SLICE_CACHE: dict[tuple[str, str, str], tuple[str, int, object]] = {}
 
 
 def _replay_shards(spark: SparkSession, build, total_rows: int) -> int:
@@ -112,21 +103,20 @@ def _replay_through_engine(
     path (its result rides the slice cache) and ``build`` is then
     called as ``build(stream, metadata)`` — bounded corpus metadata
     (the interval replay's event-type bounds) is read exactly where
-    the harness slices are written, never separately memoised."""
+    the harness slices are written, never separately memoised.
+
+    With ``cache_key`` the (slice dir, row count, metadata) triple is an
+    app-scoped artifact: the harness files are a pure deterministic
+    function of the corpus, so re-runs (bench min-of-2, repeated gate
+    calls) reuse one write."""
     from pyspark.sql import Window as W
 
-    app = spark.sparkContext.applicationId
-    key = (app, label, cache_key or "")
-    cached = _SLICE_CACHE.get(key) if cache_key else None
-    base, total_rows, meta = cached if cached is not None else (None, 0, None)
     schema = df.schema
-    if base is None:
-        from graphview_spark.session import evict_dead_app_entries
 
-        evict_dead_app_entries(_SLICE_CACHE, app)
+    def write_slices() -> tuple[str, int, object]:
         base = os.path.join(
-            tempfile.gettempdir(), "gv_stream_replay", app, label,
-            str(next(_counter)))
+            tempfile.gettempdir(), "gv_stream_replay",
+            spark.sparkContext.applicationId, label, str(next(_counter)))
         shutil.rmtree(base, ignore_errors=True)
         total_rows = df.count()  # sizes the state shards (cached)
         meta = metadata_fn(df) if metadata_fn is not None else None
@@ -164,8 +154,11 @@ def _replay_through_engine(
                     os.utime(os.path.join(root, f),
                              (1_000_000 + b, 1_000_000 + b))
         shutil.rmtree(raw, ignore_errors=True)
-        if cache_key:
-            _SLICE_CACHE[key] = (base, total_rows, meta)
+        return base, total_rows, meta
+
+    base, total_rows, meta = (
+        artifacts.memo(spark, "slices", (label, cache_key), write_slices)
+        if cache_key else write_slices())
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

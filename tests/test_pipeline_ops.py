@@ -289,10 +289,10 @@ def test_embed_lsh_gate_id_offset_clears_real_ids(spark, sf_dir):
 
     from graphview_spark.operators.dedup import (
         _EMB_LSH_ID_OFFSET,
-        _read_embeddings,
+        read_embeddings,
     )
 
-    mx = _read_embeddings(spark, sf_dir).agg(F.max("vec_id")).first()[0]
+    mx = read_embeddings(spark, sf_dir).agg(F.max("vec_id")).first()[0]
     assert mx < _EMB_LSH_ID_OFFSET
 
 
@@ -353,14 +353,14 @@ def test_embed_cosine_query_exact_even_with_giant_labels(
     the LSH planes for this query is an error."""
     import graphview_spark.operators.dedup as D
 
-    monkeypatch.setattr(D, "_embed_stats", lambda *a, **k: (10**9, 64))
+    monkeypatch.setattr(D, "embed_stats", lambda *a, **k: (10**9, 64))
 
     def boom(*a, **k):
         raise AssertionError("LSH leg built for the exact query")
 
     monkeypatch.setattr(D, "_embed_lsh_planes", boom)
     got = sorted(map(tuple, D.q_dedup_embed_cosine(spark, sf_dir).collect()))
-    emb = D._read_embeddings(spark, sf_dir)
+    emb = D.read_embeddings(spark, sf_dir)
     want = sorted(map(tuple, D.embed_cosine_pairs(
         emb, D.COSINE_T, label_threshold=10**9).collect()))
     assert got == want and len(got) > 0
@@ -574,3 +574,30 @@ def test_pipeline_drift_matches_hand_computed_psi(spark):
     assert got["psi_micro"] == psi, (got["psi_micro"], psi)
     assert got["new_mass_milli"] == cb[3] * 1000 // tb
     assert got["gone_mass_milli"] == ca[2] * 1000 // ta
+
+
+def test_drift_bucket_null_length_counts_nowhere(spark, tmp_path):
+    """A NULL n_chars has no bucket (``least`` skips NULLs, so a bare
+    clamp put it in the top bucket), and a length-less document leaves
+    the q_pipeline_drift report unchanged."""
+    from pyspark.sql import functions as F
+
+    from graphview_spark.operators.pipeline import (
+        DRIFT_BUCKET_W,
+        drift_bucket,
+        q_pipeline_drift,
+    )
+
+    lens = spark.createDataFrame([(None,), (100,), (99999,)], "n long")
+    assert [r[0] for r in lens.select(drift_bucket(F.col("n"))).collect()] == [
+        None, 0, 15]
+
+    schema = "doc_id long, lang string, source string, n_chars long, text string"
+    rows = [(i, "xx", "s", (i % 3) * DRIFT_BUCKET_W + 5, "t") for i in range(12)]
+    reports = []
+    for name, extra in (("base", []), ("null", [(12, "xx", "s", None, "t")])):
+        d = str(tmp_path / name)
+        spark.createDataFrame(rows + extra, schema).write.parquet(
+            d + "/documents.parquet")
+        reports.append(sorted(map(tuple, q_pipeline_drift(spark, d).collect())))
+    assert reports[0] == reports[1] and reports[0]

@@ -105,14 +105,14 @@ def test_node_sim_hub_cap_in_plan(spark, sf_dir):
     from graphview_spark import algorithms as A
     from graphview_spark.graph_queries import tpch_graph
     from graphview_spark.plans.inspect import optimized_plan
+    from graphview_spark.plans.lazy import lazy_plans
 
     g = tpch_graph(spark, sf_dir)
     edges = g.edge_with_id("Customer.Refers")
-    plan = optimized_plan(
-        A.node_similarity(
-            edges, max_degree=A.NODE_SIM_MAX_DEGREE, materialize=False
+    with lazy_plans():
+        plan = optimized_plan(
+            A.node_similarity(edges, max_degree=A.NODE_SIM_MAX_DEGREE)
         )
-    )
     assert f"<= {A.NODE_SIM_MAX_DEGREE}" in plan, plan[:2000]
     assert "max_degree=NODE_SIM_MAX_DEGREE" in inspect.getsource(
         A.q_graph_node_sim
