@@ -13,14 +13,20 @@ plain edges, ``nodeId-[edge {attr:value, ...}]->nodeId`` for attributed
 ones (the encoder/decoder pair serializes typed edge-attribute values
 per hop, NodeTableGraphViewCodeTemplate.cs:1000-1260).
 
-Spark realization: a driver-side fixpoint loop over DataFrames. Each
-iteration joins the frontier's ``end`` against the edge DF's ``src`` and
-filters used edges with ``array_contains`` on the accumulated key array.
-Frontiers are localCheckpoint'ed each iteration — this cuts lineage
-(otherwise plan depth grows linearly and planning time quadratically)
-and makes the empty-frontier convergence test cheap. Unbounded ``*``
-terminates because a trail can use each edge at most once; we bound the
-loop by |E| (exact trail bound) rather than trusting convergence alone.
+Spark realization: a driver-side loop that builds one frontier frame
+per hop. Each hop joins the previous frontier's ``end`` against the edge
+DF's ``src`` and filters used edges with ``array_contains`` on the
+accumulated key array. The loop runs exactly ``max_len`` hops; unbounded
+``*`` uses |E| (a trail uses each edge at most once) and stops early on
+an empty frontier. A lazy hop is derived once by its own part of the
+output union and once more by every later lazy hop, so the last two hops
+stay lazy (each derived at most twice, inside the caller's query) and
+hop *j* ≤ ``max_len − 2`` is materialized with
+``plans.lazy.counted_ckpt`` (localCheckpoint + stats barrier; the job
+that materializes it also counts it, so the empty-frontier test costs no
+extra job). Materializing every hop would add jobs for frames read at
+most twice; inlining every hop would re-derive hop *j*
+``max_len − j + 1`` times and grow the plan quadratically.
 
 Scale notes: the frontier join shuffles on node id each hop — the same
 partitioning every iteration, so on a real cluster pre-partitioning the
@@ -34,18 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphview_spark.matching.pattern import PatternEdge
-from graphview_spark.plans.lazy import local_ckpt
-
-
-def _ckpt_eager(df: DataFrame) -> DataFrame:
-    # localCheckpoint + stats barrier (plans/lazy.py local_ckpt): stops
-    # Catalyst's sizeInBytes BigInt squaring across BFS rounds
-    return local_ckpt(df, eager=True)
-
-# checkpoint cadence: every iteration is correct but costs a
-# materialization; lineage depth stays tiny either way at cadence 1
-# because each frontier builds on a checkpointed parent.
-_MAX_SAFETY_ITER = 1_000_000
+from graphview_spark.plans.lazy import counted_ckpt
 
 
 def var_length_paths(
@@ -103,43 +98,35 @@ def var_length_paths(
     if max_len == -1:
         # exact trail bound: one path can't reuse an edge
         max_len = edges.count()
-        if max_len == 0:
-            max_len = 1
 
-    # hop 1 frontier
-    frontier = seed.select(
-        F.col("src").alias("start"),
-        F.col("sink").alias("end"),
-        F.lit(1).alias("hops"),
-        F.array(F.col("_ekey")).alias("used_edges"),
-        F.array(F.col("src"), F.col("sink")).alias("used_nodes"),
-        F.concat_ws(
-            "",
-            F.col("src").cast("string"),
-            F.lit("-["),
-            F.col("_emsg"),
-            F.lit("]->"),
-            F.col("sink").cast("string"),
-        ).alias("path_str"),
-    )
-    if node_unique:
-        frontier = frontier.filter(F.col("start") != F.col("end"))
-    frontier = frontier.transform(_ckpt_eager)
-    frontier_empty = frontier.isEmpty()
+    def first_hop() -> DataFrame:
+        hop1 = seed.select(
+            F.col("src").alias("start"),
+            F.col("sink").alias("end"),
+            F.lit(1).alias("hops"),
+            F.array(F.col("_ekey")).alias("used_edges"),
+            F.array(F.col("src"), F.col("sink")).alias("used_nodes"),
+            F.concat_ws(
+                "",
+                F.col("src").cast("string"),
+                F.lit("-["),
+                F.col("_emsg"),
+                F.lit("]->"),
+                F.col("sink").cast("string"),
+            ).alias("path_str"),
+        )
+        if node_unique:
+            hop1 = hop1.filter(F.col("start") != F.col("end"))
+        return hop1
 
-    collected: list[DataFrame] = []
-    if min_len <= 1 and not frontier_empty:
-        collected.append(frontier)
-
-    hop = 1
-    while hop < max_len and hop < _MAX_SAFETY_ITER and not frontier_empty:
+    def next_hop(frontier: DataFrame) -> DataFrame:
         nxt = (
             frontier.join(edges, frontier["end"] == edges["src"])
             .filter(~F.array_contains(F.col("used_edges"), F.col("_ekey")))
         )
         if node_unique:
             nxt = nxt.filter(~F.array_contains(F.col("used_nodes"), F.col("sink")))
-        nxt = nxt.select(
+        return nxt.select(
             F.col("start"),
             F.col("sink").alias("end"),
             (F.col("hops") + 1).alias("hops"),
@@ -153,14 +140,20 @@ def var_length_paths(
                 F.lit("]->"),
                 F.col("sink").cast("string"),
             ).alias("path_str"),
-        ).transform(_ckpt_eager)
-        hop += 1
-        frontier = nxt
-        # one emptiness probe per hop over the just-materialized frontier
-        # (the double isEmpty() here used to cost two jobs per hop)
-        frontier_empty = nxt.isEmpty()
-        if hop >= min_len and not frontier_empty:
-            collected.append(nxt)
+        )
+
+    collected: list[DataFrame] = []
+    frontier = None
+    for hop in range(1, max_len + 1):
+        frontier = first_hop() if frontier is None else next_hop(frontier)
+        # the at-most-twice rule (module docstring): only the last two
+        # hops stay lazy; a materialized empty frontier ends the loop
+        if hop <= max_len - 2:
+            frontier, rows = counted_ckpt(frontier)
+            if rows == 0:
+                break
+        if hop >= min_len:
+            collected.append(frontier)
 
     parts = []
     if min_len == 0:

@@ -1036,6 +1036,11 @@ def _register_views(g, statement: str | None = None) -> None:
     want_degrees = statement is not None and re.search(
         r"(?i)\b(InDegree|OutDegree)\b", statement
     )
+
+    def named(name: str) -> bool:
+        return statement is None or re.search(
+            rf"(?i)(?<!\w){re.escape(name)}(?!\w)", statement) is not None
+
     def _with_degrees(name: str, df):
         # the reference stores InDegree/<Edge>OutDegree as physical
         # columns (GraphViewParser.cs:1041-1131), so plain SELECTs can
@@ -1055,16 +1060,16 @@ def _register_views(g, statement: str | None = None) -> None:
             df = _with_degrees(name, df)
         df.createOrReplaceTempView(name)
     for vname in g.catalog.node_views:
-        if not vname.startswith("_"):
+        # a view is a union over its member tables: build and register
+        # it only for a statement that names it
+        if not vname.startswith("_") and named(vname):
             vdf = g.node_view_df(vname)
             if want_degrees:
                 vdf = _with_degrees(vname, vdf)
             vdf.createOrReplaceTempView(vname)
     for dname, df in g.derived_tables.items():
         df.createOrReplaceTempView(dname)
-    if g.catalog.tables and (
-        statement is None or re.search(r"(?i)\bGlobalNodeView\b", statement)
-    ):
+    if g.catalog.tables and named("GlobalNodeView"):
         # the union of ALL node tables (View.cs:2046-2114), queryable by
         # name like any view; _NodeType/_NodeId discriminate members.
         # Built only when referenced — the all-tables union is not free

@@ -56,15 +56,32 @@ def local_ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
     so the erased stats cost nothing there; outside, AQE's runtime
     sizes — not logical stats — drive its conversions. Falls back to
     the plain checkpoint if the private JVM seam moves."""
-    d = df.localCheckpoint(eager=eager)
+    return _barrier(df.localCheckpoint(eager=eager))[0]
+
+
+def counted_ckpt(df: DataFrame) -> tuple[DataFrame, int]:
+    """``local_ckpt`` that also returns the frame's row count, from the
+    one job that materializes it: a lazy ``localCheckpoint`` whose
+    internal RDD is counted, so a loop that stops on an empty round
+    needs no second ``isEmpty()``/``count()`` job over the checkpoint.
+    The returned frame reads the materialized blocks; like
+    ``local_ckpt`` it ignores ``lazy_plans()``, because the caller's
+    control flow needs the count."""
+    d = df.localCheckpoint(eager=False)
+    frame, jrdd = _barrier(d)
+    return frame, (d.count() if jrdd is None else jrdd.count())
+
+
+def _barrier(d: DataFrame):
+    """The stats-barrier frame over checkpoint ``d``'s internal RDD, and
+    that RDD (``(d, None)`` when the seam is unavailable)."""
+    spark = d.sparkSession
     try:
-        spark = d.sparkSession
         jrdd = d._jdf.queryExecution().toRdd()
         jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
             d.schema.json())
         jdf = spark._jsparkSession.internalCreateDataFrame(
             jrdd, jschema, False)
-        return DataFrame(jdf, spark)
     except Exception:  # pragma: no cover - JVM-version-dependent seam
         global _BARRIER_WARNED
         if not _BARRIER_WARNED:
@@ -76,7 +93,8 @@ def local_ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
                 "moved?) — iterative loops will compound Catalyst "
                 "sizeInBytes statistics; expect planner slowdowns on "
                 "deep loops", RuntimeWarning)
-        return d
+        return d, None
+    return DataFrame(jdf, spark), jrdd
 
 
 _BARRIER_WARNED = False

@@ -1,11 +1,13 @@
 """A graph-DML statement does only the work its answer depends on: the
 DELETE NODE guard reads only the matched nodes' edges, checkpoint_tables
-materializes only the tables DML changed, and a MATCH with no join-order
-choice plans without statistics."""
+materializes only the tables DML changed, a MATCH with no join-order
+choice plans without statistics, and a var-length read materializes no
+hop that is read at most twice."""
 
 from __future__ import annotations
 
 import gc
+import itertools
 import random
 import weakref
 
@@ -103,7 +105,13 @@ def _is_checkpoint_scan(df) -> bool:
             and plan.children().isEmpty())
 
 
+_GROUPS = itertools.count()
+
+
 def _jobs(spark, fn, group: str) -> int:
+    # a serial suffix keeps groups distinct: names built from id() of a
+    # collected object repeat, and the tracker would add the old jobs
+    group = f"{group}-{next(_GROUPS)}"
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -403,3 +411,75 @@ def test_dml_cycle_job_budget(spark):
     assert all(c["delete_edge"] <= 6 for c in per_cycle[2:]), per_cycle
     totals = [sum(c.values()) for c in per_cycle[2:]]
     assert len(set(totals)) == 1, per_cycle
+
+
+def test_var_length_read_job_budget(spark):
+    """From the third cycle on, the *1..2 read-after-write launches at
+    most 8 jobs: the ordinal pin and the collect, with both hops lazy
+    inside the collect. Checkpointing and probing each hop costs 12."""
+    g = _graph(spark)
+    per_cycle = [_run_cycle(spark, g, k) for k in range(100, 106)]
+    assert all(c["read"] <= 8 for c in per_cycle[2:]), per_cycle
+
+
+def test_counted_ckpt_counts_in_the_materializing_job(spark):
+    """counted_ckpt returns the exact row count of an empty frame and of
+    a frame after a shuffle while launching only the jobs an eager
+    checkpoint alone launches, and reading the returned frame later does
+    not recompute its source (a UDF after the shuffle runs once a row)."""
+    from graphview_spark.plans.lazy import counted_ckpt
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    def shuffled():
+        return (spark.range(0, 100, 1, 4).repartition(3, "id")
+                .withColumn("v", F.udf(tick, "long")("id"))
+                .filter("id % 2 = 0"))
+
+    def empty():
+        return spark.range(0, 10, 1, 2).filter("id > 100").repartition(2)
+
+    for make, n in ((shuffled, 50), (empty, 0)):
+        got = {}
+
+        def run():
+            got["frame"], got["rows"] = counted_ckpt(make())
+
+        jobs = _jobs(spark, run, f"gv-counted-{n}")
+        assert got["rows"] == n
+        assert jobs == _jobs(spark, lambda: make().localCheckpoint(eager=True),
+                             f"gv-eager-{n}")
+        before = calls.value
+        assert sorted(r["id"] for r in got["frame"].collect()) == list(
+            range(0, 2 * n, 2))
+        assert calls.value == before
+    assert calls.value == 100  # 50 from counted_ckpt, 50 from the twin
+    frame, rows = counted_ckpt(spark.createDataFrame([], "a long"))
+    assert rows == 0 and frame.collect() == []
+
+
+def test_node_view_built_only_for_statements_naming_it(spark, monkeypatch):
+    """A statement builds a node view only when it names it: plain SQL,
+    a MATCH and an INSERT EDGE ... SELECT over a member table never call
+    node_view_df, and a later SELECT over the view sees the rows DML
+    added to a member table."""
+    g = _graph(spark)
+    g.execute("CREATE NODE VIEW PT AS SELECT id FROM P "
+              "UNION ALL SELECT id FROM T")
+    built = []
+    orig = g.node_view_df
+    monkeypatch.setattr(g, "node_view_df",
+                        lambda name: built.append(name) or orig(name))
+    g.execute("INSERT INTO P(id) VALUES (7)")
+    assert [r["id"] for r in g.execute(
+        "SELECT id FROM P WHERE id > 6").collect()] == [7]
+    g.execute("SELECT a.id FROM P a, P b MATCH a-[Knows]->b").collect()
+    g.execute("INSERT EDGE INTO P.Knows SELECT x, y FROM P x, P y "
+              "WHERE x.id = 7 AND y.id = 7")
+    assert built == []
+    ids = [r["id"] for r in g.execute("SELECT id FROM PT").collect()]
+    assert built == ["PT"] and sorted(ids) == [1, 1, 2, 2, 3, 4, 5, 6, 7]

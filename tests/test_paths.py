@@ -55,6 +55,17 @@ def test_bounded_1_2(diamond):
     ])
 
 
+def test_zero_zero_is_only_the_empty_path(diamond):
+    """``*0..0`` builds no hop: each node reaches itself and nothing
+    else, through the function and through a MATCH statement."""
+    assert _paths(diamond, "E*0..0") == [(n, n, 0) for n in (1, 2, 3, 4)]
+    rows = diamond.execute(
+        "SELECT x.id AS s, y.id AS t FROM N x, N y MATCH x-[E*0..0]->y"
+    ).collect()
+    assert sorted((r["s"], r["t"]) for r in rows) == [
+        (n, n) for n in (1, 2, 3, 4)]
+
+
 def test_trail_semantics_edge_unique_not_node_unique(diamond):
     """1→2→3→2→4 is a valid TRAIL (node 2 twice, all edges distinct) —
     the reference's ExclusiveEdgeGenerator semantics."""

@@ -380,6 +380,22 @@ def audit(sf_dir: str) -> str:
         "moves 7→8 with this note as the justification; oracle rows",
         "green at sf0.001 + sf0.01.",
         "",
+        "## match_refer_path budget 0 → 6 exchanges (var-length hops inlined)",
+        "",
+        "`var_length_paths` materializes hop j only when j ≤ max − 2: the",
+        "last two hops are derived at most twice and now run inside the",
+        "caller's query instead of as per-hop checkpoints (each followed by",
+        "an emptiness probe). Under `lazy_plans()` the edge-ordinal pin",
+        "passes through, so this `*1..3` row now shows its hop-2 and hop-3",
+        "joins where it used to show audit-time checkpoint scans: exchanges",
+        "0 → 6, SMJ/SHJ 0 → 3 (broadcast stays 4). Every other row is",
+        "unchanged. Executed (non-lazy, AQE final plan, 4-CPU host), before",
+        "→ after: sf0.01 16 → 9 jobs, 0 → 2 hash shuffles (the hop-1",
+        "frontier and the edge side, each read locally; 3 exchange reuses),",
+        "2 → 5 broadcast joins, 0 → 0 sort-merge joins; sf0.1 16 → 10 jobs",
+        "with the same shape (AQE adds a runtime bloom filter on the start",
+        "set). Same 14 rows; oracle row green.",
+        "",
         "| query | exchanges | broadcast | SMJ/SHJ | python | cartesian | pushed filters |",
         "|---|---|---|---|---|---|---|",
     ]
