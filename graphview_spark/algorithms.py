@@ -11,8 +11,10 @@ aggregateMessages (GraphX itself is JVM/RDD-only, SURVEY §2.6).
 
 Scale notes: every iteration is one shuffle on node id (the same
 partitioning each round — bucketed edge storage makes it co-located);
-state per node is O(1); localCheckpoint every iteration keeps plan
-depth constant. Convergence tests cost one tiny aggregate per round.
+state per node is O(1); a loop checkpoint every iteration keeps plan
+depth constant — ``local_ckpt``, or ``counted_ckpt`` where the loop
+reads a size, so that size comes from the job that materializes the
+round (plans/lazy.py).
 """
 
 from __future__ import annotations
@@ -25,18 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from graphview_spark.plans.lazy import local_ckpt
-
-
-# loop-checkpoint helpers (used via .transform to keep chain style):
-# local_ckpt = localCheckpoint + the stats barrier that stops Catalyst's
-# sizeInBytes BigInt from squaring per loop round (see plans/lazy.py)
-def _ckpt_eager(df: DataFrame) -> DataFrame:
-    return local_ckpt(df, eager=True)
-
-
-def _ckpt_lazy(df: DataFrame) -> DataFrame:
-    return local_ckpt(df, eager=False)
+# the loop checkpoints (see plans/lazy.py): local_ckpt when the loop
+# reads no size, counted_ckpt when its control flow reads one
+from graphview_spark.plans.lazy import counted_ckpt, local_ckpt
 
 
 # Below this frame size the iterative loops size their own shuffles
@@ -56,14 +49,14 @@ def _loop_regime(spark):
     which DOMINATES loops whose per-round data cost is tens of ms.
     Inside this context the loop takes over AQE's one useful decision
     (partition-count sizing) itself via ``_loop_partitions``: callers
-    know their live frame size each round (the fixpoint probe already
-    counts it) and set shuffle partitions proportional to it, exactly
-    the coalescing AQE would pick but decided once on the driver for
-    free. Frames above _LOOP_SMALL_ROWS keep the session defaults —
-    at cluster scale the loop body is data-dominated and AQE's skew
-    splitting matters more than its scheduling overhead. Yields a
-    ``size(n_rows)`` callable the loop invokes before building each
-    round's plan; session config is restored on exit.
+    know their live frame size each round (their counted checkpoint
+    already measured it) and set shuffle partitions proportional to
+    it, exactly the coalescing AQE would pick but decided once on the
+    driver for free. Frames above _LOOP_SMALL_ROWS keep the session
+    defaults — at cluster scale the loop body is data-dominated and
+    AQE's skew splitting matters more than its scheduling overhead.
+    Yields a ``size(n_rows)`` callable the loop invokes before
+    building each round's plan; session config is restored on exit.
 
     Concurrency contract (ADVICE r6 #1): this mutates SESSION-GLOBAL
     conf, so it assumes a single-threaded driver — the repo's execution
@@ -74,8 +67,8 @@ def _loop_regime(spark):
     authors: the regime only governs actions EXECUTED inside the
     context — a lazily-checkpointed frame that escapes materializes
     under the restored session conf, so materialize any frame whose
-    shuffle shape matters with an eager action BEFORE the context
-    exits."""
+    shuffle shape matters (a counted checkpoint, or a job that reads
+    it) BEFORE the context exits."""
     conf = spark.conf
     prev_aqe = conf.get("spark.sql.adaptive.enabled")
     prev_parts = conf.get("spark.sql.shuffle.partitions")
@@ -86,8 +79,8 @@ def _loop_regime(spark):
             conf.set("spark.sql.shuffle.partitions", prev_parts)
             return
         # floor of 8: fewer leaves cores idle on the shuffle-heavy
-        # rounds (measured ~15% slower at 4 on the sf0.1 distance
-        # closure loop this regime was tuned on)
+        # rounds (measured ~15% slower at 4 on the sf0.1 loop this
+        # regime was tuned on)
         parts = max(8, min(int(prev_parts),
                            n_rows // _LOOP_ROWS_PER_PARTITION + 1))
         conf.set("spark.sql.adaptive.enabled", "false")
@@ -144,20 +137,25 @@ def pagerank(
     """PageRank over (GlobalNodeId) nodes and (src, sink) edges; fixed
     iteration count → deterministic. Dangling mass is redistributed
     uniformly (the standard formulation). ``grid`` snaps each round's
-    ranks to that many decimals (see SCORE_GRID; None disables).
+    ranks to that many decimals (see SCORE_GRID; None disables). An
+    empty node frame gives an empty (GlobalNodeId, rank) frame.
 
     Fixed iterations + no driver-side probe → the per-round checkpoints
-    are LAZY (shallow plans via LogicalRDD, but nothing materializes
-    until the caller's one action walks the chain — zero Python driver
-    syncs in the loop; same pattern as hits())."""
+    are ``local_ckpt``: shallow plans via LogicalRDD and no size probe,
+    but under AQE the stats barrier's ``toRdd()`` runs every round's
+    shuffle stages while the frame is built, one round after another
+    (graph_pagerank: 65 jobs at build, sf0.01); same pattern as
+    hits()."""
     n = nodes.count()
+    if n == 0:
+        return nodes.select("GlobalNodeId", F.lit(0.0).alias("rank"))
     ranks = nodes.select("GlobalNodeId").withColumn("rank", F.lit(1.0 / n))
     # scanned every round — materialize the edge lineage once
-    edges = edges.select("src", "sink").transform(_ckpt_lazy)
+    edges = edges.select("src", "sink").transform(local_ckpt)
     degrees = (
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
         # consumed by TWO joins per round — materialize once up front
-        .transform(_ckpt_lazy)
+        .transform(local_ckpt)
     )
 
     for _ in range(iterations):
@@ -193,14 +191,12 @@ def pagerank(
             .join(contribs, "GlobalNodeId", "left")
             .join(F.broadcast(dangling))
             .select("GlobalNodeId", new_rank.alias("rank"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
     return ranks
 
 
-def shortest_paths(
-    sources: DataFrame, edges: DataFrame, max_iterations: int = 60
-) -> DataFrame:
+def shortest_paths(sources: DataFrame, edges: DataFrame) -> DataFrame:
     """Unweighted single/multi-source shortest paths (BFS) — min hop
     distance from any node in ``sources`` following edge direction.
     Returns (GlobalNodeId, dist) for reachable nodes only.
@@ -208,15 +204,16 @@ def shortest_paths(
     Frontier formulation: each round joins only the nodes SETTLED LAST
     ROUND against the edge list, so total work is O(sum of frontier
     degrees) = O(E) across the whole run — not O(E) per round like a
-    dense Bellman-Ford sweep. Each round is one shuffle on node id;
-    localCheckpoint caps lineage; the settled set grows monotonically so
-    the anti-join is the BFS visited check."""
+    dense Bellman-Ford sweep. Each round is one shuffle on node id and
+    one counted checkpoint; the settled set grows monotonically so the
+    anti-join is the BFS visited check, and the loop ends on the first
+    empty frontier — within |V| rounds, with no depth cap."""
     dist = sources.select(
         "GlobalNodeId", F.lit(0).cast("long").alias("dist")
-    ).transform(_ckpt_eager)
+    ).transform(local_ckpt)
     frontier = dist
-    for _ in range(max_iterations):
-        nxt = (
+    while True:
+        frontier, rows = counted_ckpt(
             frontier.join(edges, frontier["GlobalNodeId"] == edges["src"])
             .select(
                 F.col("sink").alias("GlobalNodeId"),
@@ -225,13 +222,10 @@ def shortest_paths(
             .groupBy("GlobalNodeId")
             .agg(F.min("dist").alias("dist"))
             .join(dist, "GlobalNodeId", "left_anti")
-            .transform(_ckpt_eager)
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).transform(_ckpt_eager)
-        frontier = nxt
-    return dist
+        if rows == 0:
+            return dist
+        dist = dist.unionByName(frontier).transform(local_ckpt)
 
 
 def triangle_count(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -247,7 +241,7 @@ def triangle_count(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     e = (
         pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
         .distinct()
-        .transform(_ckpt_eager)
+        .transform(local_ckpt)
     )
     ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
     tri = (
@@ -283,19 +277,19 @@ def k_core(
         pairs.select(F.col(a).alias("s"), F.col(b).alias("t"))
         .union(pairs.select(F.col(b).alias("s"), F.col(a).alias("t")))
         .distinct()
-        .transform(_ckpt_eager)
+        .transform(local_ckpt)
     )
     cur = und
     while True:
         deg = cur.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        low = deg.filter(F.col("d") < k).select("s").transform(_ckpt_eager)
-        if low.isEmpty():
+        low, n_low = counted_ckpt(deg.filter(F.col("d") < k).select("s"))
+        if n_low == 0:
             break
         cur = (
             cur.join(low, "s", "left_anti")
             .join(low.withColumnRenamed("s", "t"), "t", "left_anti")
             .select("s", "t")
-            .transform(_ckpt_eager)
+            .transform(local_ckpt)
         )
     return (
         cur.groupBy("s")
@@ -330,10 +324,12 @@ def hits(
     per half-step and nothing else — no per-round normalization joins,
     no 1-row broadcast-exchange jobs, no full-node-frame join (zero-
     score nodes contribute zero to every sum; the full frame is
-    assembled once at the end). All checkpoints lazy; the caller's
-    single action materializes the whole 2×iterations-stage chain.
-    Fixed iteration count → deterministic and oracle-checkable as
-    unrolled CTEs.
+    assembled once at the end). Every round checkpoints through
+    ``local_ckpt`` and nothing probes a size, but under AQE the stats
+    barrier's ``toRdd()`` runs each half-step's shuffle stages while
+    the frame is built (graph_hits: 42 jobs at build, sf0.01); only
+    the last stages wait for the caller's action. Fixed iteration
+    count → deterministic and oracle-checkable as unrolled CTEs.
 
     Exactness bound: the dyadic numerators are path counts, so the
     no-snap guarantee holds while the number of ≤2·iterations-edge
@@ -351,12 +347,15 @@ def hits(
     from graphview_spark.plans import lazy as _lazy
 
     # 2 scans per round × iterations — materialize the edge lineage
-    # once (pin: pass-through under the lazy plan audit, so auditing
-    # graph_hits neither runs a job nor truncates the audited plan)
-    edges = _lazy.pin(edges.select("src", "sink"))
+    # once: counted when the scale must come from |E|, else pinned
+    # (pass-through under the lazy plan audit, so auditing graph_hits
+    # neither runs a job nor truncates the audited plan)
+    edges = edges.select("src", "sink")
     if scale is None:
-        n_e = edges.count()
+        edges, n_e = counted_ckpt(edges)
         scale = math.ldexp(1.0, max(n_e - 1, 1).bit_length())
+    else:
+        edges = _lazy.pin(edges)
     inv = 1.0 / scale  # exact: scale is a power of two
 
     def _step(c):
@@ -368,7 +367,7 @@ def hits(
     hub = (
         edges.select(F.col("src").alias("GlobalNodeId")).distinct()
         .select("GlobalNodeId", F.lit(1.0).alias("score"))
-        .transform(_ckpt_lazy)
+        .transform(local_ckpt)
     )
     auth = None
     for _ in range(iterations):
@@ -376,13 +375,13 @@ def hits(
             edges.join(hub, edges["src"] == hub["GlobalNodeId"])
             .groupBy(F.col("sink").alias("GlobalNodeId"))
             .agg(_step(F.sum("score") * inv).alias("score"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
         hub = (
             edges.join(auth, edges["sink"] == auth["GlobalNodeId"])
             .groupBy(F.col("src").alias("GlobalNodeId"))
             .agg(_step(F.sum("score") * inv).alias("score"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
     # single L1 normalization + full-node assembly, once: nodes outside
     # a support set have exactly 0.0 (they received no mass). The two
@@ -416,8 +415,9 @@ def personalized_pagerank(
     set (uniformly) instead of to all nodes — the standard seeded
     relevance ranking. Same loop shape as :func:`pagerank` (one shuffle
     per round on node id, dangling mass redistributed to the teleport
-    vector, per-round SCORE_GRID snap, LAZY per-round checkpoints —
-    shallow plans, one materializing action at the caller)."""
+    vector, per-round SCORE_GRID snap, ``local_ckpt`` per round, whose
+    stats barrier runs each round's shuffle stages while the frame is
+    built — graph_ppr: 68 jobs at build, sf0.01)."""
     n_src = sources.count()
     if n_src == 0:
         raise ValueError(
@@ -430,12 +430,12 @@ def personalized_pagerank(
         "left",
     ).select(
         "GlobalNodeId", F.coalesce(F.col("_p"), F.lit(0.0)).alias("p")
-    ).transform(_ckpt_eager)
+    ).transform(local_ckpt)
     ranks = pref.select("GlobalNodeId", F.col("p").alias("rank"))
-    edges = edges.select("src", "sink").transform(_ckpt_lazy)
+    edges = edges.select("src", "sink").transform(local_ckpt)
     degrees = (
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-        .transform(_ckpt_lazy)
+        .transform(local_ckpt)
     )
 
     for _ in range(iterations):
@@ -467,7 +467,7 @@ def personalized_pagerank(
             pref.join(contribs, "GlobalNodeId", "left")
             .join(F.broadcast(dangling))
             .select("GlobalNodeId", new_rank.alias("rank"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
     return ranks
 
@@ -480,10 +480,10 @@ def connected_components(
     undirected). Returns (GlobalNodeId, component)."""
     labels = nodes.select(
         "GlobalNodeId", F.col("GlobalNodeId").alias("component")
-    ).transform(_ckpt_eager)
+    ).transform(local_ckpt)
     sym = edges.select("src", "sink").union(
         edges.select(F.col("sink").alias("src"), F.col("src").alias("sink"))
-    ).transform(_ckpt_eager)
+    ).transform(local_ckpt)
 
     for _ in range(max_iterations):
         neighbor_min = (
@@ -493,8 +493,9 @@ def connected_components(
             .agg(F.min("component").alias("nbr_min"))
         )
         # carry a per-row changed flag through the checkpoint: the
-        # convergence test becomes one cheap aggregate over materialized
-        # rows instead of a second join+filter recompute per round
+        # convergence test becomes one cheap aggregate that reads every
+        # partition, so it also fills the lazy checkpoint, instead of a
+        # second join+filter recompute per round
         updated = labels.join(neighbor_min, "GlobalNodeId", "left").select(
             "GlobalNodeId",
             F.least(
@@ -526,7 +527,7 @@ def connected_components(
                     (compressed < F.col("component")).cast("int"),
                 ).alias("_chg"),
             )
-            .transform(_ckpt_eager)
+            .transform(local_ckpt)
         )
         changed = updated.agg(F.coalesce(F.max("_chg"), F.lit(0))).first()[0]
         labels = updated.drop("_chg")
@@ -724,11 +725,12 @@ def bellman_ford(
     makes the result deterministic and oracle-expressible as unrolled
     CTEs; k rounds give exact distances for all shortest paths of ≤ k
     edges (run diameter-many rounds for the full fixpoint). One
-    join+groupBy shuffle per round on the stable node-id key, with
-    LAZY checkpoints (shallow plans, one materializing action at the
-    caller — same posture as pagerank above)."""
+    join+groupBy shuffle per round on the stable node-id key, with a
+    ``local_ckpt`` per round (shallow plans and no size probe; under
+    AQE each round's shuffle stages run while the frame is built —
+    same posture as pagerank above)."""
     dist = source.select("id", F.lit(0).cast("long").alias("dist"))
-    edges = edges.select("src", "sink", "w").transform(_ckpt_lazy)
+    edges = edges.select("src", "sink", "w").transform(local_ckpt)
     for _ in range(iterations):
         relaxed = (
             edges.join(dist, edges["src"] == dist["id"])
@@ -736,7 +738,7 @@ def bellman_ford(
             .unionByName(dist)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
         dist = relaxed
     return dist
@@ -810,17 +812,16 @@ def label_propagation(
     posture as pagerank/components above."""
     from pyspark.sql import Window as W
 
-    # fixed iterations, no driver probe → LAZY checkpoints throughout:
-    # shallow per-round plans, one materializing action at the caller
-    # (same pattern as pagerank/hits)
+    # fixed iterations, no driver probe → local_ckpt throughout:
+    # shallow per-round plans, no size probe (same pattern as
+    # pagerank/hits, whose docstrings say what AQE still runs at build)
     sym = (
         edges.select("src", "sink")
         .union(edges.select(F.col("sink").alias("src"), F.col("src").alias("sink")))
-        .transform(_ckpt_lazy)
+        .transform(local_ckpt)
     )
     labels = nodes.select("id", F.col("id").alias("label")).transform(
-        _ckpt_lazy
-    )
+        local_ckpt)
     for _ in range(iterations):
         counts = (
             sym.join(labels, sym["src"] == labels["id"])
@@ -847,7 +848,7 @@ def label_propagation(
                 "id",
                 F.coalesce(F.col("__new"), F.col("label")).alias("label"),
             )
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
     return labels
 
@@ -1005,12 +1006,9 @@ def k_truss(
     localCheckpoint caps lineage. Requires k ≥ 3."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
-    e = (
-        pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
-        .distinct()
-        .transform(_ckpt_eager)
+    e, n_edges = counted_ckpt(
+        pairs.select(F.col(a).alias("a"), F.col(b).alias("b")).distinct()
     )
-    n_edges = e.count()
     while True:
         ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
         tri = (
@@ -1033,12 +1031,11 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        kept = sup.filter(F.col("support") >= k - 2).transform(_ckpt_eager)
-        n_kept = kept.count()
+        kept, n_kept = counted_ckpt(sup.filter(F.col("support") >= k - 2))
         if n_kept == n_edges:
             return kept
         n_edges = n_kept
-        e = kept.select("a", "b").transform(_ckpt_eager)
+        e = kept.select("a", "b")
 
 
 KTRUSS_K = 3
@@ -1402,8 +1399,8 @@ def _propagate_fb(lab: DataFrame, e: DataFrame,
     are (h, id) structs so the min travels by hash and carries the
     pivot's id. Fusing the directions halves the per-round job count —
     one join+groupBy shuffle per round on the stable (id, dir) key
-    moves both fixpoints one step. Per-round checkpoints are LAZY
-    (eager=False): lineage still truncates every round (shallow plans,
+    moves both fixpoints one step. Per-round checkpoints are
+    ``local_ckpt``: lineage still truncates every round (shallow plans,
     no exponential recompute), but only the convergence probe — every
     ``_SCC_PROBE_EVERY`` rounds — actually materializes, so the driver
     pays ~0.25 jobs/round instead of 1.25. Up to 3 no-op rounds of
@@ -1415,10 +1412,10 @@ def _propagate_fb(lab: DataFrame, e: DataFrame,
     ).unionByName(e.select(
         F.col("sink").alias("send"), F.col("src").alias("recv"),
         F.lit("b").alias("dir"),
-    )).transform(_ckpt_lazy)
+    )).transform(local_ckpt)
     cur = lab.select("id", F.lit("f").alias("dir"), "p").unionByName(
         lab.select("id", F.lit("b").alias("dir"), "p")
-    ).transform(_ckpt_lazy)
+    ).transform(local_ckpt)
     snap = cur
 
     def _step(cur):
@@ -1442,7 +1439,7 @@ def _propagate_fb(lab: DataFrame, e: DataFrame,
     # variant was measured 2× SLOWER at the sf0.1 bench: the doubled
     # plan costs more per materialization than the saved planning)
     for i in range(1, max_iter + 1):
-        cur = _step(cur).transform(_ckpt_lazy)
+        cur = _step(cur).transform(local_ckpt)
         if i % _SCC_PROBE_EVERY == 0:
             changed = (
                 cur.join(snap.withColumnRenamed("p", "p0"), ["id", "dir"])
@@ -1501,7 +1498,7 @@ def strongly_connected_components(
     # restriction into the caller's joins, where each copy costs
     # another broadcast job
     e = (
-        edges.select("src", "sink").transform(_ckpt_lazy)
+        edges.select("src", "sink").transform(local_ckpt)
         .join(ids.select(F.col("id").alias("src")), "src", "semi")
         .join(ids.select(F.col("id").alias("sink")), "sink", "semi")
     )
@@ -1634,12 +1631,11 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
     fixture) they dispose of the entire acyclic fringe so the FB
     fixpoints run only on the small cyclic core (measured: the first
     FB fixpoint alone cost 45 s at 150k nodes pre-trim)."""
-    remaining = nodes.select("id").transform(_ckpt_eager)
     parts: list[DataFrame] = []
     with _loop_regime(nodes.sparkSession) as size_shuffle:
-        remaining, e = _scc_trim(remaining, e, parts, size_shuffle)
+        residual = _scc_trim(nodes.select("id"), e, parts, size_shuffle)
         _scc_peel_rounds(
-            remaining, e, parts, max_rounds, size_shuffle,
+            residual, parts, max_rounds, size_shuffle,
             _DRIVER_EDGES if driver_edges is None else driver_edges)
     if not parts:
         return nodes.sparkSession.createDataFrame(
@@ -1654,32 +1650,29 @@ def _scc_peel(nodes: DataFrame, e: DataFrame,
 def _scc_trim(remaining, e, parts, size_shuffle, max_rounds: int = 256):
     """Iterative trim (see _scc_peel): peel nodes whose residual in- or
     out-degree is zero as singleton SCCs until a fixpoint. Each round
-    is two distinct projections + semi/anti joins on node id and ONE
-    count probe; rounds = the graph's trim depth (tree height for the
-    acyclic fringe). Returns the (remaining, edges) cyclic core.
+    is two distinct projections + semi/anti joins on node id and two
+    counted checkpoints; rounds = the graph's trim depth (tree height
+    for the acyclic fringe). Returns the cyclic core as (remaining,
+    edges, n_remaining, n_edges), the counts measured by those
+    checkpoints.
 
     Shuffle sizing rides the EDGE count, not the node residual (ADVICE
     r8 #3): the dominant per-round jobs — the two distinct projections
     and the two edge semi-joins — shuffle the edge frame, which on the
     high-fanout graphs trim targets can be orders of magnitude larger
     than the node set; sizing on nodes alone under-partitioned them
-    with AQE off. The per-round edge count() doubles as the lazy
-    checkpoint's materializing action (the next round's scans reuse the
-    materialized RDD), so it promotes work that was due anyway rather
-    than adding a pass."""
-    n_rem = remaining.count()
-    n_edge = e.count()
+    with AQE off. The per-round edge count is the job that materializes
+    the edge checkpoint (the next round's scans reuse the materialized
+    RDD), so it promotes work that was due anyway rather than adding a
+    pass."""
+    remaining, n_rem = counted_ckpt(remaining)
+    e, n_edge = counted_ckpt(e)
     for _ in range(max_rounds):
         if n_rem == 0:
-            return remaining, e
+            break
         size_shuffle(max(n_rem, n_edge))
         srcs = e.select(F.col("src").alias("id")).distinct()
         sinks = e.select(F.col("sink").alias("id")).distinct()
-        keep = (
-            remaining.join(srcs, "id", "semi")
-            .join(sinks, "id", "semi")
-            .transform(_ckpt_lazy)
-        )
         # Round 13 probe: fusing the two per-round count jobs (n_keep +
         # n_edge) into one tagged union count was tried and MEASURED
         # SLOWER at sf1 (trim 11.1 → 12.5 s, graph_scc 31.4 → 33.4 s):
@@ -1687,26 +1680,26 @@ def _scc_trim(remaining, e, parts, size_shuffle, max_rounds: int = 256):
         # materialization and pays a deeper plan, the same failure mode
         # as _propagate_fb's rejected two-step fusion. The two-job
         # shape below stands.
-        n_keep = keep.count()
+        keep, n_keep = counted_ckpt(
+            remaining.join(srcs, "id", "semi").join(sinks, "id", "semi"))
         if n_keep == n_rem:
-            return remaining, e
+            break
         parts.append(
             remaining.join(keep, "id", "anti")
             .select("id", F.col("id").alias("scc"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
-        e = (
+        e, n_edge = counted_ckpt(
             e.join(keep.select(F.col("id").alias("src")), "src", "semi")
             .join(keep.select(F.col("id").alias("sink")), "sink", "semi")
             .select("src", "sink")
-            .transform(_ckpt_lazy)
         )
-        n_edge = e.count()
         remaining, n_rem = keep, n_keep
-    return remaining, e  # depth cap: peel handles whatever is left
+    # fixpoint, or the depth cap: the peel handles whatever is left
+    return remaining, e, n_rem, n_edge
 
 
-def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
+def _scc_peel_rounds(residual, parts, max_rounds, size_shuffle,
                      driver_edges: int):
     """Peel loop body (see _scc_peel): mutates ``parts`` in place so the
     caller can union outside the loop regime. As soon as the residual
@@ -1714,14 +1707,14 @@ def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
     exactly on the driver (_scc_on_driver) — after trim and a few class
     restrictions the residual is usually a sliver whose FB fixpoints
     would pay the per-job floor for nothing. ``driver_edges=0`` keeps
-    every round on the FB leg (the oracle-gated peel fixture)."""
+    every round on the FB leg (the oracle-gated peel fixture).
+    ``residual`` is _scc_trim's (remaining, edges, n_remaining,
+    n_edges); each round's counted checkpoints measure the next."""
+    remaining, e, n_remaining, n_edge = residual
     for _ in range(max_rounds):
-        n_remaining = remaining.count()
         if n_remaining == 0:
             return
-        # the count also materializes the lazily checkpointed residual
-        # the next FB round reads; the collect runs only once it fits
-        if driver_edges and e.count() <= driver_edges:
+        if driver_edges and n_edge <= driver_edges:
             parts.append(_scc_on_driver(
                 remaining, _collect_edges(e, driver_edges)))
             return
@@ -1737,7 +1730,7 @@ def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
                     W.partitionBy("f", "b")
                 )
             )
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
         peel = (F.col("f") == F.col("b")) | (F.col("n") == 1)
         sccs = (
@@ -1747,10 +1740,10 @@ def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
                 F.when(F.col("f") == F.col("b"), F.col("f.pid"))
                 .otherwise(F.col("id")).alias("scc"),
             )
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
         parts.append(sccs)
-        survivors = cls.filter(~peel).transform(_ckpt_lazy)
+        survivors, n_remaining = counted_ckpt(cls.filter(~peel))
         remaining = survivors.select("id")
         # class restriction: only same-(f,b)-class edges can sit inside
         # a still-unresolved SCC. Node-sized side tables: plain
@@ -1763,13 +1756,12 @@ def _scc_peel_rounds(remaining, e, parts, max_rounds, size_shuffle,
         rhs = survivors.select(F.col("id").alias("sink"),
                                F.col("f").alias("_ft"),
                                F.col("b").alias("_bt"))
-        e = (
+        e, n_edge = counted_ckpt(
             e.join(lhs, "src")
             .join(rhs, "sink")
             .filter((F.col("_fs") == F.col("_ft"))
                     & (F.col("_bs") == F.col("_bt")))
             .select("src", "sink")
-            .transform(_ckpt_lazy)
         )
     raise RuntimeError(f"SCC did not converge in {max_rounds} rounds")
 
@@ -2009,38 +2001,33 @@ def multi_source_levels(
     sid = seeds.columns[0]
     spark = seeds.sparkSession
     with _loop_regime(spark) as size_shuffle:
-        edges = (
-            edges.select("src", "sink").dropna().distinct()
-            .transform(_ckpt_eager)
-        )
-        size_shuffle(edges.count())
+        edges, n_edges = counted_ckpt(
+            edges.select("src", "sink").dropna().distinct())
+        size_shuffle(n_edges)
         lvl = (
             seeds.select(F.col(sid).alias("s"))
             .distinct()
             .select("s", F.col("s").alias("id"),
                     F.lit(1.0).alias("sigma"))
-            .transform(_ckpt_eager)
+            .transform(local_ckpt)
         )
         levels = [lvl]
         # settled = plain union of already-checkpointed level frames:
         # no checkpoint of its own (the lineage is just LogicalRDD
-        # unions, nothing recomputes), and the per-level count() probe
-        # doubles as the checkpoint-materializing action — ONE job per
-        # BFS level (count computes every partition, so the lazy
-        # checkpoint is fully cached; isEmpty would leave partitions
-        # unmaterialized)
+        # unions, nothing recomputes), and each level's counted
+        # checkpoint is ONE job per BFS level (level 0 materializes in
+        # level 1's job)
         settled = lvl.select("s", "id")
         for _ in range(max_depth):
             frontier = levels[-1]
-            nxt = (
+            nxt, rows = counted_ckpt(
                 frontier.join(edges, frontier["id"] == edges["src"])
                 .select("s", F.col("sink").alias("id"), "sigma")
                 .groupBy("s", "id")
                 .agg(F.sum("sigma").alias("sigma"))
                 .join(settled, ["s", "id"], "left_anti")
-                .transform(_ckpt_lazy)
             )
-            if nxt.count() == 0:
+            if rows == 0:
                 return levels, edges
             levels.append(nxt)
             settled = settled.unionByName(nxt.select("s", "id"))
@@ -2105,11 +2092,10 @@ def brandes_betweenness(
     # undercounting past max_depth
     levels, edges = multi_source_levels(seeds, edges, max_depth=max_depth)
     # reverse sweep: δ at the deepest level is 0; each shallower level
-    # joins its BFS-tree successors one level down. Lazy checkpoints
-    # keep the δ-chain's plan linear; the caller's single action
-    # materializes the chain (outside the loop regime: one analytical
-    # plan where AQE earns its keep — the loop-regime caveat applies
-    # only to the per-level probe jobs above).
+    # joins its BFS-tree successors one level down. local_ckpt keeps
+    # the δ-chain's plan linear; the sweep runs outside the loop
+    # regime, where AQE plans each level (the loop-regime caveat
+    # applies only to the per-level counted jobs above).
     zero = F.lit(0.0).alias("delta")
     deltas = levels[-1].select("s", "id", zero)
     acc = [deltas] if len(levels) > 1 else []
@@ -2133,7 +2119,7 @@ def brandes_betweenness(
             cur.select("s", "id")
             .join(contrib, ["s", "id"], "left")
             .select("s", "id", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            .transform(_ckpt_lazy)
+            .transform(local_ckpt)
         )
         if d >= 1:  # level 0 is the sources themselves: excluded
             acc.append(deltas)

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from graphview_spark.matching.pattern import parse_match_paths
 from graphview_spark.matching.planner import plan_match
+from graphview_spark.plans.lazy import counted_ckpt
 
 
 # ----------------------------------------------------------------------
@@ -450,10 +451,10 @@ def _exec_recursive_cte(g, name: str, cols: list[str] | None, body: str,
     without a terminating predicate hits the MAXRECURSION cap and
     raises, like SQL Server's error 530.
 
-    Spark shape: a driver-side fixpoint loop; every frontier is
-    localCheckpoint'ed so lineage stays O(1) per iteration and the union
-    of checkpointed frontiers is the CTE. This is the same
-    cache/checkpoint BFS pattern as matching/paths.py."""
+    Spark shape: a driver-side fixpoint loop; one job materializes and
+    counts each frontier (counted_ckpt), so lineage stays O(1) per
+    iteration, and the union of checkpointed frontiers is the CTE. An
+    empty anchor adds nothing, so it ends the recursion at once."""
     parts = _split_union_all_depth0(body)
     selfref = re.compile(rf"(?i)\b{re.escape(name)}\b")
     anchors = [p for p in parts if not selfref.search(p)]
@@ -469,9 +470,15 @@ def _exec_recursive_cte(g, name: str, cols: list[str] | None, body: str,
         acc = df if acc is None else acc.unionByName(df)
     if cols:
         acc = acc.toDF(*cols)
-    frontier = acc.localCheckpoint(eager=True)
-    total = frontier
-    for _ in range(_MAX_RECURSION):
+    frontier, rows = counted_ckpt(acc)
+    total, depth = frontier, 0
+    while rows:
+        if depth == _MAX_RECURSION:
+            raise ValueError(
+                f"recursive CTE {name}: exceeded MAXRECURSION "
+                f"({_MAX_RECURSION}) — cyclic data without a terminating "
+                f"predicate?")
+        depth += 1
         frontier.createOrReplaceTempView(name)
         g.derived_tables[name] = frontier
         new = None
@@ -480,15 +487,10 @@ def _exec_recursive_cte(g, name: str, cols: list[str] | None, body: str,
             new = df if new is None else new.unionByName(df)
         if cols:
             new = new.toDF(*cols)
-        new = new.localCheckpoint(eager=True)
-        if new.count() == 0:
-            return total
-        total = total.unionByName(new)
-        frontier = new
-    raise ValueError(
-        f"recursive CTE {name}: exceeded MAXRECURSION ({_MAX_RECURSION}) — "
-        f"cyclic data without a terminating predicate?"
-    )
+        frontier, rows = counted_ckpt(new)
+        if rows:
+            total = total.unionByName(frontier)
+    return total
 
 
 def _strip_tsql_hints(masked: str) -> str:
@@ -1316,14 +1318,13 @@ def _exec_select_body(g, masked: str, lits: list[str]) -> DataFrame:
 
 def _limit_percent(df: DataFrame, pct: float) -> DataFrame:
     """T-SQL ``TOP n PERCENT``: ceil(pct% of the result's row count).
-    The plan is materialized once (localCheckpoint) before counting so
+    The plan is materialized and counted by one job (counted_ckpt) so
     the count and the returned subset see the same rows even on a
     nondeterministic source, and the query cost isn't paid twice."""
     import math
 
-    df = df.localCheckpoint(eager=True)
-    n = math.ceil(pct * df.count() / 100.0)
-    return df.limit(n)
+    df, rows = counted_ckpt(df)
+    return df.limit(math.ceil(pct * rows / 100.0))
 
 
 _DEGREE_REF = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*(InDegree|OutDegree)\b")

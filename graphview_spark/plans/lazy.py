@@ -1,21 +1,23 @@
-"""Materialization switch for plan inspection.
+"""The three materialization calls, and the plan-inspection switch.
 
-Several operators ``localCheckpoint(eager=True)`` a frame that fans out
-into multiple consumers — the right call at execution time (the subtree
-runs once), but it truncates the plan: an audit of the final DataFrame
-sees only a scan of the checkpointed RDD, so PLANS.md would under-report
-shuffles and the plan-budget regression gate would be vacuous for those
-queries (and the audit itself would execute heavy jobs at plan-build
-time).
+- ``pin(df)`` — fan-out: a frame read by several consumers is
+  materialized once. Inside ``lazy_plans()`` (tools/plan_audit.py,
+  tests/test_plans.py) it passes the frame through, so the audit sees
+  the FULL pipeline — the worst-case plan, every fan-out branch
+  duplicated — and runs no job.
+- ``local_ckpt(df)`` — a driver loop's per-round checkpoint when the
+  loop reads no size: a lazy ``localCheckpoint`` behind a stats
+  barrier; its rows fill in the first job that reads it.
+- ``counted_ckpt(df)`` — the checkpoint of a loop whose control flow
+  reads a size: one job materializes and counts the frame, so no
+  ``isEmpty()``/``count()`` follows.
 
-``pin(df)`` is the checkpoint call sites' entry point: it materializes
-normally, but inside a ``lazy_plans()`` context (used by
-tools/plan_audit.py and tests/test_plans.py) it returns the frame
-unchanged, so the audited plan is the FULL logical pipeline — the
-worst-case plan, with every fan-out branch duplicated rather than
-shared. Driver loops whose control flow needs materialized counts
-(k_truss, k_core, the Pregel-style loops) are outside this mechanism;
-their audited plan is the final-round plan, a documented limitation.
+Both loop checkpoints ignore ``lazy_plans()`` (a loop cannot plan
+without cutting its rounds), so a looping query's audited plan is its
+final-round plan, a documented limitation. Lazy is not free under AQE:
+the barrier's ``toRdd()`` plans the frame adaptively, which runs its
+shuffle stages at once, so each round's shuffle jobs launch while the
+caller builds the frame.
 """
 
 from __future__ import annotations
@@ -37,9 +39,10 @@ def pin(df: DataFrame) -> DataFrame:
     return df if _LAZY else df.localCheckpoint(eager=True)
 
 
-def local_ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``localCheckpoint`` + a STATS BARRIER — the checkpoint call for
-    iterative driver loops.
+# perfbench/tracer.py wraps local_ckpt and pin by name: keep both names.
+def local_ckpt(df: DataFrame) -> DataFrame:
+    """Lazy ``localCheckpoint`` + a STATS BARRIER — the per-round
+    checkpoint of a driver loop that reads no size.
 
     Spark 4 propagates origin statistics through
     ``localCheckpoint``'s LogicalRDD, so in a loop where round k joins
@@ -56,17 +59,15 @@ def local_ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
     so the erased stats cost nothing there; outside, AQE's runtime
     sizes — not logical stats — drive its conversions. Falls back to
     the plain checkpoint if the private JVM seam moves."""
-    return _barrier(df.localCheckpoint(eager=eager))[0]
+    return _barrier(df.localCheckpoint(eager=False))[0]
 
 
 def counted_ckpt(df: DataFrame) -> tuple[DataFrame, int]:
     """``local_ckpt`` that also returns the frame's row count, from the
-    one job that materializes it: a lazy ``localCheckpoint`` whose
-    internal RDD is counted, so a loop that stops on an empty round
+    one job that materializes it: the barrier's internal RDD is
+    counted, so a loop that stops on an empty round or a fixed size
     needs no second ``isEmpty()``/``count()`` job over the checkpoint.
-    The returned frame reads the materialized blocks; like
-    ``local_ckpt`` it ignores ``lazy_plans()``, because the caller's
-    control flow needs the count."""
+    The returned frame reads the materialized blocks."""
     d = df.localCheckpoint(eager=False)
     frame, jrdd = _barrier(d)
     return frame, (d.count() if jrdd is None else jrdd.count())

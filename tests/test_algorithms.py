@@ -370,3 +370,25 @@ def test_multi_source_distances_batched(spark):
         (2, 2): 0, (2, 3): 1, (2, 4): 2,
         (5, 5): 0, (5, 6): 1,
     }
+
+
+def test_shortest_paths_has_no_depth_cap(spark):
+    """A 70-edge chain settles all 71 nodes: the frontier loop ends on
+    the empty frontier, not after a fixed number of hops."""
+    from graphview_spark.algorithms import shortest_paths
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(70)],
+                                  "src long, sink long")
+    src = spark.createDataFrame([(0,)], "GlobalNodeId long")
+    got = sorted(map(tuple, shortest_paths(src, edges).collect()))
+    assert got == [(i, i) for i in range(71)]
+
+
+def test_pagerank_empty_node_frame(spark):
+    """No nodes: an empty (GlobalNodeId, rank) frame, as the oracle
+    gives on empty tables, not a ZeroDivisionError."""
+    nodes = spark.createDataFrame([], "GlobalNodeId long")
+    edges = spark.createDataFrame([], "src long, sink long")
+    out = pagerank(nodes, edges)
+    assert out.columns == ["GlobalNodeId", "rank"]
+    assert out.collect() == []

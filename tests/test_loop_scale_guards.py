@@ -59,7 +59,8 @@ def test_local_ckpt_barrier_seam_is_live(spark):
     propagate stats through localCheckpoint; on one that doesn't, a
     broken seam would pass it silently. This test pins the seam itself:
     the fallback's RuntimeWarning is escalated to an error, so ANY trip
-    into the fallback fails the suite loudly."""
+    into the fallback, from local_ckpt or counted_ckpt, fails the suite
+    loudly."""
     import warnings
 
     from graphview_spark.plans import lazy as L
@@ -70,8 +71,10 @@ def test_local_ckpt_barrier_seam_is_live(spark):
     try:
         with warnings.catch_warnings():
             warnings.simplefilter("error", RuntimeWarning)
-            out = L.local_ckpt(df, eager=True)
+            out = L.local_ckpt(df)
             assert out.count() == 10
+            frame, rows = L.counted_ckpt(df)
+            assert rows == 10 and frame.count() == 10
         assert not L._BARRIER_WARNED
     finally:
         L._BARRIER_WARNED = prev
@@ -82,7 +85,7 @@ def test_local_ckpt_preserves_rows(spark):
 
     df = spark.createDataFrame([(i, i + 1) for i in range(100)],
                                "a long, b long")
-    out = local_ckpt(df.filter(F.col("a") % 2 == 0), eager=True)
+    out = local_ckpt(df.filter(F.col("a") % 2 == 0))
     assert out.count() == 50
     assert out.schema == df.schema
 
@@ -106,12 +109,12 @@ def test_scc_trim_peels_acyclic_fringe(spark):
     nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "id long")
     parts: list = []
     with A._loop_regime(spark) as size_shuffle:
-        remaining, e2 = A._scc_trim(
+        remaining, e2, n_rem, n_edge = A._scc_trim(
             nodes.localCheckpoint(eager=True), e, parts, size_shuffle)
         rem = sorted(r["id"] for r in remaining.collect())
         left = e2.count()
-    assert rem == [3, 4]
-    assert left == 2  # only the cycle edges survive
+    assert rem == [3, 4] and n_rem == 2
+    assert left == n_edge == 2  # only the cycle edges survive
     trimmed = sorted(r["id"] for p in parts for r in p.collect())
     assert trimmed == [1, 2, 5]
     for p in parts:  # trimmed nodes are their own SCCs
@@ -272,3 +275,48 @@ def test_closeness_driver_gate_boundary(spark, monkeypatch):
         assert (calls["n"] > 0) == distributed, (label, bound)
         assert want.setdefault(label, got) == got, (label, bound)
 
+
+def test_loops_take_every_size_from_counted_ckpt(spark, monkeypatch):
+    """Loops whose control flow reads a size get it from counted_ckpt's
+    materializing job: with DataFrame.count and DataFrame.isEmpty made
+    errors, shortest_paths, k_core, k_truss, multi_source_levels and a
+    WITH RECURSIVE statement still run, and return the right rows."""
+    from pyspark.sql import DataFrame
+
+    import graphview_spark.algorithms as A
+    from graphview_spark.graph import GraphDatabase
+
+    g = GraphDatabase(spark)
+    g.execute("""CREATE TABLE [N] ([ColumnRole:"NodeId"] id INT)""")
+    g.execute("INSERT INTO N(id) VALUES(1),(2)")
+    chain = spark.createDataFrame([(1, 2), (2, 3), (3, 4)],
+                                  "src long, sink long")
+    src = spark.createDataFrame([(1,)], "GlobalNodeId long")
+    seeds = spark.createDataFrame([(1,)], "s long")
+    # a 4-clique plus a pendant edge
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
+        "a long, b long")
+
+    def probe(self):
+        raise AssertionError("a loop re-probed a frame it materialized")
+
+    for cls in {DataFrame, type(chain)}:  # the classic subclass overrides
+        monkeypatch.setattr(cls, "count", probe)
+        monkeypatch.setattr(cls, "isEmpty", probe)
+    assert sorted(map(tuple, A.shortest_paths(src, chain).collect())) == [
+        (1, 0), (2, 1), (3, 2), (4, 3)]
+    assert sorted(r["node"] for r in A.k_core(pairs, 3).collect()) == [
+        1, 2, 3, 4]
+    assert len(A.k_truss(pairs, 4).collect()) == 6
+    levels, _ = A.multi_source_levels(seeds, chain)
+    assert len(levels) == 4
+    rows = g.execute(
+        """WITH nums (n) AS (
+               SELECT p.id FROM N p WHERE p.id = 1
+               UNION ALL
+               SELECT n + 1 FROM nums WHERE n < 5
+           )
+           SELECT n FROM nums"""
+    ).collect()
+    assert sorted(r["n"] for r in rows) == [1, 2, 3, 4, 5]
